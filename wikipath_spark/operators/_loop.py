@@ -13,6 +13,12 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+# Default size gate of every driver-side small-graph lane: an edge table whose
+# Catalyst estimate is at most this many bytes is collected and walked in
+# numpy instead of paying one Spark job of fixed scheduling cost per superstep.
+DRIVER_THRESHOLD_BYTES = 256 << 20
 
 
 @contextmanager
@@ -59,6 +65,28 @@ def estimated_bytes(df) -> int:
         return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:
         return 1 << 62
+
+
+def driver_edge_arrays(
+    edges,
+    src: str = "src",
+    dst: str = "dst",
+    threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
+    durable: bool = False,
+):
+    """The one gate of every driver-side small-graph lane.
+
+    Returns int64 numpy ``(src, dst)`` arrays, collected with ONE Arrow
+    ``toArrow()``, when :func:`estimated_bytes` of ``edges`` is at most
+    ``threshold_bytes``; otherwise ``None``, and the caller takes its
+    distributed lane.  Estimates are only trusted downward: unknown-size
+    plans report MaxValue and stay distributed.  ``durable`` (a checkpoint
+    manager or resume was requested) also returns ``None`` — only the
+    distributed lanes checkpoint and resume."""
+    if durable or estimated_bytes(edges) > threshold_bytes:
+        return None
+    tbl = edges.select(F.col(src).cast("long"), F.col(dst).cast("long")).toArrow()
+    return tbl.column(0).to_numpy(), tbl.column(1).to_numpy()
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -36,7 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import estimated_bytes
+from wikipath_spark.operators._loop import DRIVER_THRESHOLD_BYTES, driver_edge_arrays
 
 
 class QueryBudgetExceeded(TimeoutError):
@@ -396,7 +396,7 @@ def bfs_distances(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = 256 << 20,
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Single-source BFS distances (level-synchronous frontier loop).
 
@@ -411,26 +411,22 @@ def bfs_distances(
 
     Adaptive lane (round 6, the connected_components / serve-BFS pattern):
     when Catalyst's size estimate says the edge table fits driver memory,
-    the whole traversal runs as one Arrow ``toPandas`` + vectorized CSR BFS
-    (:func:`_bfs_driver_numpy`) — each distributed level costs ~0.5s of
-    fixed scheduling regardless of frontier size (measured).  Identical
+    the whole traversal runs as one Arrow collect (:func:`driver_edge_arrays`)
+    + vectorized CSR BFS (:func:`_bfs_driver_numpy`) — each distributed level
+    costs ~0.5s of fixed scheduling regardless of frontier size (measured).
+    Identical
     rows (distances are partitioning-independent; lane-equivalence-tested);
     unknown-size plans report MaxValue and stay distributed.
     """
     spark = edges.sparkSession
-    if (
-        checkpoint_mgr is None
-        and not resume
-        and estimated_bytes(edges) <= driver_threshold_bytes
-    ):
+    arrays = driver_edge_arrays(
+        edges, src, dst, driver_threshold_bytes,
+        durable=checkpoint_mgr is not None or resume,
+    )
+    if arrays is not None:
         import pandas as pd
 
-        pdf = edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        ).toPandas()
-        rows = _bfs_driver_numpy(
-            pdf["u"].to_numpy(), pdf["v"].to_numpy(), [int(source)], max_depth
-        )
+        rows = _bfs_driver_numpy(*arrays, [int(source)], max_depth)
         return spark.createDataFrame(
             pd.DataFrame(
                 {"page_id": [r[1] for r in rows], "distance": [r[2] for r in rows]}
@@ -495,7 +491,7 @@ def multi_source_bfs(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = 256 << 20,
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Batched single-source BFS: ``(source, page_id, distance)`` for every
     vertex reachable from each source within ``max_depth`` hops.
@@ -517,19 +513,15 @@ def multi_source_bfs(
     Small-input driver lane: same gate and kernel as :func:`bfs_distances`,
     looped over the source batch."""
     spark = edges.sparkSession
-    if (
-        checkpoint_mgr is None
-        and not resume
-        and estimated_bytes(edges) <= driver_threshold_bytes
-    ):
+    arrays = driver_edge_arrays(
+        edges, src, dst, driver_threshold_bytes,
+        durable=checkpoint_mgr is not None or resume,
+    )
+    if arrays is not None:
         import pandas as pd
 
-        pdf = edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        ).toPandas()
         rows = _bfs_driver_numpy(
-            pdf["u"].to_numpy(), pdf["v"].to_numpy(),
-            list(dict.fromkeys(int(s) for s in sources)), max_depth,
+            *arrays, list(dict.fromkeys(int(s) for s in sources)), max_depth
         )
         return spark.createDataFrame(
             pd.DataFrame(

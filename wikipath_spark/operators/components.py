@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
     checkpoint_tracked,
-    estimated_bytes,
+    driver_edge_arrays,
     release_checkpoint,
 )
 
@@ -101,7 +102,7 @@ def connected_components(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = 256 << 20,
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Undirected connected components over a directed edge table.
 
@@ -112,27 +113,25 @@ def connected_components(
     Adaptive physical strategy (round 6 — the compress_redirects /
     serve-BFS pattern): when Catalyst's own size estimate says the edge
     table fits comfortably in driver memory, the fixpoint runs as ONE Arrow
-    ``toPandas`` + vectorized numpy min-label pointer jumping — the
-    alternating-star loop costs ~1s of fixed scheduling per round even on a
-    42k-row edge set (measured, OPTIMIZATION_r06.md), and resume/checkpoint
-    machinery is meaningless at that size.  Identical output labeling
+    collect (:func:`driver_edge_arrays`) + vectorized numpy min-label pointer
+    jumping — the alternating-star loop costs ~1s of fixed scheduling per
+    round even on a 42k-row edge set (measured, OPTIMIZATION_r06.md), and
+    resume/checkpoint machinery is meaningless at that size.  Identical
+    output labeling
     (min-id representative; lane-equivalence-tested on random graphs);
     estimates are only trusted downward — unknown-size plans report MaxValue
     and stay distributed, which also keeps every small in-memory test graph
     on the distributed lane."""
     from wikipath_spark.operators.bfs import wall_budget
 
-    if (
-        checkpoint_mgr is None
-        and not resume
-        and estimated_bytes(edges) <= driver_threshold_bytes
-    ):
+    arrays = driver_edge_arrays(
+        edges, src, dst, driver_threshold_bytes,
+        durable=checkpoint_mgr is not None or resume,
+    )
+    if arrays is not None:
         import pandas as pd
 
-        pdf = edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        ).toPandas()
-        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        u, v = arrays
         keep = u != v
         su, sv = u[keep], v[keep]
         spark = edges.sparkSession

@@ -25,6 +25,12 @@ Lineage: driver-side iteration grows the plan each superstep;
 ``localCheckpoint`` every ``checkpoint_every`` steps truncates it, and an
 optional durable checkpoint (plans/checkpoint.py) makes runs resumable with
 per-partition lineage + convergence metrics.
+
+Driver lane: an edge table small enough for the driver (the shared
+``driver_edge_arrays`` gate of the CC and BFS lanes) skips the loop above and
+runs the same power iteration in numpy (:func:`_pagerank_driver`) — each
+distributed superstep is one Spark job of fixed scheduling cost whatever the
+graph size.
 """
 
 from __future__ import annotations
@@ -33,15 +39,21 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
     checkpoint_tracked,
+    driver_edge_arrays,
     loop_confs,
     release_checkpoint,
 )
 from wikipath_spark.operators.skew import pick_salt, salted_sum
+
+# edge rows one aggregation task may take before auto-salting splits a hub
+ROWS_PER_TASK = 5_000_000
 
 
 @dataclass
@@ -78,14 +90,44 @@ def pagerank(
     checkpoint_interval: int = 10,
     resume: bool = False,
     budget_s: float | None = None,
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> PageRankResult:
     """Power-iteration PageRank over a directed ``(src, dst)`` edge table.
 
-    ``vertices``: optional (page_id) frame; defaults to ids present in edges.
-    ``on_superstep(i, ranks_df, delta)`` is the checkpoint hook.
-    Returned ranks sum to 1 and include dangling vertices.
+    ``vertices``: optional (page_id) frame of distinct ids; defaults to ids
+    present in edges.  ``on_superstep(i, ranks_df, delta)`` is the
+    checkpoint hook.  Returned ranks sum to 1 and include dangling vertices.
+
+    Driver lane (the connected_components / bfs_distances gate and default):
+    with no ``checkpoint_mgr`` and no ``resume``, an edge table whose
+    Catalyst size estimate is at most ``driver_threshold_bytes`` is
+    collected once through Arrow and iterated in numpy by
+    :func:`_pagerank_driver` — same damping, dangling mass, stop rule,
+    budget checks and result; ``impl``, ``salt_partials`` and
+    ``checkpoint_every`` shape only the distributed plan.  Unknown-size
+    plans report MaxValue and stay distributed; ``driver_threshold_bytes=0``
+    forces the distributed lane.  Its hook frame is ``(page_id, rank)``,
+    built only when a hook is passed.
     """
+    from wikipath_spark.operators.bfs import wall_budget
+
     spark = edges.sparkSession
+    check_budget = wall_budget(budget_s, "pagerank")
+    arrays = driver_edge_arrays(
+        edges, threshold_bytes=driver_threshold_bytes,
+        durable=checkpoint_mgr is not None or resume,
+    )
+    if arrays is not None:
+        vertex_ids = None
+        if vertices is not None:
+            vertex_ids = (
+                vertices.select(F.col("page_id").cast("long")).toArrow().column(0).to_numpy()
+            )
+        graph = _driver_graph(*arrays, vertex_ids)
+        del arrays, vertex_ids  # the collected columns are not needed past here
+        return _pagerank_driver(
+            spark, *graph, damping, tol, max_iter, on_superstep, check_budget
+        )
 
     n_edges = edges.count()
     # loop_confs: AQE off (fixed-shape superstep — re-planning is pure
@@ -98,18 +140,74 @@ def pagerank(
         return _pagerank_loop(
             spark, edges, vertices, damping, tol, max_iter, impl, salt_partials,
             checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-            resume, n_edges, sc_parts, budget_s,
+            resume, n_edges, sc_parts, check_budget,
         )
+
+
+def _driver_graph(src, dst, vertex_ids):
+    """Index the collected edge columns for :func:`_pagerank_driver`.
+
+    Returns ``(ids, si, di, w, dangling)``: sorted vertex ids (``vertex_ids``,
+    or the edge endpoints), the src/dst indices of the edges with both ends in
+    that set sorted by (dst, src), each such edge's weight 1/out_deg(src), and
+    the dangling flags.  Out-degree counts every edge of an in-set src, also
+    those to a dst outside the set — the distributed lane's join semantics,
+    where such an edge's contribution is dropped."""
+    ids = np.unique(np.concatenate([src, dst]) if vertex_ids is None else vertex_ids)
+    src_in = np.isin(src, ids)
+    out_deg = np.bincount(np.searchsorted(ids, src[src_in]), minlength=len(ids))
+    keep = src_in & np.isin(dst, ids)
+    si, di = np.searchsorted(ids, src[keep]), np.searchsorted(ids, dst[keep])
+    order = np.lexsort((si, di))
+    si, di = si[order], di[order]
+    return ids, si, di, 1.0 / out_deg[si], out_deg == 0
+
+
+def _ranks_frame(spark, ids: np.ndarray, rank: np.ndarray) -> DataFrame:
+    return spark.createDataFrame(pa.table({"page_id": ids, "rank": rank}))
+
+
+def _pagerank_driver(
+    spark, ids, si, di, w, dangling, damping, tol, max_iter, on_superstep,
+    check_budget,
+) -> PageRankResult:
+    """The distributed loop's power iteration over a :func:`_driver_graph`.
+
+    Same semantics term for term: each superstep sets ``rank = const +
+    damping * msum`` with ``const = base + damping * dm / n`` (dm: the
+    dangling vertices' rank mass) and stops at L∞ delta < tol.
+    ``np.bincount`` adds each vertex's contributions in (dst, src) edge
+    order, so the ranks do not depend on how the input was partitioned."""
+    n = len(ids)
+    if n == 0:
+        return PageRankResult(
+            spark.createDataFrame([], "page_id long, rank double"), 0, 0.0, True
+        )
+    rank = np.full(n, 1.0 / n)
+    dangling_mass = int(dangling.sum()) * (1.0 / n)
+    base = (1.0 - damping) / n
+    delta = float("inf")
+    it = 0
+    for it in range(1, max_iter + 1):
+        check_budget()
+        msum = np.bincount(di, weights=rank[si] * w, minlength=n)
+        const = base + damping * dangling_mass / n
+        new = const + damping * msum
+        delta = float(np.abs(new - rank).max())
+        dangling_mass = float(new[dangling].sum())
+        rank = new
+        if on_superstep is not None:
+            on_superstep(it, _ranks_frame(spark, ids, rank), delta)
+        if delta < tol:
+            break
+    return PageRankResult(_ranks_frame(spark, ids, rank), it, delta, delta < tol)
 
 
 def _pagerank_loop(
     spark, edges, vertices, damping, tol, max_iter, impl, salt_partials,
     checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-    resume, n_edges, sc_parts, budget_s=None,
+    resume, n_edges, sc_parts, check_budget,
 ) -> PageRankResult:
-    from wikipath_spark.operators.bfs import wall_budget
-
-    check_budget = wall_budget(budget_s, "pagerank")
     if vertices is None:
         vertices = (
             edges.select(F.col("src").alias("page_id"))
@@ -128,13 +226,12 @@ def _pagerank_loop(
         if salt_partials is None:
             # auto (the default): salt so no hub's in-neighborhood exceeds one
             # task's budget (SURVEY.md §4.2 — from the degree distribution).
-            # n_edges bounds every in-degree, so when the WHOLE edge table
-            # fits one task's budget the probe job could only return 1 —
-            # skip it (one fewer fixed-latency setup action; same salt, so
-            # the float sum grouping — and every rank bit — is unchanged)
+            # n_edges bounds every in-degree, so salt=1 is always sufficient
+            # when n_edges <= rows_per_task — skip the degree-probe job then
+            # (one fewer fixed-latency setup action)
             salt_partials = (
-                1 if n_edges <= 5_000_000
-                else pick_salt(edges, key="dst", rows_per_task=5_000_000)
+                1 if n_edges <= ROWS_PER_TASK
+                else pick_salt(edges, key="dst", rows_per_task=ROWS_PER_TASK)
             )
 
         out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
@@ -484,15 +581,29 @@ def pagerank_fixedpoint(
         release_checkpoint(vflag)
 
 
-def pagerank_numpy_oracle(edge_list, n=None, damping=0.85, tol=1e-6, max_iter=100):
-    """Driver-side numpy oracle (tests only): identical semantics."""
-    edges = np.asarray(edge_list, dtype=np.int64)
-    ids = np.unique(edges) if n is None else np.arange(n)
-    idx = {v: i for i, v in enumerate(ids)}
-    src = np.array([idx[s] for s, _ in edges])
-    dst = np.array([idx[d] for _, d in edges])
+def pagerank_numpy_oracle(
+    edge_list, n=None, damping=0.85, tol=1e-6, max_iter=100, vertices=None
+):
+    """Driver-side numpy oracle (tests only): identical semantics.
+
+    The vertex set is ``vertices`` if given, else ``range(n)`` if given,
+    else the edge endpoints.  Edges from a src outside it are ignored; an
+    edge from an in-set src to a dst outside it counts toward the src's
+    out-degree, but its contribution is lost (the kernel's join semantics).
+    """
+    edges = np.asarray(edge_list, dtype=np.int64).reshape(-1, 2)
+    if vertices is not None:
+        ids = np.unique(np.asarray(vertices, dtype=np.int64))
+    else:
+        ids = np.unique(edges) if n is None else np.arange(n)
+    idx = {v: i for i, v in enumerate(ids.tolist())}
+    from_set = [(idx[s], idx.get(d)) for s, d in edges.tolist() if s in idx]
     nn = len(ids)
-    out_deg = np.bincount(src, minlength=nn)
+    out_deg = np.bincount(
+        np.array([s for s, _ in from_set], dtype=np.int64), minlength=nn
+    )
+    src = np.array([s for s, d in from_set if d is not None], dtype=np.int64)
+    dst = np.array([d for _, d in from_set if d is not None], dtype=np.int64)
     r = np.full(nn, 1.0 / nn)
     for _ in range(max_iter):
         dangling_mass = r[out_deg == 0].sum()
