@@ -48,6 +48,26 @@ def test_compress_long_chain(spark):
     assert got == {i: 63 for i in range(63)}
 
 
+def test_compress_distributed_releases_superseded_state(spark):
+    """The pointer-doubling loop checkpoints every iteration; superseded
+    iterations must drop their checkpoint blocks during the loop, so only
+    the final state (which the result reads) stays persisted."""
+    import gc
+
+    from wikipath_spark.operators._loop import persistent_rdd_ids, release_checkpoint
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()  # flush ContextCleaner backlog first
+    df = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
+    before = persistent_rdd_ids(spark)
+    out = compress_redirects(df, driver_threshold=0)
+    assert out.count() == 63
+    leaked = persistent_rdd_ids(spark) - before
+    assert len(leaked) <= 1, f"{len(leaked)} persistent RDDs remain after the loop"
+    release_checkpoint(out)
+    assert not persistent_rdd_ids(spark) - before
+
+
 def _compress_oracle(m: dict[int, int]) -> dict[int, int]:
     """Pure-python oracle of the reference's memoized walk with per-walk
     cycle detection (parse.rs:541-608): chains flatten to their terminal;

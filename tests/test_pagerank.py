@@ -1,7 +1,6 @@
 """PageRank golden tests: tiny hand-checkable graphs (FIXTURES.md §4) against
-the pure-numpy power-iteration oracle (allclose 1e-6), both physical
-strategies (sql hash-agg and CSR applyInPandas), salted aggregation, and
-determinism across parallelism levels."""
+the pure-numpy power-iteration oracle (allclose 1e-6), plain and salted
+hash aggregation, and determinism across parallelism levels."""
 
 from __future__ import annotations
 
@@ -34,12 +33,7 @@ def _check(edges_df, edge_list, **kw):
 
 @pytest.mark.parametrize("name", list(GRAPHS))
 def test_pagerank_sql(edges_df, name):
-    _check(edges_df, GRAPHS[name], impl="sql")
-
-
-@pytest.mark.parametrize("name", ["diamond", "star_hub"])
-def test_pagerank_csr(edges_df, name):
-    _check(edges_df, GRAPHS[name], impl="csr")
+    _check(edges_df, GRAPHS[name])
 
 
 def test_pagerank_salted(edges_df):

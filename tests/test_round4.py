@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from wikipath_spark import operators as ops
 from wikipath_spark.api import LinkGraphService
 from wikipath_spark.operators.dedup import contamination_pairs, word_ngrams
 from wikipath_spark.operators.pagerank import pagerank_fixedpoint
@@ -264,14 +265,27 @@ def test_budget_s_on_iterative_loops(spark, edges_df):
             fn()
 
 
-def test_budget_timeout_does_not_leak_persisted_frames(spark, edges_df):
-    """A pagerank budget abort mid-loop must unpersist the loop's frames
-    (contrib edges, vertex flags, current ranks) — a long-lived serve session
-    would otherwise accumulate executor storage per timed-out query."""
-    import pytest as _pytest
-
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda df: ops.pagerank(df, budget_s=0.0),
+        lambda df: ops.pagerank_multi(df, [1, 2], budget_s=0.0),
+        lambda df: ops.label_propagation(df, budget_s=0.0),
+        lambda df: ops.connected_components(df, budget_s=0.0),
+        lambda df: ops.k_core(df, k=2, budget_s=0.0),
+        lambda df: ops.coreness(df, budget_s=0.0),
+    ],
+    ids=[
+        "pagerank", "pagerank_multi", "label_propagation",
+        "connected_components", "k_core", "coreness",
+    ],
+)
+def test_budget_timeout_does_not_leak_persisted_frames(spark, edges_df, run):
+    """A budget abort mid-loop must release the loop's frames (static frames
+    such as contrib edges and vertex flags, and the current state) — a
+    long-lived serve session would otherwise accumulate executor storage per
+    timed-out query."""
     from wikipath_spark.operators.bfs import QueryBudgetExceeded
-    from wikipath_spark.operators.pagerank import pagerank
 
     sc = spark.sparkContext
 
@@ -281,10 +295,30 @@ def test_budget_timeout_does_not_leak_persisted_frames(spark, edges_df):
     df = edges_df([(i, (i * 7) % 50) for i in range(200)])
     spark.catalog.clearCache()
     before = persisted_ids()
-    with _pytest.raises(QueryBudgetExceeded):
-        pagerank(df, budget_s=0.0)
+    with pytest.raises(QueryBudgetExceeded):
+        run(df)
     after = persisted_ids()
     assert after <= before, f"leaked persisted RDDs: {after - before}"
+
+
+def test_budget_s_on_driver_lanes(spark, tmp_path):
+    """The driver lanes (taken for a parquet input's small size estimate)
+    honor budget_s like the distributed loops: a zero budget raises."""
+    from wikipath_spark.operators.bfs import QueryBudgetExceeded, multi_source_bfs
+
+    path = str(tmp_path / "budget_edges.parquet")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    for fn in (
+        lambda: ops.pagerank(df, budget_s=0.0),
+        lambda: ops.connected_components(df, budget_s=0.0),
+        lambda: ops.bfs_distances(df, 1, budget_s=0.0),
+        lambda: multi_source_bfs(df, [1, 2], budget_s=0.0),
+    ):
+        with pytest.raises(QueryBudgetExceeded):
+            fn()
 
 
 def test_checkpoint_save_is_two_jobs(spark, edges_df, tmp_path):

@@ -1,11 +1,16 @@
-"""Shared iterative-driver-loop configuration.
+"""What every iterative operator shares: loop confs, loop state, lane gate.
 
 Measured on PageRank (see BENCH/BASELINE.md): for a fixed-shape superstep
 re-executed dozens of times, AQE re-planning is pure per-iteration overhead,
 driver-serialized broadcasts of the evolving state flatten core scaling, and
-shuffle parallelism should track data volume rather than cores.  Every
-iterative operator (PageRank, CC, LPA, BFS, compression) runs its loop under
-this context.
+shuffle parallelism should track data volume rather than cores
+(:func:`loop_confs`).
+
+:class:`LoopState` is the one owner of the state frames of every Spark loop
+that replaces its state each superstep (PageRank and its fixed-point and
+vector twins, LPA, CC, k-core, coreness, distributed redirect compression):
+checkpoint cadence, release of superseded and abandoned frames, and the
+checkpoint ids carried on the result.
 """
 
 from __future__ import annotations
@@ -73,6 +78,7 @@ def driver_edge_arrays(
     dst: str = "dst",
     threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
     durable: bool = False,
+    check_budget=None,
 ):
     """The one gate of every driver-side small-graph lane.
 
@@ -82,9 +88,13 @@ def driver_edge_arrays(
     distributed lane.  Estimates are only trusted downward: unknown-size
     plans report MaxValue and stay distributed.  ``durable`` (a checkpoint
     manager or resume was requested) also returns ``None`` — only the
-    distributed lanes checkpoint and resume."""
+    distributed lanes checkpoint and resume.  ``check_budget`` (the
+    caller's :func:`~wikipath_spark.operators.bfs.wall_budget` check) runs
+    before the collect, so a spent budget raises without paying for it."""
     if durable or estimated_bytes(edges) > threshold_bytes:
         return None
+    if check_budget is not None:
+        check_budget()
     tbl = edges.select(F.col(src).cast("long"), F.col(dst).cast("long")).toArrow()
     return tbl.column(0).to_numpy(), tbl.column(1).to_numpy()
 
@@ -141,3 +151,115 @@ def release_checkpoint(df) -> None:
         jrdd = jmap.get(rid)  # None if the ContextCleaner already got it
         if jrdd is not None:
             jrdd.unpersist(False)
+
+
+class LoopState:
+    """Context manager that owns one Spark loop's state frames and their release.
+
+    The loop assigns its initial state to ``frame`` and hands each new state
+    to :meth:`advance`; :meth:`hold` registers the frames it reads but never
+    replaces.  The release policy lives only here:
+
+    - :meth:`advance` checkpoints (:func:`checkpoint_tracked`) on every
+      ``checkpoint_every``-th step and otherwise persists and counts.  A
+      checkpoint is self-contained, so the predecessor and any deferred frame
+      are released at once.  A persist-only successor recomputes THROUGH its
+      predecessor, and a localCheckpointed RDD cannot be recomputed, so a
+      checkpointed predecessor is deferred until a newer checkpoint exists; a
+      plain persisted one is unpersisted.
+    - Held frames are released on every exit.
+    - On an exception (budget timeout, hook failure, corrupt checkpoint) the
+      current and deferred state are released too — a long-lived serve
+      session would otherwise keep executor storage per failed call.  On
+      success they stay alive for the caller, and :meth:`result` carries
+      their checkpoint ids on the returned frame so a caller that is done
+      with it can :func:`release_checkpoint` it.
+    """
+
+    def __init__(self, checkpoint_every: int = 1):
+        self.frame = None
+        self._every = checkpoint_every
+        self._deferred: list = []
+        self._held: list = []
+
+    def __enter__(self) -> "LoopState":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        stale = list(self._held)
+        if exc_type is not None:
+            stale += [self.frame, *self._deferred]
+        for df in stale:
+            if df is not None:
+                release_checkpoint(df)
+
+    def hold(self, df):
+        self._held.append(df)
+        return df
+
+    def advance(self, new, it: int):
+        """Materialize ``new`` as the state after step ``it`` and release or
+        defer its predecessor; returns the materialized frame."""
+        prev = self.frame
+        if it % self._every == 0:
+            # eager lineage truncation: measured 2x faster than letting the
+            # plan grow even 5 iterations (BENCH/BASELINE.md)
+            new = checkpoint_tracked(new)
+            stale = [prev, *self._deferred]
+            self._deferred = []
+        else:
+            new = new.persist()
+            new.count()
+            stale = []
+            if getattr(prev, "_wps_ckpt_rdd_ids", None):
+                self._deferred.append(prev)
+            else:
+                stale = [prev]
+        for df in stale:
+            if df is not None:
+                release_checkpoint(df)
+        self.frame = new
+        return new
+
+    def result(self, out):
+        """``out`` (read from the final state) carrying the checkpoint ids of
+        the final state and of the deferred checkpoint backing it."""
+        ids: set[int] = set()
+        for df in (self.frame, *self._deferred):
+            ids |= getattr(df, "_wps_ckpt_rdd_ids", None) or set()
+        out._wps_ckpt_rdd_ids = ids
+        return out
+
+
+def latest_checkpoint(mgr, resume: bool, spark: SparkSession, cols: list[str]):
+    """``(frame, step)`` of the newest durable checkpoint of ``mgr``,
+    projected to ``cols``, when ``resume`` is requested and one exists;
+    otherwise ``None``.  Call it before building the initial state, which a
+    resumed run does not need."""
+    if mgr is None or not resume:
+        return None
+    step = mgr.latest()
+    if step is None:
+        return None
+    frame, _metric = mgr.load(spark, step)
+    return frame.select(*cols), step
+
+
+def symmetric_edges(edges, src: str = "src", dst: str = "dst"):
+    """Undirected view of a directed edge table: distinct ``(u, v)`` pairs in
+    both orientations, self-loops dropped."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def endpoint_vertices(edges, src: str = "src", dst: str = "dst"):
+    """Distinct ``page_id`` of every edge endpoint."""
+    return (
+        edges.select(F.col(src).alias("page_id"))
+        .union(edges.select(F.col(dst).alias("page_id")))
+        .distinct()
+    )

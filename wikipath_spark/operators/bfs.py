@@ -36,7 +36,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import DRIVER_THRESHOLD_BYTES, driver_edge_arrays
+from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
+    driver_edge_arrays,
+    latest_checkpoint,
+)
 
 
 class QueryBudgetExceeded(TimeoutError):
@@ -168,14 +172,7 @@ def shortest_paths(
     serve.rs:203-206); :class:`QueryBudgetExceeded` is raised the first
     time a superstep or extraction step would start past the deadline."""
     spark = edges.sparkSession
-    deadline = None if budget_s is None else time.monotonic() + budget_s
-
-    def check_budget() -> None:
-        if deadline is not None and time.monotonic() > deadline:
-            raise QueryBudgetExceeded(
-                f"shortest_paths exceeded its {budget_s}s wall-clock budget"
-            )
-
+    check_budget = wall_budget(budget_s, "shortest_paths")
     check_budget()
     src_id, src_red = _resolve(redirects, source)
     dst_id, dst_red = _resolve(redirects, target)
@@ -317,7 +314,7 @@ def shortest_paths(
         for _df in _persisted:
             _df.unpersist()
 
-def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth):
+def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth, check_budget):
     """Vectorized driver-side level-synchronous BFS over numpy id arrays:
     factorize ids, sort edges by source into a CSR layout, expand frontiers
     with array slicing — the same distances the distributed frontier loop
@@ -341,6 +338,7 @@ def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth):
         visited[pos] = True
         frontier = np.array([pos], dtype=np.int64)
         for depth in range(1, max_depth + 1):
+            check_budget()
             if not len(frontier):
                 break
             nbrs = np.concatenate(
@@ -398,87 +396,14 @@ def bfs_distances(
     budget_s: float | None = None,
     driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
-    """Single-source BFS distances (level-synchronous frontier loop).
-
-    Returns ``(page_id, distance)`` for every vertex reachable from
-    ``source`` within ``max_depth`` hops.  Each superstep is one join +
-    anti-join (explicit shuffle); SQL-oracle-checkable via a recursive CTE.
-
-    Resumable (north rule): the visited frame IS the whole loop state — the
-    frontier is its maximum-distance layer — so a durable checkpoint of it
-    every ``checkpoint_interval`` levels lets a restart continue from the
-    last committed level.
-
-    Adaptive lane (round 6, the connected_components / serve-BFS pattern):
-    when Catalyst's size estimate says the edge table fits driver memory,
-    the whole traversal runs as one Arrow collect (:func:`driver_edge_arrays`)
-    + vectorized CSR BFS (:func:`_bfs_driver_numpy`) — each distributed level
-    costs ~0.5s of fixed scheduling regardless of frontier size (measured).
-    Identical
-    rows (distances are partitioning-independent; lane-equivalence-tested);
-    unknown-size plans report MaxValue and stay distributed.
-    """
-    spark = edges.sparkSession
-    arrays = driver_edge_arrays(
-        edges, src, dst, driver_threshold_bytes,
-        durable=checkpoint_mgr is not None or resume,
-    )
-    if arrays is not None:
-        import pandas as pd
-
-        rows = _bfs_driver_numpy(*arrays, [int(source)], max_depth)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"page_id": [r[1] for r in rows], "distance": [r[2] for r in rows]}
-            ),
-            "page_id long, distance int",
-        )
-    check_budget = wall_budget(budget_s, "bfs_distances")
-    # materialize the edge projection once, pre-partitioned and sorted for
-    # the per-level frontier join (see _frontier_edges): an un-cached
-    # caller-derived lineage (scan + distinct + union) would otherwise
-    # re-run max_depth times, and an unpartitioned checkpoint would
-    # re-shuffle + re-sort the edge side every level
-    e = _frontier_edges(edges, src, dst)
-    visited = spark.createDataFrame([(source, 0)], "page_id long, distance int")
-    frontier = visited.select(F.col("page_id").alias("id"))
-    start_depth = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, _ = checkpoint_mgr.load(spark, latest)
-            visited = loaded.select("page_id", "distance").localCheckpoint(eager=True)
-            frontier = visited.filter(F.col("distance") == latest).select(
-                F.col("page_id").alias("id")
-            )
-            start_depth = latest
-    # AQE stays on: frontier size varies wildly level to level.
-    # ONE action per level: the frontier count rides on the checkpointing
-    # pass via df.observe (was checkpoint + limit-count + checkpoint = 3
-    # driver actions per level — fixed per-action latency dominated the
-    # query).  `visited` stays a union chain of already-checkpointed
-    # frontiers: ≤ max_depth RDD-backed branches, no growing lineage.
-    for depth in range(start_depth + 1, max_depth + 1):
-        check_budget()
-        obs = Observation(f"bfs_{depth}")
-        nxt = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, F.col("id") == visited["page_id"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = int(obs.get["n"] or 0)
-        if n_new == 0:
-            break
-        visited = visited.union(
-            nxt.select(F.col("id").alias("page_id"), F.lit(depth).alias("distance"))
-        )
-        frontier = nxt
-        if checkpoint_mgr is not None and depth % checkpoint_interval == 0:
-            checkpoint_mgr.save(depth, visited, float(n_new))
-    return visited
+    """Single-source BFS distances: :func:`multi_source_bfs` over
+    ``[source]``, projected to ``(page_id, distance)`` for every vertex
+    reachable from ``source`` within ``max_depth`` hops.  Lanes, resume and
+    budget as there; SQL-oracle-checkable via a recursive CTE."""
+    return _multi_source_bfs(
+        edges, [source], src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
+        resume, wall_budget(budget_s, "bfs_distances"), driver_threshold_bytes,
+    ).select("page_id", "distance")
 
 
 def multi_source_bfs(
@@ -501,28 +426,45 @@ def multi_source_bfs(
     the same number of supersteps as one (the per-level joins just carry k×
     the rows, which is exactly how a batch of queries should scale on a
     cluster, instead of k sequential driver loops).  Each superstep is one
-    join + anti-join with the frontier count observed on the checkpointing
-    pass (same discipline as :func:`bfs_distances`).
+    join + anti-join (explicit shuffle) with the frontier count observed on
+    the checkpointing pass.
 
     Resumable (north rule): the (source, vertex, distance) visited frame IS
     the whole loop state — every source advances in lockstep, so the frontier
     at level d is exactly the distance == d layer — and a batch of k queries
     is precisely the long-running job worth resuming.  ``budget_s`` applies
     the serve path's wall-clock cap (serve.rs:203-206) to the batched entry
-    point; the check runs between supersteps, like :func:`shortest_paths`.
-    Small-input driver lane: same gate and kernel as :func:`bfs_distances`,
-    looped over the source batch."""
+    point; the check runs before the driver lane's collect and at every
+    level, like :func:`shortest_paths`.
+
+    Adaptive lane (the connected_components / serve-BFS pattern): when
+    Catalyst's size estimate says the edge table fits driver memory, the
+    whole traversal runs as one Arrow collect (:func:`driver_edge_arrays`) +
+    vectorized CSR BFS (:func:`_bfs_driver_numpy`) — each distributed level
+    costs ~0.5s of fixed scheduling regardless of frontier size (measured).
+    Identical rows (distances are partitioning-independent;
+    lane-equivalence-tested); unknown-size plans report MaxValue and stay
+    distributed."""
+    return _multi_source_bfs(
+        edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
+        resume, wall_budget(budget_s, "multi_source_bfs"), driver_threshold_bytes,
+    )
+
+
+def _multi_source_bfs(
+    edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
+    resume, check_budget, driver_threshold_bytes,
+) -> DataFrame:
     spark = edges.sparkSession
+    sources = list(dict.fromkeys(int(s) for s in sources))
     arrays = driver_edge_arrays(
         edges, src, dst, driver_threshold_bytes,
-        durable=checkpoint_mgr is not None or resume,
+        durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
     if arrays is not None:
         import pandas as pd
 
-        rows = _bfs_driver_numpy(
-            *arrays, list(dict.fromkeys(int(s) for s in sources)), max_depth
-        )
+        rows = _bfs_driver_numpy(*arrays, sources, max_depth, check_budget)
         return spark.createDataFrame(
             pd.DataFrame(
                 {
@@ -533,23 +475,30 @@ def multi_source_bfs(
             ),
             "source long, page_id long, distance int",
         )
-    check_budget = wall_budget(budget_s, "multi_source_bfs")
+    # materialize the edge projection once, pre-partitioned and sorted for
+    # the per-level frontier join (see _frontier_edges): an un-cached
+    # caller-derived lineage (scan + distinct + union) would otherwise
+    # re-run max_depth times, and an unpartitioned checkpoint would
+    # re-shuffle + re-sort the edge side every level
     e = _frontier_edges(edges, src, dst)
-    seed = [(int(s), int(s), 0) for s in dict.fromkeys(sources)]
-    visited = spark.createDataFrame(seed, "source long, page_id long, distance int")
-    frontier = visited.select("source", F.col("page_id").alias("id"))
-    start_depth = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, _ = checkpoint_mgr.load(spark, latest)
-            visited = loaded.select("source", "page_id", "distance").localCheckpoint(
-                eager=True
-            )
-            frontier = visited.filter(F.col("distance") == latest).select(
-                "source", F.col("page_id").alias("id")
-            )
-            start_depth = latest
+    cols = ["source", "page_id", "distance"]
+    resumed = latest_checkpoint(checkpoint_mgr, resume, spark, cols)
+    if resumed is None:
+        start_depth = 0
+        visited = spark.createDataFrame(
+            [(s, s, 0) for s in sources], "source long, page_id long, distance int"
+        )
+    else:
+        start_depth = resumed[1]
+        visited = resumed[0].localCheckpoint(eager=True)
+    frontier = visited.filter(F.col("distance") == start_depth).select(
+        "source", F.col("page_id").alias("id")
+    )
+    # AQE stays on: frontier size varies wildly level to level.
+    # ONE action per level: the frontier count rides on the checkpointing
+    # pass via df.observe.  `visited` stays a union chain of
+    # already-checkpointed frontiers: ≤ max_depth RDD-backed branches, no
+    # growing lineage.
     for depth in range(start_depth + 1, max_depth + 1):
         check_budget()
         obs = Observation(f"msbfs_{depth}")

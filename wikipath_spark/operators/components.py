@@ -25,9 +25,11 @@ from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
     DRIVER_THRESHOLD_BYTES,
+    LoopState,
     checkpoint_tracked,
     driver_edge_arrays,
-    release_checkpoint,
+    latest_checkpoint,
+    symmetric_edges,
 )
 
 
@@ -64,7 +66,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return hooked
 
 
-def _cc_driver_numpy(src_ids, dst_ids):
+def _cc_driver_numpy(src_ids, dst_ids, check_budget):
     """Driver-side exact CC over numpy id arrays: min-label propagation +
     pointer jumping, all vectorized.  ``np.unique`` sorts ids, so index
     order == id order and the minimum representative INDEX is exactly the
@@ -77,6 +79,7 @@ def _cc_driver_numpy(src_ids, dst_ids):
     ui, vi = inv[: len(src_ids)], inv[len(src_ids):]
     label = np.arange(len(ids), dtype=np.int64)
     while True:
+        check_budget()
         before = label
         m = np.minimum(label[ui], label[vi])
         label = label.copy()
@@ -97,7 +100,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 2,
     checkpoint_mgr=None,
     checkpoint_interval: int = 5,
     resume: bool = False,
@@ -124,9 +126,10 @@ def connected_components(
     on the distributed lane."""
     from wikipath_spark.operators.bfs import wall_budget
 
+    check_budget = wall_budget(budget_s, "connected_components")
     arrays = driver_edge_arrays(
         edges, src, dst, driver_threshold_bytes,
-        durable=checkpoint_mgr is not None or resume,
+        durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
     if arrays is not None:
         import pandas as pd
@@ -137,100 +140,85 @@ def connected_components(
         spark = edges.sparkSession
         if len(su) == 0:
             return spark.createDataFrame([], "page_id long, component long")
-        ids, comp = _cc_driver_numpy(su, sv)
+        ids, comp = _cc_driver_numpy(su, sv, check_budget)
         return spark.createDataFrame(
             pd.DataFrame({"page_id": ids, "component": comp}),
             "page_id long, component long",
         )
 
-    check_budget = wall_budget(budget_s, "connected_components")
-    # symmetrize once; each round operates on the shrinking parent-edge set
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = checkpoint_tracked(e)
     # convergence check = (row count, order-insensitive hash sum) fingerprint
     # riding on the materializing pass — one action per round instead of the
     # two full sorts an exceptAll comparison costs
-    start_round = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, _ = checkpoint_mgr.load(edges.sparkSession, latest)
-            release_checkpoint(e)
-            e = checkpoint_tracked(loaded.select("u", "v"))
-            start_round = latest
-    prev_sig: tuple[int, int] | None = None
-    converged = False
-    # NB: unlike PageRank's fixed-shape superstep, CC's edge set SHRINKS each
-    # round — AQE's runtime coalescing is a measured win here (17s vs 48s at
-    # sf0.1 with it disabled), so the loop runs under normal session confs.
-    for i in range(start_round, max_iter):
-        check_budget()
-        ls = _large_star(e)
-        # large-star output is asymmetric (child→parent); symmetrize for the
-        # next neighborhood computation.  No distinct needed: every ls row
-        # has v < u strictly (v = min(N(u) ∪ u) and self-loops are filtered),
-        # so the swapped orientation can never collide with the original and
-        # ls itself is already distinct — same for the small-star output
-        # below.  Each removed distinct was a full shuffle per round.
-        sym = ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        ss = _small_star(sym)
-        obs = Observation(f"cc_{i}")
-        new_e = (
-            ss.union(ss.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
+    with LoopState() as state:
+        # symmetrize once (unless resuming); each round operates on the
+        # shrinking parent-edge set
+        resumed = latest_checkpoint(checkpoint_mgr, resume, edges.sparkSession, ["u", "v"])
+        start_round = 0
+        if resumed is None:
+            state.frame = checkpoint_tracked(symmetric_edges(edges, src, dst))
+        else:
+            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+        prev_sig: tuple[int, int] | None = None
+        converged = False
+        # NB: unlike PageRank's fixed-shape superstep, CC's edge set SHRINKS each
+        # round — AQE's runtime coalescing is a measured win here (17s vs 48s at
+        # sf0.1 with it disabled), so the loop runs under normal session confs.
+        for i in range(start_round, max_iter):
+            check_budget()
+            ls = _large_star(state.frame)
+            # large-star output is asymmetric (child→parent); symmetrize for the
+            # next neighborhood computation.  No distinct needed: every ls row
+            # has v < u strictly (v = min(N(u) ∪ u) and self-loops are filtered),
+            # so the swapped orientation can never collide with the original and
+            # ls itself is already distinct — same for the small-star output
+            # below.  Each removed distinct was a full shuffle per round.
+            sym = ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            ss = _small_star(sym)
+            obs = Observation(f"cc_{i}")
+            new_e = (
+                ss.union(ss.select(F.col("v").alias("u"), F.col("u").alias("v")))
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
+                )
             )
+            # the early rounds hold FULL symmetrized edge sets: the superseded
+            # round's checkpoint is released as soon as this one exists
+            e = state.advance(new_e, i)
+            # fingerprint equality is probabilistic (40-bit hash-sum + count);
+            # collision odds are astronomically small and the cost of a stale
+            # match is one extra idempotent round, not a wrong answer
+            sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+            converged = sig == prev_sig
+            if checkpoint_mgr is not None and ((i + 1) % checkpoint_interval == 0 or converged):
+                checkpoint_mgr.save(i + 1, e, float(sig[0]))
+            if converged:
+                break
+            prev_sig = sig
+        if not converged and max_iter > start_round:
+            # the alternating algorithm converges in O(log² n) rounds — exhausting
+            # max_iter means the star forest is NOT a fixpoint and the extraction
+            # below may split true components; never return that silently.
+            # (guarded like label_propagation's: when the loop body never ran —
+            # resume at start_round >= max_iter, or max_iter=0 — there is no
+            # fixpoint *failure* to report)
+            warnings.warn(
+                f"connected_components: no fixpoint after {max_iter} rounds; "
+                "components may be over-split (raise max_iter)",
+                stacklevel=2,
+            )
+        # star forest: component(u) = min neighbor (parent); parents map to themselves
+        e = state.frame
+        parent = e.groupBy("u").agg(F.min("v").alias("p"))
+        comp = parent.select(
+            F.col("u").alias("page_id"), F.least("u", "p").alias("component")
         )
-        new_e = checkpoint_tracked(new_e)
-        # fingerprint equality is probabilistic (40-bit hash-sum + count);
-        # collision odds are astronomically small and the cost of a stale
-        # match is one extra idempotent round, not a wrong answer
-        sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-        # drop the superseded round's checkpoint blocks now (the early rounds
-        # hold FULL symmetrized edge sets; DataFrame.unpersist alone is a
-        # no-op on localCheckpointed frames).  The FINAL e stays checkpointed:
-        # the star-forest extraction below reads it lazily.
-        release_checkpoint(e)
-        e = new_e
-        converged = sig == prev_sig
-        if checkpoint_mgr is not None and ((i + 1) % checkpoint_interval == 0 or converged):
-            checkpoint_mgr.save(i + 1, e, float(sig[0]))
-        if converged:
-            break
-        prev_sig = sig
-    if not converged and max_iter > start_round:
-        # the alternating algorithm converges in O(log² n) rounds — exhausting
-        # max_iter means the star forest is NOT a fixpoint and the extraction
-        # below may split true components; never return that silently.
-        # (guarded like label_propagation's: when the loop body never ran —
-        # resume at start_round >= max_iter, or max_iter=0 — there is no
-        # fixpoint *failure* to report)
-        warnings.warn(
-            f"connected_components: no fixpoint after {max_iter} rounds; "
-            "components may be over-split (raise max_iter)",
-            stacklevel=2,
+        # vertices that are component minima may only appear as parents (v side)
+        roots = (
+            e.select(F.col("v").alias("page_id"))
+            .distinct()
+            .join(comp.select("page_id"), "page_id", "left_anti")
+            .withColumn("component", F.col("page_id"))
         )
-    # star forest: component(u) = min neighbor (parent); parents map to themselves
-    parent = e.groupBy("u").agg(F.min("v").alias("p"))
-    comp = parent.select(
-        F.col("u").alias("page_id"), F.least("u", "p").alias("component")
-    )
-    # vertices that are component minima may only appear as parents (v side)
-    roots = (
-        e.select(F.col("v").alias("page_id"))
-        .distinct()
-        .join(comp.select("page_id"), "page_id", "left_anti")
-        .withColumn("component", F.col("page_id"))
-    )
-    out = comp.union(roots)
-    # the result reads the final (checkpointed) edge frame; carry its
-    # checkpoint ids so a finished caller can release_checkpoint() the blocks
-    out._wps_ckpt_rdd_ids = getattr(e, "_wps_ckpt_rdd_ids", None) or set()
-    return out
+        return state.result(comp.union(roots))

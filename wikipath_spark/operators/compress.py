@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from wikipath_spark.operators._loop import LoopState, checkpoint_tracked
+
 
 def _compress_driver_side(rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """Memoized sequential walk with per-walk cycle detection — the
@@ -63,7 +65,6 @@ def compress_redirects(
     src: str = "src",
     dst: str = "dst",
     max_iters: int | None = None,
-    checkpoint_every: int = 1,
     driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Compress an alias map ``(src, dst)`` to terminal targets.
@@ -97,33 +98,34 @@ def compress_redirects(
         return spark.createDataFrame(compressed or [], "src long, dst long")
     # distributed pointer doubling: NOW materialize once (every iteration
     # re-reads the full table) and take the exact count for the log2 cap
-    r = r.localCheckpoint(eager=True)
-    n = r.count()
-    cap = max_iters if max_iters is not None else int(math.ceil(math.log2(n + 1))) + 2
+    with LoopState() as state:
+        r = state.frame = checkpoint_tracked(r)
+        n = r.count()
+        cap = max_iters if max_iters is not None else int(math.ceil(math.log2(n + 1))) + 2
 
-    for it in range(cap):
-        hop = r.select(F.col("src").alias("h_src"), F.col("dst").alias("h_dst"))
-        # one action per iteration: the changed-count rides the checkpointing
-        # pass via observe (was checkpoint + filter-count = 2 jobs/iteration)
-        obs = Observation(f"compress_{it}")
-        stepped = (
-            r.join(hop, r["dst"] == hop["h_src"], "left")
-            .select(
-                "src",
-                F.coalesce("h_dst", "dst").alias("dst"),
-                (F.col("h_dst").isNotNull() & (F.col("h_dst") != F.col("dst"))).alias("_changed"),
+        for it in range(cap):
+            hop = r.select(F.col("src").alias("h_src"), F.col("dst").alias("h_dst"))
+            # one action per iteration: the changed-count rides the checkpointing
+            # pass via observe (was checkpoint + filter-count = 2 jobs/iteration)
+            obs = Observation(f"compress_{it}")
+            stepped = (
+                r.join(hop, r["dst"] == hop["h_src"], "left")
+                .select(
+                    "src",
+                    F.coalesce("h_dst", "dst").alias("dst"),
+                    (F.col("h_dst").isNotNull() & (F.col("h_dst") != F.col("dst"))).alias("_changed"),
+                )
+                .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n"))
+                .drop("_changed")
             )
-            .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        r = stepped.select("src", "dst")
-        if int(obs.get["n"] or 0) == 0:
-            break
+            r = state.advance(stepped, it)
+            if int(obs.get["n"] or 0) == 0:
+                break
 
-    # Cycle residue: any row whose final dst is still a source never reached
-    # a terminal → it is on, or feeds into, a cycle. Drop it (parse.rs:782-804).
-    keys = r.select(F.col("src").alias("k")).distinct()
-    return r.join(keys, r["dst"] == keys["k"], "left_anti")
+        # Cycle residue: any row whose final dst is still a source never reached
+        # a terminal → it is on, or feeds into, a cycle. Drop it (parse.rs:782-804).
+        keys = r.select(F.col("src").alias("k")).distinct()
+        return state.result(r.join(keys, r["dst"] == keys["k"], "left_anti"))
 
 
 def resolve_through(

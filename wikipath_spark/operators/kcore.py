@@ -26,8 +26,14 @@ import warnings
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from wikipath_spark.operators._loop import checkpoint_tracked, release_checkpoint
+from wikipath_spark.operators._loop import (
+    LoopState,
+    checkpoint_tracked,
+    latest_checkpoint,
+    symmetric_edges,
+)
 
 
 def coreness(
@@ -69,73 +75,59 @@ def coreness(
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "coreness")
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = checkpoint_tracked(sym)
-    est = checkpoint_tracked(
-        sym.groupBy("u")
-        .agg(F.count("*").cast("long").alias("est"))
-        .select(F.col("u").alias("page_id"), "est")
-    )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("u").orderBy(F.desc("est"))
-    prev_sig: tuple[int, int] | None = None
-    converged = False
-    start_round = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, _ = checkpoint_mgr.load(edges.sparkSession, latest)
-            release_checkpoint(est)
-            est = checkpoint_tracked(loaded.select("page_id", "est"))
-            sig_row = est.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.pmod(F.xxhash64("page_id", "est"), F.lit(1 << 40))).alias("h"),
-            ).collect()[0]
-            prev_sig = (int(sig_row["n"]), int(sig_row["h"] or 0))
-            start_round = latest
-    for i in range(start_round, max_iter):
-        check_budget()
-        nbr = sym.join(est, sym["v"] == est["page_id"]).select("u", "est")
-        obs = Observation(f"coreness_{i}")
-        new_est = (
-            nbr.withColumn("_rn", F.row_number().over(w))
-            .groupBy("u")
-            .agg(F.max(F.least(F.col("_rn").cast("long"), F.col("est"))).alias("est"))
-            .select(F.col("u").alias("page_id"), "est")
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.pmod(F.xxhash64("page_id", "est"), F.lit(1 << 40))).alias("h"),
+    fingerprint = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64("page_id", "est"), F.lit(1 << 40))).alias("h"),
+    )
+
+    with LoopState() as state:
+        sym = state.hold(checkpoint_tracked(symmetric_edges(edges, src, dst)))
+        resumed = latest_checkpoint(
+            checkpoint_mgr, resume, edges.sparkSession, ["page_id", "est"]
+        )
+        prev_sig: tuple[int, int] | None = None
+        start_round = 0
+        if resumed is None:
+            state.frame = checkpoint_tracked(
+                sym.groupBy("u")
+                .agg(F.count("*").cast("long").alias("est"))
+                .select(F.col("u").alias("page_id"), "est")
             )
-        )
-        new_est = checkpoint_tracked(new_est)
-        sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-        release_checkpoint(est)  # superseded round: drop blocks now
-        est = new_est
-        converged = sig == prev_sig
-        if converged:
-            break
-        prev_sig = sig
-        if checkpoint_mgr is not None and (i + 1) % checkpoint_interval == 0:
-            checkpoint_mgr.save(i + 1, est, float(sig[0]))
-    if not converged and max_iter > 0:
-        warnings.warn(
-            f"coreness: no fixpoint after {max_iter} rounds; estimates are an "
-            "upper bound on the true coreness (raise max_iter)",
-            stacklevel=2,
-        )
-    # the returned select reads only the (checkpointed) final est — the
-    # symmetrized edge frame is done, so drop its blocks before returning
-    release_checkpoint(sym)
-    out = est.select("page_id", F.col("est").alias("coreness"))
-    out._wps_ckpt_rdd_ids = getattr(est, "_wps_ckpt_rdd_ids", None) or set()
-    return out
+        else:
+            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+            sig_row = state.frame.agg(*fingerprint).collect()[0]
+            prev_sig = (int(sig_row["n"]), int(sig_row["h"] or 0))
+        converged = False
+        for i in range(start_round, max_iter):
+            check_budget()
+            est = state.frame
+            nbr = sym.join(est, sym["v"] == est["page_id"]).select("u", "est")
+            obs = Observation(f"coreness_{i}")
+            new_est = (
+                nbr.withColumn("_rn", F.row_number().over(w))
+                .groupBy("u")
+                .agg(F.max(F.least(F.col("_rn").cast("long"), F.col("est"))).alias("est"))
+                .select(F.col("u").alias("page_id"), "est")
+                .observe(obs, *fingerprint)
+            )
+            est = state.advance(new_est, i)
+            sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+            converged = sig == prev_sig
+            if converged:
+                break
+            prev_sig = sig
+            if checkpoint_mgr is not None and (i + 1) % checkpoint_interval == 0:
+                checkpoint_mgr.save(i + 1, est, float(sig[0]))
+        if not converged and max_iter > 0:
+            warnings.warn(
+                f"coreness: no fixpoint after {max_iter} rounds; estimates are an "
+                "upper bound on the true coreness (raise max_iter)",
+                stacklevel=2,
+            )
+        # the returned select reads only the (checkpointed) final estimates;
+        # the held symmetric edge frame is released on exit
+        return state.result(state.frame.select("page_id", F.col("est").alias("coreness")))
 
 
 def k_core(
@@ -162,57 +154,45 @@ def k_core(
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "k_core")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = checkpoint_tracked(e)
-    prev_n = e.count()
-    start_round = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, metric = checkpoint_mgr.load(edges.sparkSession, latest)
-            release_checkpoint(e)
-            e = checkpoint_tracked(loaded.select("u", "v"))
-            prev_n = int(metric)
-            start_round = latest
-    converged = prev_n == 0
-    for i in range(start_round, max_iter):
-        if converged:
-            break
-        check_budget()
-        deg = e.groupBy("u").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("u")
-        obs = Observation(f"kcore_{i}")
-        e2 = (
-            e.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+    with LoopState() as state:
+        resumed = latest_checkpoint(checkpoint_mgr, resume, edges.sparkSession, ["u", "v"])
+        start_round = 0
+        if resumed is None:
+            state.frame = checkpoint_tracked(symmetric_edges(edges, src, dst))
+        else:
+            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+        prev_n = state.frame.count()
+        converged = prev_n == 0
+        for i in range(start_round, max_iter):
+            if converged:
+                break
+            check_budget()
+            e = state.frame
+            deg = e.groupBy("u").agg(F.count("*").alias("d"))
+            keep = deg.filter(F.col("d") >= k).select("u")
+            obs = Observation(f"kcore_{i}")
+            e = state.advance(
+                e.join(keep, "u", "left_semi")
+                .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
+                .observe(obs, F.count(F.lit(1)).alias("n")),
+                i,
+            )
+            n2 = int(obs.get["n"] or 0)
+            converged = n2 == prev_n or n2 == 0
+            prev_n = n2
+            if checkpoint_mgr is not None and not converged and (i + 1) % checkpoint_interval == 0:
+                checkpoint_mgr.save(i + 1, e, float(n2))
+        if not converged and max_iter > 0:
+            # peeling strictly shrinks until the fixpoint, so this means
+            # max_iter rounds were not enough — the returned set OVER-approximates
+            # the true k-core; never silent (same contract as components/LPA)
+            warnings.warn(
+                f"k_core: no fixpoint after {max_iter} rounds; "
+                "result over-approximates the k-core (raise max_iter)",
+                stacklevel=2,
+            )
+        return state.result(
+            state.frame.groupBy("u")
+            .agg(F.count("*").alias("degree"))
+            .select(F.col("u").alias("page_id"), "degree")
         )
-        e2 = checkpoint_tracked(e2)
-        n2 = int(obs.get["n"] or 0)
-        release_checkpoint(e)  # superseded peel round: drop blocks now
-        e = e2
-        converged = n2 == prev_n or n2 == 0
-        prev_n = n2
-        if checkpoint_mgr is not None and not converged and (i + 1) % checkpoint_interval == 0:
-            checkpoint_mgr.save(i + 1, e, float(n2))
-    if not converged and max_iter > 0:
-        # peeling strictly shrinks until the fixpoint, so this means
-        # max_iter rounds were not enough — the returned set OVER-approximates
-        # the true k-core; never silent (same contract as components/LPA)
-        warnings.warn(
-            f"k_core: no fixpoint after {max_iter} rounds; "
-            "result over-approximates the k-core (raise max_iter)",
-            stacklevel=2,
-        )
-    out = (
-        e.groupBy("u")
-        .agg(F.count("*").alias("degree"))
-        .select(F.col("u").alias("page_id"), "degree")
-    )
-    out._wps_ckpt_rdd_ids = getattr(e, "_wps_ckpt_rdd_ids", None) or set()
-    return out

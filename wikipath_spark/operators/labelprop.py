@@ -24,7 +24,7 @@ import warnings
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import checkpoint_tracked, release_checkpoint
+from wikipath_spark.operators._loop import LoopState, latest_checkpoint, symmetric_edges
 
 
 def label_propagation(
@@ -42,25 +42,6 @@ def label_propagation(
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "label_propagation")
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    labels = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
-        "label", F.col("page_id")
-    ).persist()
-    start_it = 0
-    if checkpoint_mgr is not None and resume:
-        latest = checkpoint_mgr.latest()
-        if latest is not None:
-            loaded, _ = checkpoint_mgr.load(edges.sparkSession, latest)
-            labels.unpersist()
-            labels = loaded.select("page_id", "label").persist()
-            start_it = latest
-
     # AQE left on: like CC (and unlike PageRank's fixed-shape superstep),
     # message volume varies round to round as labels converge
     #
@@ -69,30 +50,25 @@ def label_propagation(
     # (the same trick as connected_components; replaces an old-vs-new join +
     # count that cost an extra job per superstep).  Equality of a 40-bit
     # hash-sum fingerprint is probabilistic but astronomically safe, and a
-    # stale fixpoint only costs one extra (idempotent) round.
-    # checkpoint release discipline (same as the PageRank scalar loop): a
-    # checkpointed frame's blocks may only drop once a NEWER checkpoint
-    # exists — a persist-only successor recomputes THROUGH the predecessor's
-    # checkpoint, and localCheckpointed RDDs cannot be recomputed
-    try:
-        return _lpa_iterate(
-            sym, labels, start_it, max_iter, checkpoint_every, checkpoint_mgr,
-            checkpoint_interval, check_budget,
+    # stale fixpoint only costs one extra (idempotent) round.  Checkpoint
+    # cadence and release of the label frames: LoopState.
+    with LoopState(checkpoint_every) as state:
+        sym = state.hold(symmetric_edges(edges, src, dst).persist())
+        resumed = latest_checkpoint(
+            checkpoint_mgr, resume, edges.sparkSession, ["page_id", "label"]
         )
-    finally:
-        sym.unpersist()
-
-
-def _lpa_iterate(
-    sym, labels, start_it, max_iter, checkpoint_every, checkpoint_mgr,
-    checkpoint_interval, check_budget,
-):
-    prev_sig: tuple[int, int] | None = None
-    converged = False
-    deferred: list = []
-    try:
+        start_it = 0
+        if resumed is None:
+            state.frame = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
+                "label", F.col("page_id")
+            ).persist()
+        else:
+            state.frame, start_it = resumed[0].persist(), resumed[1]
+        prev_sig: tuple[int, int] | None = None
+        converged = False
         for it in range(start_it + 1, max_iter + 1):
             check_budget()
+            labels = state.frame
             msgs = sym.join(labels, sym["v"] == labels["page_id"]).select(
                 sym["u"].alias("id"), "label"
             )
@@ -108,54 +84,20 @@ def _lpa_iterate(
                     F.sum(F.pmod(F.xxhash64("page_id", "label"), F.lit(1 << 40))).alias("h"),
                 )
             )
-            ckpt_now = it % checkpoint_every == 0
-            if ckpt_now:
-                # eager lineage truncation each superstep (measured in
-                # PageRank: letting the plan grow dominates iteration cost)
-                new_labels = checkpoint_tracked(picked)
-            else:
-                new_labels = picked.persist()
-                new_labels.count()
+            labels = state.advance(picked, it)
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-            if ckpt_now:
-                release_checkpoint(labels)  # actually frees checkpointed frames
-                for stale in deferred:
-                    release_checkpoint(stale)
-                deferred.clear()
-            elif getattr(labels, "_wps_ckpt_rdd_ids", None):
-                deferred.append(labels)  # persist-only successor still needs it
-            else:
-                labels.unpersist()
-            labels = new_labels
             converged = sig == prev_sig
             if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged):
                 checkpoint_mgr.save(it, labels, float(sig[0]))
             if converged:
                 break
             prev_sig = sig
-    except BaseException:
-        # mid-loop abort (budget timeout, checkpoint-hook failure): release
-        # the CURRENT state and any deferred predecessor NOW — same contract
-        # as the PageRank loop (ADVICE r5 item 1); on success they stay
-        # alive for the caller
-        release_checkpoint(labels)
-        for stale in deferred:
-            release_checkpoint(stale)
-        raise
-    if not converged and max_iter > start_it:
-        # synchronous LPA can oscillate; the caller must know the labels are a
-        # max_iter snapshot, not a fixpoint (same contract as components)
-        warnings.warn(
-            f"label_propagation: no fixpoint after {max_iter} supersteps; "
-            "returning the last snapshot",
-            stacklevel=2,
-        )
-    # the returned frame may read through a deferred predecessor checkpoint
-    # (loop ended on a persist-only iteration): carry those ids so a caller
-    # that is DONE can release_checkpoint() everything (ADVICE r5 item 1)
-    ids = set(getattr(labels, "_wps_ckpt_rdd_ids", None) or set())
-    for kept in deferred:
-        ids |= kept._wps_ckpt_rdd_ids
-    if ids:
-        labels._wps_ckpt_rdd_ids = ids
-    return labels
+        if not converged and max_iter > start_it:
+            # synchronous LPA can oscillate; the caller must know the labels are a
+            # max_iter snapshot, not a fixpoint (same contract as components)
+            warnings.warn(
+                f"label_propagation: no fixpoint after {max_iter} supersteps; "
+                "returning the last snapshot",
+                stacklevel=2,
+            )
+        return state.result(state.frame)

@@ -6,15 +6,11 @@ north rule: damping 0.85, dangling-mass redistribution, convergence at
 L∞ < 1e-6, scores validated against a numpy oracle (allclose 1e-6).
 
 Each superstep is one explicit shuffle: ``ranks ⋈ edges on src`` then
-``groupBy(dst).sum``.  Two message-aggregation physical strategies:
-
-- ``impl="sql"``  — built-in hash aggregate (whole-stage codegen, partial
-  map-side combine for free).
-- ``impl="csr"``  — per-partition sparse gather-scatter: messages grouped by
-  ``pmod(xxhash64(dst), P)`` and summed inside ``applyInPandas`` with
-  ``np.add.at`` over factorized (CSR-style) dst indices — the Arrow-batched
-  kernel path the north star mandates; useful headroom for fatter per-vertex
-  state than a single double.
+``groupBy(dst).sum`` — the built-in hash aggregate (whole-stage codegen,
+partial map-side combine for free).  The Arrow-batched CSR kernel
+(``applyInPandas`` scatter-add over dst-hash buckets) runs only in the
+wide-state :func:`pagerank_multi`, where it wins; at one double per vertex
+it measured 34% slower than the hash aggregate (BENCH/BASELINE.md).
 
 Skew: hub vertices (power-law in-degree, the Wikipedia-style distribution the
 reference's adjacency lists embody, database.rs:225-243) concentrate one
@@ -22,9 +18,10 @@ groupBy key.  ``salt_partials=k`` turns the aggregation into salted two-stage
 (partial sums over (dst, salt) then final over dst) via operators/skew.py.
 
 Lineage: driver-side iteration grows the plan each superstep;
-``localCheckpoint`` every ``checkpoint_every`` steps truncates it, and an
-optional durable checkpoint (plans/checkpoint.py) makes runs resumable with
-per-partition lineage + convergence metrics.
+``localCheckpoint`` every ``checkpoint_every`` steps truncates it
+(:class:`~wikipath_spark.operators._loop.LoopState` owns the state frames),
+and an optional durable checkpoint (plans/checkpoint.py) makes runs
+resumable with per-partition lineage + convergence metrics.
 
 Driver lane: an edge table small enough for the driver (the shared
 ``driver_edge_arrays`` gate of the CC and BFS lanes) skips the loop above and
@@ -45,10 +42,12 @@ from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
     DRIVER_THRESHOLD_BYTES,
+    LoopState,
     checkpoint_tracked,
     driver_edge_arrays,
+    endpoint_vertices,
+    latest_checkpoint,
     loop_confs,
-    release_checkpoint,
 )
 from wikipath_spark.operators.skew import pick_salt, salted_sum
 
@@ -64,25 +63,12 @@ class PageRankResult:
     converged: bool
 
 
-def _csr_partial_sum(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-group sparse scatter-add: sum contribs by dst with numpy.
-
-    Factorize dst into dense local indices (a per-partition CSR column
-    index), then ``np.add.at`` — one vectorized pass, no Python per row.
-    """
-    dst_codes, dst_uniques = pd.factorize(pdf["dst"], sort=False)
-    sums = np.zeros(len(dst_uniques), dtype=np.float64)
-    np.add.at(sums, dst_codes, pdf["contrib"].to_numpy())
-    return pd.DataFrame({"dst": dst_uniques, "partial": sums})
-
-
 def pagerank(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
-    impl: str = "sql",
     salt_partials: int | None = None,
     checkpoint_every: int = 1,
     on_superstep=None,
@@ -103,10 +89,10 @@ def pagerank(
     Catalyst size estimate is at most ``driver_threshold_bytes`` is
     collected once through Arrow and iterated in numpy by
     :func:`_pagerank_driver` — same damping, dangling mass, stop rule,
-    budget checks and result; ``impl``, ``salt_partials`` and
-    ``checkpoint_every`` shape only the distributed plan.  Unknown-size
-    plans report MaxValue and stay distributed; ``driver_threshold_bytes=0``
-    forces the distributed lane.  Its hook frame is ``(page_id, rank)``,
+    budget checks and result; ``salt_partials`` and ``checkpoint_every``
+    shape only the distributed plan.  Unknown-size plans report MaxValue
+    and stay distributed; ``driver_threshold_bytes=0`` forces the
+    distributed lane.  Its hook frame is ``(page_id, rank)``,
     built only when a hook is passed.
     """
     from wikipath_spark.operators.bfs import wall_budget
@@ -138,7 +124,7 @@ def pagerank(
     # try/finally: an exception mid-loop must not leak these confs.
     with loop_confs(spark, rows=n_edges) as sc_parts:
         return _pagerank_loop(
-            spark, edges, vertices, damping, tol, max_iter, impl, salt_partials,
+            spark, edges, vertices, damping, tol, max_iter, salt_partials,
             checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
             resume, n_edges, sc_parts, check_budget,
         )
@@ -204,37 +190,30 @@ def _pagerank_driver(
 
 
 def _pagerank_loop(
-    spark, edges, vertices, damping, tol, max_iter, impl, salt_partials,
+    spark, edges, vertices, damping, tol, max_iter, salt_partials,
     checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
     resume, n_edges, sc_parts, check_budget,
 ) -> PageRankResult:
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("page_id"))
-            .union(edges.select(F.col("dst").alias("page_id")))
-            .distinct()
-        )
+        vertices = endpoint_vertices(edges)
     vertices = vertices.select("page_id")
+    if salt_partials is None:
+        # auto (the default): salt so no hub's in-neighborhood exceeds one
+        # task's budget (SURVEY.md §4.2 — from the degree distribution).
+        # n_edges bounds every in-degree, so salt=1 is always sufficient
+        # when n_edges <= rows_per_task — skip the degree-probe job then
+        # (one fewer fixed-latency setup action)
+        salt_partials = (
+            1 if n_edges <= ROWS_PER_TASK
+            else pick_salt(edges, key="dst", rows_per_task=ROWS_PER_TASK)
+        )
 
-    # everything persisted below must be released on ANY exit — including a
-    # failure during setup itself (e.g. a corrupt checkpoint raising from
-    # load, or a budget timeout in-loop), not just the happy path: a
-    # long-lived serve session would otherwise accumulate executor storage
-    # per failed call
-    contrib_edges = vflag = ranks = None
-    try:
-        if salt_partials is None:
-            # auto (the default): salt so no hub's in-neighborhood exceeds one
-            # task's budget (SURVEY.md §4.2 — from the degree distribution).
-            # n_edges bounds every in-degree, so salt=1 is always sufficient
-            # when n_edges <= rows_per_task — skip the degree-probe job then
-            # (one fewer fixed-latency setup action)
-            salt_partials = (
-                1 if n_edges <= ROWS_PER_TASK
-                else pick_salt(edges, key="dst", rows_per_task=ROWS_PER_TASK)
-            )
-
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    # everything below is released on ANY exit — including a failure during
+    # setup itself (a corrupt checkpoint raising from load, a budget timeout
+    # in-loop): a long-lived serve session would otherwise accumulate
+    # executor storage per failed call
+    with LoopState(checkpoint_every) as state:
         # contribution edges: weight = 1/out_deg, partitioned once by src and
         # reused every superstep (the join's build side never re-shuffles).
         # checkpoint_tracked, not persist: a cached frame EMBEDS its whole
@@ -244,11 +223,11 @@ def _pagerank_loop(
         # driver-side plan build 0.10s → 0.03s per superstep).  AQE is off
         # here (loop_confs), so the hash(src) partitioning and sort survive
         # the checkpoint and the superstep join still needs no exchange.
-        contrib_edges = checkpoint_tracked(
+        contrib_edges = state.hold(checkpoint_tracked(
             edges.join(out_deg, "src")
             .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
             .repartition(sc_parts, "src")
-        )
+        ))
 
         # dangling flag lives on the vertex frame so the per-superstep action
         # can produce next iteration's dangling mass and the convergence delta
@@ -261,7 +240,7 @@ def _pagerank_loop(
         # vertices.persist()+count() action — and its cache — are gone).
         srcs = contrib_edges.select("src").distinct()
         vobs = Observation("pr_init")
-        vflag = checkpoint_tracked(
+        vflag = state.hold(checkpoint_tracked(
             vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
             .select("page_id", F.col("src").isNull().alias("is_dangling"))
             .repartition(sc_parts, "page_id")
@@ -270,96 +249,48 @@ def _pagerank_loop(
                 F.sum(F.col("is_dangling").cast("long")).alias("nd"),
                 F.count(F.lit(1)).alias("nv"),
             )
-        )
+        ))
         metrics = vobs.get
         n = int(metrics["nv"] or 0)
         if n == 0:
             # empty-graph exit: derive from `vertices`, NOT vflag — the
-            # finally block releases vflag's checkpoint on this return
+            # held vflag checkpoint is released on this return
             return PageRankResult(
                 vertices.withColumn("rank", F.lit(0.0)), 0, 0.0, True
             )
-        ranks = vflag.select(
-            "page_id", F.lit(1.0 / n).alias("rank"), "is_dangling"
-        ).persist()
-        dangling_mass = int(metrics["nd"] or 0) * (1.0 / n)
-        start_it = 0
-        if checkpoint_mgr is not None and resume:
-            latest = checkpoint_mgr.latest()
-            if latest is not None:
-                loaded, _metric = checkpoint_mgr.load(spark, latest)
-                ranks.unpersist()
-                ranks = (
-                    loaded.select("page_id", "rank")
-                    .join(vflag, "page_id")
-                    .select("page_id", "rank", "is_dangling")
-                    .persist()
-                )
-                start_it = latest
-        if start_it > 0:
+        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, ["page_id", "rank"])
+        if resumed is None:
+            start_it = 0
+            state.frame = vflag.select(
+                "page_id", F.lit(1.0 / n).alias("rank"), "is_dangling"
+            ).persist()
+            dangling_mass = int(metrics["nd"] or 0) * (1.0 / n)
+        else:
+            loaded, start_it = resumed
+            state.frame = (
+                loaded.join(vflag, "page_id")
+                .select("page_id", "rank", "is_dangling")
+                .persist()
+            )
             # resumed: recompute the dangling mass of the restored state (1 job)
             dangling_mass = (
-                ranks.join(vflag.filter("is_dangling"), "page_id", "left_semi")
+                state.frame.join(vflag.filter("is_dangling"), "page_id", "left_semi")
                 .agg(F.sum("rank"))
                 .collect()[0][0]
                 or 0.0
             )
         base = (1.0 - damping) / n
-        return _pagerank_iterate(
-            spark, ranks, contrib_edges, vflag, dangling_mass, base, damping, n,
-            tol, max_iter, start_it, impl, salt_partials, sc_parts,
-            checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-            check_budget,
-        )
-    except BaseException:
-        # setup-phase abort: release the initial state frame (in-loop aborts
-        # release the CURRENT frame inside _pagerank_iterate; unpersisting an
-        # already-released frame is a no-op, so both paths are safe)
-        if ranks is not None:
-            ranks.unpersist()
-        raise
-    finally:
-        if contrib_edges is not None:
-            release_checkpoint(contrib_edges)
-        if vflag is not None:
-            release_checkpoint(vflag)
-
-
-def _pagerank_iterate(
-    spark, ranks, contrib_edges, vflag, dangling_mass, base, damping, n,
-    tol, max_iter, start_it, impl, salt_partials, sc_parts,
-    checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-    check_budget,
-) -> PageRankResult:
-    delta = float("inf")
-    it = start_it
-    # checkpointed frames whose block release is DEFERRED: when the successor
-    # state took the persist-only branch, its recompute path still runs
-    # through the predecessor's checkpoint (a localCheckpointed RDD cannot be
-    # recomputed), so those blocks may only drop once a NEWER self-contained
-    # checkpoint exists.  Holds at most one frame at a time.
-    deferred: list = []
-    try:
+        delta = float("inf")
+        it = start_it
         for it in range(start_it + 1, max_iter + 1):
             check_budget()
+            ranks = state.frame
             joined = contrib_edges.join(ranks, contrib_edges["src"] == ranks["page_id"])
             # src rides along only when salting needs it (deterministic per-row
             # salt source) — otherwise keep the shuffled message row minimal
-            msg_cols = (["src"] if salt_partials > 1 and impl != "csr" else []) + ["dst"]
+            msg_cols = (["src"] if salt_partials > 1 else []) + ["dst"]
             msgs = joined.select(*msg_cols, (F.col("rank") * F.col("w")).alias("contrib"))
-            if impl == "csr":
-                # applyInPandas over hash buckets: Arrow-batched numpy scatter-add
-                sums = (
-                    msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(sc_parts)))
-                    .groupBy("_b")
-                    .applyInPandas(
-                        lambda pdf: _csr_partial_sum(pdf[["dst", "contrib"]]),
-                        schema="dst long, partial double",
-                    )
-                    .groupBy("dst")
-                    .agg(F.sum("partial").alias("msum"))
-                )
-            elif salt_partials > 1:
+            if salt_partials > 1:
                 # salt bucket from the message's src vertex: row-distinct within a
                 # hub's in-neighborhood (unlike the contrib value, which is equal
                 # across rows at uniform init) and deterministic across runs and
@@ -377,7 +308,7 @@ def _pagerank_iterate(
             # no separate old-vs-new join (SURVEY.md §4.5: no UDF, join-free here
             # because the old rank is already a column of the state being updated)
             obs = Observation(f"pr_{it}")
-            new_ranks = (
+            ranks = state.advance(
                 ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
                 .select(
                     "page_id",
@@ -390,35 +321,11 @@ def _pagerank_iterate(
                     F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"),
                     F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
                 )
-                .drop("_old")
+                .drop("_old"),
+                it,
             )
-            ckpt_now = it % checkpoint_every == 0
-            if ckpt_now:
-                # eager truncation: measured 2x faster than letting the logical
-                # plan grow even 5 iterations — Catalyst re-analyzes the whole
-                # lineage each superstep otherwise (see BENCH/BASELINE.md).
-                # Tracked so the superseded frame's checkpoint BLOCKS can be
-                # dropped once safe (plain unpersist() is a no-op on a
-                # localCheckpointed frame — blocks live in the BlockManager,
-                # not the CacheManager)
-                new_ranks = checkpoint_tracked(new_ranks)
-            else:
-                new_ranks = new_ranks.persist()
-                new_ranks.count()
             metrics = obs.get
             delta, dangling_mass = metrics["d"], metrics["dm"] or 0.0
-            if ckpt_now:
-                # a fresh self-contained checkpoint supersedes everything
-                # before it: release the predecessor AND any deferred frame
-                release_checkpoint(ranks)
-                for stale in deferred:
-                    release_checkpoint(stale)
-                deferred.clear()
-            elif getattr(ranks, "_wps_ckpt_rdd_ids", None):
-                deferred.append(ranks)  # persist-only successor still needs it
-            else:
-                ranks.unpersist()  # plain persist frame: recompute walks lineage
-            ranks = new_ranks
             converged_now = delta < tol
             if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged_now):
                 checkpoint_mgr.save(it, ranks.select("page_id", "rank"), float(delta))
@@ -426,24 +333,8 @@ def _pagerank_iterate(
                 on_superstep(it, ranks, delta)
             if converged_now:
                 break
-
-        # success: the final state (and, when the loop ended on a persist-only
-        # iteration, the one deferred checkpoint backing it) stays alive for
-        # the caller — the returned frame carries the checkpoint ids so a
-        # caller that is DONE with the result can release_checkpoint() it
-        out = ranks.select("page_id", "rank")
-        out._wps_ckpt_rdd_ids = set(getattr(ranks, "_wps_ckpt_rdd_ids", None) or set())
-        for kept in deferred:
-            out._wps_ckpt_rdd_ids |= kept._wps_ckpt_rdd_ids
+        out = state.result(state.frame.select("page_id", "rank"))
         return PageRankResult(out, it, float(delta), delta < tol)
-    except BaseException:
-        # mid-loop abort (budget timeout, checkpoint-hook bomb): release
-        # the CURRENT state frame and any deferred predecessor — on success
-        # they stay persisted for the caller (documented result contract)
-        release_checkpoint(ranks)
-        for stale in deferred:
-            release_checkpoint(stale)
-        raise
 
 
 def pagerank_fixedpoint(
@@ -490,11 +381,7 @@ def pagerank_fixedpoint(
         if not sources:
             raise ValueError("pagerank_fixedpoint: sources must be non-empty (or None)")
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("page_id"))
-            .union(edges.select(F.col("dst").alias("page_id")))
-            .distinct()
-        )
+        vertices = endpoint_vertices(edges)
     vertices = vertices.select("page_id")
     n_vertices = vertices.count()
     if n_vertices == 0:
@@ -503,41 +390,41 @@ def pagerank_fixedpoint(
     n = n_vertices if sources is None else len(sources)
 
     out_deg = edges.groupBy("src").agg(F.count("*").alias("od"))
-    edges_od = checkpoint_tracked(edges.select("src", "dst").join(out_deg, "src"))
     srcs = edges.select("src").distinct()
     in_jump = (
         F.lit(True) if sources is None else F.col("page_id").isin([int(s) for s in sources])
     )
-    vflag = checkpoint_tracked(
-        vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
-        .select(
-            "page_id",
-            F.col("src").isNull().alias("is_dangling"),
-            in_jump.alias("is_jump"),
-        )
-    )
-    r0_val = scale // n
-    flags = vflag.agg(
-        F.count(F.when(F.col("is_jump"), 1)).alias("n_jump"),
-        F.count(F.when(F.col("is_dangling") & F.col("is_jump"), 1)).alias("n_dj"),
-    ).first()
-    if sources is not None and flags["n_jump"] != n:
-        raise ValueError(
-            f"pagerank_fixedpoint: {n - flags['n_jump']} source id(s) not in the "
-            "vertex set — personalization mass would leak"
-        )
-    dm = r0_val * flags["n_dj"]
-    jump = ((damping_den - damping_num) * scale) // (damping_den * n)
+    with LoopState() as state:
+        edges_od = state.hold(checkpoint_tracked(edges.select("src", "dst").join(out_deg, "src")))
+        vflag = state.hold(checkpoint_tracked(
+            vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
+            .select(
+                "page_id",
+                F.col("src").isNull().alias("is_dangling"),
+                in_jump.alias("is_jump"),
+            )
+        ))
+        r0_val = scale // n
+        flags = vflag.agg(
+            F.count(F.when(F.col("is_jump"), 1)).alias("n_jump"),
+            F.count(F.when(F.col("is_dangling") & F.col("is_jump"), 1)).alias("n_dj"),
+        ).first()
+        if sources is not None and flags["n_jump"] != n:
+            raise ValueError(
+                f"pagerank_fixedpoint: {n - flags['n_jump']} source id(s) not in the "
+                "vertex set — personalization mass would leak"
+            )
+        dm = r0_val * flags["n_dj"]
+        jump = ((damping_den - damping_num) * scale) // (damping_den * n)
 
-    ranks = checkpoint_tracked(
-        vflag.select(
-            "page_id",
-            F.when(F.col("is_jump"), F.lit(r0_val)).otherwise(F.lit(0)).cast("long").alias("rank_fp"),
-            "is_dangling",
-            "is_jump",
+        ranks = state.frame = checkpoint_tracked(
+            vflag.select(
+                "page_id",
+                F.when(F.col("is_jump"), F.lit(r0_val)).otherwise(F.lit(0)).cast("long").alias("rank_fp"),
+                "is_dangling",
+                "is_jump",
+            )
         )
-    )
-    try:
         for it in range(1, iters + 1):
             msgs = edges_od.join(ranks, edges_od["src"] == ranks["page_id"]).select(
                 "dst", F.expr("rank_fp div od").alias("c")
@@ -545,7 +432,7 @@ def pagerank_fixedpoint(
             msum = msgs.groupBy("dst").agg(F.sum("c").alias("msum"))
             dangling_term = (damping_num * (dm // n)) // damping_den
             obs = Observation(f"prf_{it}")
-            new_ranks = checkpoint_tracked(
+            ranks = state.advance(
                 ranks.join(msum, ranks["page_id"] == msum["dst"], "left")
                 .select(
                     "page_id",
@@ -561,24 +448,11 @@ def pagerank_fixedpoint(
                     F.sum(
                         F.when(F.col("is_dangling"), F.col("rank_fp")).otherwise(F.lit(0).cast("long"))
                     ).alias("dm"),
-                )
+                ),
+                it,
             )
             dm = int(obs.get["dm"] or 0)
-            release_checkpoint(ranks)  # superseded state: drop blocks NOW
-            ranks = new_ranks
-        # the FINAL state frame stays checkpointed — the returned select
-        # reads it (a localCheckpointed RDD cannot be recomputed); its
-        # checkpoint ids ride on the result so a caller that is DONE can
-        # free the blocks with release_checkpoint()
-        out = ranks.select("page_id", "rank_fp")
-        out._wps_ckpt_rdd_ids = getattr(ranks, "_wps_ckpt_rdd_ids", None) or set()
-        return out
-    except BaseException:
-        release_checkpoint(ranks)
-        raise
-    finally:
-        release_checkpoint(edges_od)
-        release_checkpoint(vflag)
+        return state.result(ranks.select("page_id", "rank_fp"))
 
 
 def pagerank_numpy_oracle(
@@ -623,11 +497,12 @@ def pagerank_numpy_oracle(
 
 
 def _csr_partial_vecsum(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vector twin of :func:`_csr_partial_sum`: per-group scatter-add of
-    (rows, k) contribution MATRICES by dst — one ``np.add.at`` over a 2-D
-    array, so the per-row Arrow/pandas overhead is amortized over all k
-    components at once (this is where the CSR kernel beats the JVM path:
-    the SQL formulation must explode k rows per message)."""
+    """Per-group sparse scatter-add of (rows, k) contribution MATRICES by
+    dst: factorize dst into dense local indices (a per-partition CSR column
+    index), then one ``np.add.at`` over a 2-D array, so the per-row
+    Arrow/pandas overhead is amortized over all k components at once (this
+    is where the CSR kernel beats the JVM path: the SQL formulation must
+    explode k rows per message)."""
     dst_codes, dst_uniques = pd.factorize(pdf["dst"], sort=False)
     mat = np.vstack(pdf["vec"].to_numpy())
     # dtype-generic: float64 for the float kernel, int64 for the fixed-point
@@ -682,19 +557,23 @@ def pagerank_multi(
     k = len(seeds)
     spark = edges.sparkSession
     n_edges = edges.count()
-    with loop_confs(spark, rows=n_edges) as sc_parts:
+    # dangling mass per component: k scalar aggregates (element_at is a
+    # cheap array index, k is small)
+    dm_aggs = [
+        F.sum(
+            F.when(F.col("is_dangling"), F.element_at("ranks", i + 1)).otherwise(0.0)
+        ).alias(f"dm{i}")
+        for i in range(k)
+    ]
+    with loop_confs(spark, rows=n_edges) as sc_parts, LoopState() as state:
         if vertices is None:
-            vertices = (
-                edges.select(F.col("src").alias("page_id"))
-                .union(edges.select(F.col("dst").alias("page_id")))
-                .distinct()
-            )
+            vertices = endpoint_vertices(edges)
         vertices = vertices.select("page_id")
         if vertices.isEmpty():
             return vertices.withColumn("ranks", F.lit(None).cast("array<double>"))
 
         out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        contrib_edges = (
+        contrib_edges = state.hold(
             edges.join(out_deg, "src")
             .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
             .repartition(sc_parts, "src")
@@ -708,7 +587,7 @@ def pagerank_multi(
         slot = F.array(
             *[F.when(F.col("page_id") == s, 1.0).otherwise(0.0) for s in seeds]
         )
-        vflag = checkpoint_tracked(
+        vflag = state.hold(checkpoint_tracked(
             vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
             .select(
                 "page_id",
@@ -716,7 +595,7 @@ def pagerank_multi(
                 slot.alias("slot"),
             )
             .repartition(sc_parts, "page_id")
-        )
+        ))
         n_seed_hits = vflag.agg(
             F.sum(F.aggregate("slot", F.lit(0.0), lambda a, x: a + x))
         ).collect()[0][0]
@@ -726,98 +605,65 @@ def pagerank_multi(
                 "vertex set — personalization mass would leak"
             )
 
-        ranks = checkpoint_tracked(
+        ranks = state.frame = checkpoint_tracked(
             vflag.select("page_id", "is_dangling", "slot", F.col("slot").alias("ranks"))
         )
-        # dangling mass per component rides the checkpointing pass: k scalar
-        # aggregates (element_at is a cheap array index, k is small)
-        dm_row = ranks.agg(
-            *[
-                F.sum(
-                    F.when(F.col("is_dangling"), F.element_at("ranks", i + 1)).otherwise(0.0)
-                ).alias(f"dm{i}")
-                for i in range(k)
-            ]
-        ).collect()[0]
+        dm_row = ranks.agg(*dm_aggs).collect()[0]
         dm = [float(dm_row[f"dm{i}"] or 0.0) for i in range(k)]
 
-        try:
-            for it in range(1, iters + 1):
-                check_budget()
-                joined = contrib_edges.join(
-                    ranks, contrib_edges["src"] == ranks["page_id"]
-                )
-                msgs = joined.select(
-                    "dst",
-                    F.transform("ranks", lambda x: x * F.col("w")).alias("vec"),
-                )
-                if impl == "csr":
-                    sums = (
-                        msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(sc_parts)))
-                        .groupBy("_b")
-                        .applyInPandas(
-                            lambda pdf: _csr_partial_vecsum(pdf[["dst", "vec"]]),
-                            schema="dst long, vec array<double>",
-                        )
+        for it in range(1, iters + 1):
+            check_budget()
+            joined = contrib_edges.join(
+                ranks, contrib_edges["src"] == ranks["page_id"]
+            )
+            msgs = joined.select(
+                "dst",
+                F.transform("ranks", lambda x: x * F.col("w")).alias("vec"),
+            )
+            sums = _vector_sums(msgs, impl, sc_parts, "double")
+            new_vec = F.array(
+                *[
+                    F.lit(1.0 - damping) * F.element_at("slot", i + 1)
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.element_at("vec", i + 1), F.lit(0.0))
+                        + F.lit(dm[i]) * F.element_at("slot", i + 1)
                     )
-                else:
-                    sums = (
-                        msgs.select("dst", F.posexplode("vec").alias("i", "c"))
-                        .groupBy("dst", "i")
-                        .agg(F.sum("c").alias("s"))
-                        .groupBy("dst")
-                        .agg(
-                            F.array_sort(F.collect_list(F.struct("i", "s"))).alias("p")
-                        )
-                        .select("dst", F.transform("p", lambda st: st["s"]).alias("vec"))
-                    )
-                new_vec = F.array(
-                    *[
-                        F.lit(1.0 - damping) * F.element_at("slot", i + 1)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.element_at("vec", i + 1), F.lit(0.0))
-                            + F.lit(dm[i]) * F.element_at("slot", i + 1)
-                        )
-                        for i in range(k)
-                    ]
-                )
-                obs = Observation(f"prm_{it}")
-                new_ranks = checkpoint_tracked(
-                    ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
-                    .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                    .observe(
-                        obs,
-                        *[
-                            F.sum(
-                                F.when(
-                                    F.col("is_dangling"), F.element_at("ranks", i + 1)
-                                ).otherwise(0.0)
-                            ).alias(f"dm{i}")
-                            for i in range(k)
-                        ],
-                    )
-                )
-                metrics = obs.get
-                dm = [float(metrics[f"dm{i}"] or 0.0) for i in range(k)]
-                # drop the superseded state frame's checkpoint BLOCKS now —
-                # waiting for driver GC leaves up to iters × |V| × k
-                # checkpointed values cached simultaneously (plain
-                # unpersist() is a no-op on localCheckpointed frames)
-                release_checkpoint(ranks)
-                ranks = new_ranks
-        except BaseException:
-            release_checkpoint(ranks)  # mid-loop abort: current state too
-            raise
-        finally:
-            contrib_edges.unpersist()
-            release_checkpoint(vflag)
-        # the FINAL state frame stays checkpointed for the returned select;
-        # its checkpoint ids ride on the result so a caller that is DONE can
-        # free the blocks with release_checkpoint()
-        out = ranks.select("page_id", "ranks")
-        out._wps_ckpt_rdd_ids = getattr(ranks, "_wps_ckpt_rdd_ids", None) or set()
-        return out
+                    for i in range(k)
+                ]
+            )
+            obs = Observation(f"prm_{it}")
+            ranks = state.advance(
+                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
+                .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
+                .observe(obs, *dm_aggs),
+                it,
+            )
+            metrics = obs.get
+            dm = [float(metrics[f"dm{i}"] or 0.0) for i in range(k)]
+        return state.result(ranks.select("page_id", "ranks"))
+
+
+def _vector_sums(msgs: DataFrame, impl: str, parts: int, elem: str) -> DataFrame:
+    """Per-dst sums of the ``vec`` arrays (of ``elem``) of ``(dst, vec)``
+    messages, by the ``impl`` strategy of :func:`pagerank_multi`."""
+    if impl == "csr":
+        return (
+            msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(parts)))
+            .groupBy("_b")
+            .applyInPandas(
+                lambda pdf: _csr_partial_vecsum(pdf[["dst", "vec"]]),
+                schema=f"dst long, vec array<{elem}>",
+            )
+        )
+    return (
+        msgs.select("dst", F.posexplode("vec").alias("i", "c"))
+        .groupBy("dst", "i")
+        .agg(F.sum("c").alias("s"))
+        .groupBy("dst")
+        .agg(F.array_sort(F.collect_list(F.struct("i", "s"))).alias("p"))
+        .select("dst", F.transform("p", lambda st: st["s"]).alias("vec"))
+    )
 
 
 def pagerank_multi_numpy_oracle(edge_list, seeds, n=None, damping=0.85, iters=20):
@@ -879,18 +725,21 @@ def pagerank_multi_fixedpoint(
     spark = edges.sparkSession
     n_edges = edges.count()
     jump = ((damping_den - damping_num) * scale) // damping_den  # n = 1
-    with loop_confs(spark, rows=n_edges) as sc_parts:
+    dm_aggs = [
+        F.sum(
+            F.when(F.col("is_dangling"), F.element_at("ranks", i + 1))
+            .otherwise(F.lit(0).cast("long"))
+        ).alias(f"dm{i}")
+        for i in range(k)
+    ]
+    with loop_confs(spark, rows=n_edges) as sc_parts, LoopState() as state:
         if vertices is None:
-            vertices = (
-                edges.select(F.col("src").alias("page_id"))
-                .union(edges.select(F.col("dst").alias("page_id")))
-                .distinct()
-            )
+            vertices = endpoint_vertices(edges)
         vertices = vertices.select("page_id")
         if vertices.isEmpty():
             return vertices.withColumn("ranks", F.lit(None).cast("array<long>"))
         out_deg = edges.groupBy("src").agg(F.count("*").alias("od"))
-        edges_od = (
+        edges_od = state.hold(
             edges.select("src", "dst").join(out_deg, "src")
             .repartition(sc_parts, "src")
             .persist()
@@ -904,7 +753,7 @@ def pagerank_multi_fixedpoint(
                 for s in seeds
             ]
         )
-        vflag = checkpoint_tracked(
+        vflag = state.hold(checkpoint_tracked(
             vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
             .select(
                 "page_id",
@@ -912,7 +761,7 @@ def pagerank_multi_fixedpoint(
                 slot.alias("slot"),
             )
             .repartition(sc_parts, "page_id")
-        )
+        ))
         n_hits = vflag.agg(
             F.sum(F.aggregate("slot", F.lit(0).cast("long"), lambda a, x: a + x))
         ).collect()[0][0]
@@ -921,7 +770,7 @@ def pagerank_multi_fixedpoint(
                 f"pagerank_multi_fixedpoint: {k - int(n_hits)} seed(s) not in "
                 "the vertex set — personalization mass would leak"
             )
-        ranks = checkpoint_tracked(
+        ranks = state.frame = checkpoint_tracked(
             vflag.select(
                 "page_id",
                 "is_dangling",
@@ -929,83 +778,35 @@ def pagerank_multi_fixedpoint(
                 F.transform("slot", lambda x: x * scale).alias("ranks"),
             )
         )
-        dm_row = ranks.agg(
-            *[
-                F.sum(
-                    F.when(F.col("is_dangling"), F.element_at("ranks", i + 1))
-                    .otherwise(F.lit(0).cast("long"))
-                ).alias(f"dm{i}")
-                for i in range(k)
-            ]
-        ).collect()[0]
+        dm_row = ranks.agg(*dm_aggs).collect()[0]
         dm = [int(dm_row[f"dm{i}"] or 0) for i in range(k)]
-        try:
-            for it in range(1, iters + 1):
-                joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
-                msgs = joined.select(
-                    "dst", F.expr("transform(ranks, x -> x div od)").alias("vec")
-                )
-                if impl == "csr":
-                    sums = (
-                        msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(sc_parts)))
-                        .groupBy("_b")
-                        .applyInPandas(
-                            lambda pdf: _csr_partial_vecsum(pdf[["dst", "vec"]]),
-                            schema="dst long, vec array<long>",
-                        )
+        for it in range(1, iters + 1):
+            joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
+            msgs = joined.select(
+                "dst", F.expr("transform(ranks, x -> x div od)").alias("vec")
+            )
+            sums = _vector_sums(msgs, impl, sc_parts, "long")
+            # seed term computed in exact Python ints per component
+            seed_terms = [
+                jump + (damping_num * dm[i]) // damping_den for i in range(k)
+            ]
+            new_vec = F.array(
+                *[
+                    F.element_at("slot", i + 1) * F.lit(seed_terms[i]).cast("long")
+                    + F.expr(
+                        f"({damping_num} * coalesce(element_at(vec, {i + 1}), 0L)) "
+                        f"div {damping_den}"
                     )
-                else:
-                    sums = (
-                        msgs.select("dst", F.posexplode("vec").alias("i", "c"))
-                        .groupBy("dst", "i")
-                        .agg(F.sum("c").alias("s"))
-                        .groupBy("dst")
-                        .agg(F.array_sort(F.collect_list(F.struct("i", "s"))).alias("p"))
-                        .select("dst", F.transform("p", lambda st: st["s"]).alias("vec"))
-                    )
-                # seed term computed in exact Python ints per component
-                seed_terms = [
-                    jump + (damping_num * dm[i]) // damping_den for i in range(k)
+                    for i in range(k)
                 ]
-                new_vec = F.array(
-                    *[
-                        F.element_at("slot", i + 1) * F.lit(seed_terms[i]).cast("long")
-                        + F.expr(
-                            f"({damping_num} * coalesce(element_at(vec, {i + 1}), 0L)) "
-                            f"div {damping_den}"
-                        )
-                        for i in range(k)
-                    ]
-                )
-                obs = Observation(f"prmf_{it}")
-                new_ranks = checkpoint_tracked(
-                    ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
-                    .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                    .observe(
-                        obs,
-                        *[
-                            F.sum(
-                                F.when(
-                                    F.col("is_dangling"), F.element_at("ranks", i + 1)
-                                ).otherwise(F.lit(0).cast("long"))
-                            ).alias(f"dm{i}")
-                            for i in range(k)
-                        ],
-                    )
-                )
-                metrics = obs.get
-                dm = [int(metrics[f"dm{i}"] or 0) for i in range(k)]
-                release_checkpoint(ranks)  # same discipline as the float loop
-                ranks = new_ranks
-        except BaseException:
-            release_checkpoint(ranks)
-            raise
-        finally:
-            edges_od.unpersist()
-            release_checkpoint(vflag)
-        # the FINAL state frame stays checkpointed for the returned select;
-        # its checkpoint ids ride on the result so a caller that is DONE can
-        # free the blocks with release_checkpoint()
-        out = ranks.select("page_id", "ranks")
-        out._wps_ckpt_rdd_ids = getattr(ranks, "_wps_ckpt_rdd_ids", None) or set()
-        return out
+            )
+            obs = Observation(f"prmf_{it}")
+            ranks = state.advance(
+                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
+                .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
+                .observe(obs, *dm_aggs),
+                it,
+            )
+            metrics = obs.get
+            dm = [int(metrics[f"dm{i}"] or 0) for i in range(k)]
+        return state.result(ranks.select("page_id", "ranks"))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wikipath_spark.operators._loop import endpoint_vertices, symmetric_edges
+
 
 def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # NO materialization barrier here: the symmetric frame is scanned by the
@@ -26,12 +28,7 @@ def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # extra materialization AND blocks exchange reuse / AQE across the
     # boundary (A/B measured at sf0.1: checkpoint 8.5/5.2s, lazy persist
     # 5.3/3.1s, neither 3.1/2.8s — the round-2 regression)
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    sym = symmetric_edges(edges, src, dst)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     with_deg = (
         sym.join(deg.withColumnRenamed("u", "u_").withColumnRenamed("d", "du"),
@@ -79,13 +76,8 @@ def triangles_per_vertex(edges: DataFrame, src: str = "src", dst: str = "dst") -
         .groupBy("page_id")
         .agg(F.count("*").alias("triangles"))
     )
-    all_vertices = (
-        edges.select(F.col(src).alias("page_id"))
-        .union(edges.select(F.col(dst).alias("page_id")))
-        .distinct()
-    )
     out = (
-        all_vertices.join(per_vertex, "page_id", "left")
+        endpoint_vertices(edges, src, dst).join(per_vertex, "page_id", "left")
         .select("page_id", F.coalesce("triangles", F.lit(0)).alias("triangles"))
     )
     closed.unpersist()
