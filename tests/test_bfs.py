@@ -148,3 +148,66 @@ def test_enumerate_paths_diamond():
     p = Paths(1, False, 4, False, links={1: [2, 3], 2: [4], 3: [4]}, length=2, count=2)
     assert enumerate_paths(p) == [[1, 2, 4], [1, 3, 4]]
     assert enumerate_paths(p, max_paths=1) == [[1, 2, 4]]
+
+
+# ---------------------------------------------------------------------------
+# Executor storage: a distributed BFS call must not leave persisted or
+# checkpointed frames behind (a long-lived serve session would accumulate
+# them per request).
+# ---------------------------------------------------------------------------
+
+_CHAIN = [(i, i + 1) for i in range(30)] + [(i, i + 2) for i in range(0, 30, 3)]
+
+
+@pytest.fixture()
+def leaked(spark):
+    """Returns a function giving the persistent RDDs created since the
+    test started."""
+    import gc
+
+    from wikipath_spark.operators._loop import persistent_rdd_ids
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()  # flush ContextCleaner backlog first
+    before = persistent_rdd_ids(spark)
+    return lambda: persistent_rdd_ids(spark) - before
+
+
+def test_shortest_paths_releases_its_checkpoints(edges_df, leaked):
+    got = shortest_paths(edges_df(_CHAIN), 0, 6)
+    assert got.length == 4 and got.count > 0
+    assert not leaked()
+
+
+def test_bfs_distances_result_carries_its_checkpoints(edges_df, leaked):
+    """The distributed lane releases its edge projection when the loop ends;
+    the result carries the ids of the frontier checkpoints it reads."""
+    from wikipath_spark.operators._loop import release_checkpoint
+    from wikipath_spark.operators.bfs import bfs_distances
+
+    dist, frontier = {0: 0}, [0]
+    for depth in range(1, 11):
+        frontier = [b for a, b in _CHAIN if a in frontier and b not in dist]
+        dist.update((v, depth) for v in frontier)
+    out = bfs_distances(edges_df(_CHAIN), 0, max_depth=10, driver_threshold_bytes=0)
+    assert {r.page_id: r.distance for r in out.collect()} == dist
+    release_checkpoint(out)
+    assert not leaked()
+
+
+class _FailingSave:
+    """A checkpoint manager whose every save raises."""
+
+    def save(self, *args):
+        raise RuntimeError("disk full")
+
+
+def test_multi_source_bfs_releases_everything_on_abort(edges_df, leaked):
+    from wikipath_spark.operators.bfs import QueryBudgetExceeded, multi_source_bfs
+
+    df = edges_df(_CHAIN)
+    with pytest.raises(QueryBudgetExceeded):
+        multi_source_bfs(df, [0, 5], budget_s=0.0, driver_threshold_bytes=0)
+    with pytest.raises(RuntimeError, match="disk full"):
+        multi_source_bfs(df, [0, 5], checkpoint_mgr=_FailingSave(), checkpoint_interval=3)
+    assert not leaked()

@@ -76,14 +76,6 @@ LANE_CASES = {
 }
 
 
-def _parquet(spark, tmp_path, name, rows, schema="src long, dst long", files=1):
-    df = spark.createDataFrame(rows, schema)
-    df = df.coalesce(1) if files == 1 else df.repartition(files, df.columns[-1])
-    path = str(tmp_path / f"{name}.parquet")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 @pytest.fixture()
 def driver_calls(monkeypatch):
     """Counts entries into the driver lane."""
@@ -103,12 +95,12 @@ def driver_calls(monkeypatch):
 
 
 @pytest.mark.parametrize("case", list(LANE_CASES))
-def test_pagerank_driver_lane_matches_distributed(spark, tmp_path, driver_calls, case):
+def test_pagerank_driver_lane_matches_distributed(parquet, driver_calls, case):
     edge_list, vertex_list = LANE_CASES[case]
-    edges = _parquet(spark, tmp_path, "edges", edge_list)
+    edges = parquet("edges", edge_list)
     vertices = (
         None if vertex_list is None
-        else _parquet(spark, tmp_path, "vertices", [(v,) for v in vertex_list], "page_id long")
+        else parquet("vertices", [(v,) for v in vertex_list], "page_id long")
     )
     fast = pagerank(edges, vertices=vertices)
     assert len(driver_calls) == 1
@@ -129,10 +121,10 @@ def test_pagerank_driver_lane_matches_distributed(spark, tmp_path, driver_calls,
         assert want[k] == pytest.approx(oracle[k], abs=1e-6)
 
 
-def test_pagerank_driver_lane_empty_graph(spark, tmp_path, driver_calls):
+def test_pagerank_driver_lane_empty_graph(parquet, driver_calls):
     """No edges and no vertex frame: the same empty result as the
     distributed lane's n == 0 exit."""
-    edges = _parquet(spark, tmp_path, "edges", [])
+    edges = parquet("edges", [])
     fast = pagerank(edges)
     assert len(driver_calls) == 1
     slow = pagerank(edges, driver_threshold_bytes=0)
@@ -141,19 +133,19 @@ def test_pagerank_driver_lane_empty_graph(spark, tmp_path, driver_calls):
         assert res.ranks.collect() == [] and res.ranks.columns == ["page_id", "rank"]
 
 
-def test_pagerank_driver_lane_budget(spark, tmp_path, driver_calls):
+def test_pagerank_driver_lane_budget(parquet, driver_calls):
     from wikipath_spark.operators.bfs import QueryBudgetExceeded
 
-    edges = _parquet(spark, tmp_path, "edges", _HUB)
+    edges = parquet("edges", _HUB)
     with pytest.raises(QueryBudgetExceeded):
         pagerank(edges, budget_s=0.0)
     assert len(driver_calls) == 1
 
 
-def test_pagerank_driver_lane_hook(spark, tmp_path, driver_calls):
+def test_pagerank_driver_lane_hook(parquet, driver_calls):
     """on_superstep fires once per iteration with a (page_id, rank) frame;
     the last frame holds the returned ranks."""
-    edges = _parquet(spark, tmp_path, "edges", _HUB)
+    edges = parquet("edges", _HUB)
     seen = []
     res = pagerank(edges, on_superstep=lambda i, r, d: seen.append((i, r, d)))
     assert len(driver_calls) == 1
@@ -163,14 +155,14 @@ def test_pagerank_driver_lane_hook(spark, tmp_path, driver_calls):
     assert sorted(seen[-1][1].collect()) == sorted(res.ranks.collect())
 
 
-def test_pagerank_driver_lane_independent_of_file_layout(spark, tmp_path, driver_calls):
+def test_pagerank_driver_lane_independent_of_file_layout(parquet, tmp_path, driver_calls):
     """The same edges as 1 file or as 4 hash-split files give bit-identical
     ranks: contributions are summed in (dst, src) order, not input order."""
     import glob
 
     el = [(a, b) for a in range(60) for b in range(60) if (a * 13 + b * 7) % 11 == 0]
-    one = _parquet(spark, tmp_path, "one", el)
-    four = _parquet(spark, tmp_path, "four", el, files=4)
+    one = parquet("one", el)
+    four = parquet("four", el, files=4)
     assert len(glob.glob(str(tmp_path / "four.parquet" / "*.parquet"))) == 4
     r1 = {r.page_id: r.rank for r in pagerank(one).ranks.collect()}
     r4 = {r.page_id: r.rank for r in pagerank(four).ranks.collect()}
@@ -178,12 +170,12 @@ def test_pagerank_driver_lane_independent_of_file_layout(spark, tmp_path, driver
     assert r1 == r4  # dict equality on floats = bitwise-equal ranks
 
 
-def test_pagerank_durable_runs_stay_distributed(spark, tmp_path, driver_calls):
+def test_pagerank_durable_runs_stay_distributed(parquet, tmp_path, driver_calls):
     """checkpoint_mgr / resume need the distributed loop's durable
     checkpoints, whatever the size estimate."""
     from wikipath_spark.plans.checkpoint import CheckpointManager
 
-    edges = _parquet(spark, tmp_path, "edges", _HUB)
+    edges = parquet("edges", _HUB)
     mgr = CheckpointManager(str(tmp_path / "ckpt"), "run")
     pagerank(edges, checkpoint_mgr=mgr, checkpoint_interval=5)
     pagerank(edges, checkpoint_mgr=mgr, resume=True)

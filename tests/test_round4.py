@@ -316,6 +316,7 @@ def test_budget_s_on_driver_lanes(spark, tmp_path):
         lambda: ops.connected_components(df, budget_s=0.0),
         lambda: ops.bfs_distances(df, 1, budget_s=0.0),
         lambda: multi_source_bfs(df, [1, 2], budget_s=0.0),
+        lambda: ops.label_propagation(df, budget_s=0.0),
     ):
         with pytest.raises(QueryBudgetExceeded):
             fn()

@@ -11,12 +11,17 @@ that replaces its state each superstep (PageRank and its fixed-point and
 vector twins, LPA, CC, k-core, coreness, distributed redirect compression):
 checkpoint cadence, release of superseded and abandoned frames, and the
 checkpoint ids carried on the result.
+
+:func:`driver_edge_arrays` is the one size gate of every driver-side
+small-graph lane, and :func:`undirected_driver_graph` the one undirected
+graph the CC, LPA and triangle lanes run on.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
+import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -254,6 +259,37 @@ def symmetric_edges(edges, src: str = "src", dst: str = "dst"):
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
+
+
+def undirected_driver_graph(src: np.ndarray, dst: np.ndarray):
+    """Driver twin of :func:`symmetric_edges` over collected endpoint arrays.
+
+    Returns ``(ids, lo, hi)``: ``ids`` are the sorted distinct endpoints of
+    every non-self-loop edge, and ``lo < hi`` are the int32 indices into
+    ``ids`` of each distinct undirected pair, sorted by ``(lo, hi)``.  Index
+    order is id order, so a minimum index is a minimum id.
+
+    Kept lean, because the lanes share the driver process: ids come from
+    ``np.unique`` over each endpoint column plus ``searchsorted``, never an
+    inverse over the 2m-long concatenation, and every per-edge index array
+    is int32."""
+    keep = src != dst
+    s, d = src[keep], dst[keep]
+    del keep
+    ids = np.union1d(np.unique(s), np.unique(d))
+    n = len(ids)
+    a = np.searchsorted(ids, s).astype(np.int32)
+    del s
+    b = np.searchsorted(ids, d).astype(np.int32)
+    del d
+    lo = np.minimum(a, b)
+    np.maximum(a, b, out=b)
+    del a
+    key = np.multiply(lo, n, dtype=np.int64)
+    key += b
+    del lo, b
+    lo, hi = np.divmod(np.unique(key), n)
+    return ids, lo.astype(np.int32), hi.astype(np.int32)
 
 
 def endpoint_vertices(edges, src: str = "src", dst: str = "dst"):

@@ -38,8 +38,10 @@ from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
     DRIVER_THRESHOLD_BYTES,
+    checkpoint_tracked,
     driver_edge_arrays,
     latest_checkpoint,
+    release_checkpoint,
 )
 
 
@@ -187,13 +189,18 @@ def shortest_paths(
     # its whole lineage from source — materialize once
     cached = edges.storageLevel.useMemory or edges.storageLevel.useDisk
     edges = edges.select("src", "dst")
+    # per-level persists (dag layers) and checkpoints (edge projection,
+    # flagged frontiers) must not outlive the request — a long-lived serve
+    # session would otherwise accumulate executor storage per query (and a
+    # budget timeout would leak it even faster)
+    _persisted: list[DataFrame] = []
     if not cached:
-        edges = edges.localCheckpoint(eager=True)
+        edges = checkpoint_tracked(edges)
+        _persisted.append(edges)
 
     def one(v: int) -> DataFrame:
         return spark.createDataFrame([(v,)], "id long")
 
-    _persisted: list[DataFrame] = []
     try:
         # visited: (id, depth); DAG edge stores (pred, id, depth-of-id) per side
         fwd_visited, bwd_visited = one(src_id), one(dst_id)
@@ -253,8 +260,9 @@ def shortest_paths(
                     F.count(F.lit(1)).alias("n"),
                     F.sum(F.col("_meet").cast("long")).alias("m"),
                 )
-                .localCheckpoint(eager=True)
             )
+            flagged = checkpoint_tracked(flagged)
+            _persisted.append(flagged)
             frontier = flagged.select("id")
             n_new = int(obs.get["n"] or 0)
             meet_n = int(obs.get["m"] or 0)
@@ -307,12 +315,8 @@ def shortest_paths(
         return _assemble_paths(res, fwd_edges, bwd_edges, src_id, dst_id, meet_ids)
 
     finally:
-        # per-level persists (dag layers, meeting set) must not outlive
-        # the request — a long-lived serve session would otherwise
-        # accumulate cached RDDs per query (and a budget timeout would
-        # leak them even faster)
         for _df in _persisted:
-            _df.unpersist()
+            release_checkpoint(_df)
 
 def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth, check_budget):
     """Vectorized driver-side level-synchronous BFS over numpy id arrays:
@@ -375,11 +379,7 @@ def _frontier_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        return (
-            e.repartition(parts, "src")
-            .sortWithinPartitions("src")
-            .localCheckpoint(eager=True)
-        )
+        return checkpoint_tracked(e.repartition(parts, "src").sortWithinPartitions("src"))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
 
@@ -398,12 +398,16 @@ def bfs_distances(
 ) -> DataFrame:
     """Single-source BFS distances: :func:`multi_source_bfs` over
     ``[source]``, projected to ``(page_id, distance)`` for every vertex
-    reachable from ``source`` within ``max_depth`` hops.  Lanes, resume and
-    budget as there; SQL-oracle-checkable via a recursive CTE."""
-    return _multi_source_bfs(
+    reachable from ``source`` within ``max_depth`` hops.  Lanes, resume,
+    budget and the checkpoint ids on the result as there;
+    SQL-oracle-checkable via a recursive CTE."""
+    visited = _multi_source_bfs(
         edges, [source], src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
         resume, wall_budget(budget_s, "bfs_distances"), driver_threshold_bytes,
-    ).select("page_id", "distance")
+    )
+    out = visited.select("page_id", "distance")
+    out._wps_ckpt_rdd_ids = getattr(visited, "_wps_ckpt_rdd_ids", set())
+    return out
 
 
 def multi_source_bfs(
@@ -435,7 +439,9 @@ def multi_source_bfs(
     is precisely the long-running job worth resuming.  ``budget_s`` applies
     the serve path's wall-clock cap (serve.rs:203-206) to the batched entry
     point; the check runs before the driver lane's collect and at every
-    level, like :func:`shortest_paths`.
+    level, like :func:`shortest_paths`.  The distributed lane's result reads
+    one checkpointed frontier per level and carries their ids, so a caller
+    that is done with it frees them with ``release_checkpoint``.
 
     Adaptive lane (the connected_components / serve-BFS pattern): when
     Catalyst's size estimate says the edge table fits driver memory, the
@@ -481,52 +487,66 @@ def _multi_source_bfs(
     # re-run max_depth times, and an unpartitioned checkpoint would
     # re-shuffle + re-sort the edge side every level
     e = _frontier_edges(edges, src, dst)
-    cols = ["source", "page_id", "distance"]
-    resumed = latest_checkpoint(checkpoint_mgr, resume, spark, cols)
-    if resumed is None:
-        start_depth = 0
-        visited = spark.createDataFrame(
-            [(s, s, 0) for s in sources], "source long, page_id long, distance int"
-        )
-    else:
-        start_depth = resumed[1]
-        visited = resumed[0].localCheckpoint(eager=True)
-    frontier = visited.filter(F.col("distance") == start_depth).select(
-        "source", F.col("page_id").alias("id")
-    )
-    # AQE stays on: frontier size varies wildly level to level.
-    # ONE action per level: the frontier count rides on the checkpointing
-    # pass via df.observe.  `visited` stays a union chain of
-    # already-checkpointed frontiers: ≤ max_depth RDD-backed branches, no
-    # growing lineage.
-    for depth in range(start_depth + 1, max_depth + 1):
-        check_budget()
-        obs = Observation(f"msbfs_{depth}")
-        cand = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-            .alias("c")
-        )
-        nxt = (
-            cand.join(
-                visited.alias("v"),
-                (F.col("c.id") == F.col("v.page_id"))
-                & (F.col("c.source") == F.col("v.source")),
-                "left_anti",
+    # checkpointed frontiers `visited` reads: their ids ride on the result
+    # (release_checkpoint frees them), and an exception releases them here
+    levels: list[DataFrame] = []
+    try:
+        cols = ["source", "page_id", "distance"]
+        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, cols)
+        if resumed is None:
+            start_depth = 0
+            visited = spark.createDataFrame(
+                [(s, s, 0) for s in sources], "source long, page_id long, distance int"
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        else:
+            start_depth = resumed[1]
+            visited = checkpoint_tracked(resumed[0])
+            levels.append(visited)
+        frontier = visited.filter(F.col("distance") == start_depth).select(
+            "source", F.col("page_id").alias("id")
         )
-        n_new = int(obs.get["n"] or 0)
-        if n_new == 0:
-            break
-        visited = visited.union(
-            nxt.select("source", F.col("id").alias("page_id"), F.lit(depth).alias("distance"))
-        )
-        frontier = nxt
-        if checkpoint_mgr is not None and depth % checkpoint_interval == 0:
-            checkpoint_mgr.save(depth, visited, float(n_new))
+        # AQE stays on: frontier size varies wildly level to level.
+        # ONE action per level: the frontier count rides on the checkpointing
+        # pass via df.observe.  `visited` stays a union chain of
+        # already-checkpointed frontiers: ≤ max_depth RDD-backed branches, no
+        # growing lineage.
+        for depth in range(start_depth + 1, max_depth + 1):
+            check_budget()
+            obs = Observation(f"msbfs_{depth}")
+            cand = (
+                frontier.join(e, frontier["id"] == e["src"])
+                .select("source", F.col("dst").alias("id"))
+                .distinct()
+                .alias("c")
+            )
+            nxt = checkpoint_tracked(
+                cand.join(
+                    visited.alias("v"),
+                    (F.col("c.id") == F.col("v.page_id"))
+                    & (F.col("c.source") == F.col("v.source")),
+                    "left_anti",
+                ).observe(obs, F.count(F.lit(1)).alias("n"))
+            )
+            levels.append(nxt)
+            n_new = int(obs.get["n"] or 0)
+            if n_new == 0:
+                release_checkpoint(levels.pop())
+                break
+            visited = visited.union(
+                nxt.select("source", F.col("id").alias("page_id"), F.lit(depth).alias("distance"))
+            )
+            frontier = nxt
+            if checkpoint_mgr is not None and depth % checkpoint_interval == 0:
+                checkpoint_mgr.save(depth, visited, float(n_new))
+    except BaseException:
+        for df in levels:
+            release_checkpoint(df)
+        raise
+    finally:
+        # the levels are self-contained checkpoints: nothing reads e now
+        if getattr(e, "_wps_ckpt_rdd_ids", None):
+            release_checkpoint(e)
+    visited._wps_ckpt_rdd_ids = set().union(*(df._wps_ckpt_rdd_ids for df in levels))
     return visited
 
 

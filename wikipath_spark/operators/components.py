@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import warnings
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -30,6 +32,7 @@ from wikipath_spark.operators._loop import (
     driver_edge_arrays,
     latest_checkpoint,
     symmetric_edges,
+    undirected_driver_graph,
 )
 
 
@@ -66,25 +69,22 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return hooked
 
 
-def _cc_driver_numpy(src_ids, dst_ids, check_budget):
-    """Driver-side exact CC over numpy id arrays: min-label propagation +
-    pointer jumping, all vectorized.  ``np.unique`` sorts ids, so index
-    order == id order and the minimum representative INDEX is exactly the
-    minimum vertex id of the component — the same labeling the alternating
-    algorithm produces.  Self-loop-only vertices are dropped by the caller,
+def _cc_driver_numpy(lo, hi, n, check_budget):
+    """Driver-side exact CC over an
+    :func:`~wikipath_spark.operators._loop.undirected_driver_graph`:
+    min-label propagation + pointer jumping, all vectorized.  Index order
+    == id order, so the minimum representative INDEX is exactly the minimum
+    vertex id of the component — the same labeling the alternating
+    algorithm produces.  Self-loop-only vertices are not in the graph,
     matching the distributed lane's ``u != v`` filter."""
-    import numpy as np
-
-    ids, inv = np.unique(np.concatenate([src_ids, dst_ids]), return_inverse=True)
-    ui, vi = inv[: len(src_ids)], inv[len(src_ids):]
-    label = np.arange(len(ids), dtype=np.int64)
+    label = np.arange(n, dtype=np.int32)
     while True:
         check_budget()
         before = label
-        m = np.minimum(label[ui], label[vi])
+        m = np.minimum(label[lo], label[hi])
         label = label.copy()
-        np.minimum.at(label, ui, m)
-        np.minimum.at(label, vi, m)
+        np.minimum.at(label, lo, m)
+        np.minimum.at(label, hi, m)
         while True:
             nl = label[label]
             if np.array_equal(nl, label):
@@ -92,7 +92,7 @@ def _cc_driver_numpy(src_ids, dst_ids, check_budget):
             label = nl
         if np.array_equal(label, before):
             break
-    return ids, ids[label]
+    return label
 
 
 def connected_components(
@@ -132,18 +132,11 @@ def connected_components(
         durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
     if arrays is not None:
-        import pandas as pd
-
-        u, v = arrays
-        keep = u != v
-        su, sv = u[keep], v[keep]
-        spark = edges.sparkSession
-        if len(su) == 0:
-            return spark.createDataFrame([], "page_id long, component long")
-        ids, comp = _cc_driver_numpy(su, sv, check_budget)
-        return spark.createDataFrame(
-            pd.DataFrame({"page_id": ids, "component": comp}),
-            "page_id long, component long",
+        ids, lo, hi = undirected_driver_graph(*arrays)
+        del arrays
+        label = _cc_driver_numpy(lo, hi, len(ids), check_budget)
+        return edges.sparkSession.createDataFrame(
+            pa.table({"page_id": ids, "component": ids[label]})
         )
 
     # convergence check = (row count, order-insensitive hash sum) fingerprint

@@ -15,16 +15,84 @@ function, fully map-side combinable, skew-safe for hubs.
 Synchronous LPA can oscillate on bipartite-ish structures; ``max_iter`` caps
 the loop and the stable-count convergence test stops early when labels stop
 changing. Deterministic by construction either way.
+
+Driver lane: an edge table whose Catalyst size estimate passes the shared
+gate (``_loop.driver_edge_arrays``, ``driver_threshold_bytes``) is collected
+once through Arrow and iterated in numpy over
+``_loop.undirected_driver_graph`` (:func:`_lpa_driver`): the same rounds,
+tie-break, stop rule and no-fixpoint warning, with no Spark job per round.
+``driver_threshold_bytes=0``, an unknown-size plan, ``checkpoint_mgr`` or
+``resume`` keep the distributed loop.
 """
 
 from __future__ import annotations
 
 import warnings
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import LoopState, latest_checkpoint, symmetric_edges
+from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
+    LoopState,
+    driver_edge_arrays,
+    latest_checkpoint,
+    symmetric_edges,
+    undirected_driver_graph,
+)
+
+
+def _lpa_round(lo, hi, label, key):
+    """One synchronous round over the pairs ``lo < hi`` of an
+    :func:`~wikipath_spark.operators._loop.undirected_driver_graph`: every
+    vertex takes the label with the most neighbours, ties to the minimum
+    label.  ``key`` is a reused int64 buffer of length ``2 * len(lo)``."""
+    n, p = len(label), len(lo)
+    # one (receiver, label) key per directed message, sorted in place
+    np.multiply(lo, n, out=key[:p], dtype=np.int64)
+    key[:p] += label[hi]
+    np.multiply(hi, n, out=key[p:], dtype=np.int64)
+    key[p:] += label[lo]
+    key.sort()
+    new_group = np.empty(len(key), dtype=bool)
+    new_group[0] = True
+    np.not_equal(key[1:], key[:-1], out=new_group[1:])
+    starts = np.flatnonzero(new_group)
+    del new_group
+    group = key[starts]
+    score = np.diff(starts, append=len(key))  # messages per (receiver, label)
+    del starts
+    # every vertex receives at least one message, so its groups start where
+    # its receiver block does
+    first = np.searchsorted(group, np.arange(n, dtype=np.int64) * n)
+    np.remainder(group, n, out=group)
+    # count * n - label: the maximum is (max count, then min label)
+    score *= n
+    score -= group
+    del group
+    best = np.maximum.reduceat(score, first)
+    return ((-best) % n).astype(label.dtype)
+
+
+def _lpa_driver(lo, hi, n, max_iter, check_budget):
+    """Label indices after at most ``max_iter`` rounds and whether two
+    consecutive rounds agreed — the distributed loop's stop rule, which
+    compares each round with the one before it (never with the initial
+    labels).  Index order is id order, so the minimum-index tie-break is the
+    minimum-id one."""
+    label = np.arange(n, dtype=np.int32)
+    key = np.empty(2 * len(lo), dtype=np.int64)
+    converged = False
+    for it in range(1, max_iter + 1):
+        check_budget()
+        new = _lpa_round(lo, hi, label, key) if len(lo) else label
+        converged = it > 1 and np.array_equal(new, label)
+        label = new
+        if converged:
+            break
+    return label, converged
 
 
 def label_propagation(
@@ -37,11 +105,28 @@ def label_propagation(
     checkpoint_interval: int = 3,
     resume: bool = False,
     budget_s: float | None = None,
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
-    """Returns ``(page_id, label)``; label = a community representative id."""
+    """Returns ``(page_id, label)``; label = a community representative id.
+    Vertices that appear only on self-loops are absent.  Small edge tables
+    take the numpy driver lane (module docstring); both lanes return the
+    same labels."""
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "label_propagation")
+    arrays = driver_edge_arrays(
+        edges, src, dst, driver_threshold_bytes,
+        durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
+    )
+    if arrays is not None:
+        ids, lo, hi = undirected_driver_graph(*arrays)
+        del arrays
+        label, converged = _lpa_driver(lo, hi, len(ids), max_iter, check_budget)
+        if not converged and max_iter > 0:
+            _warn_no_fixpoint(max_iter)
+        return edges.sparkSession.createDataFrame(
+            pa.table({"page_id": ids, "label": ids[label]})
+        )
     # AQE left on: like CC (and unlike PageRank's fixed-shape superstep),
     # message volume varies round to round as labels converge
     #
@@ -93,11 +178,15 @@ def label_propagation(
                 break
             prev_sig = sig
         if not converged and max_iter > start_it:
-            # synchronous LPA can oscillate; the caller must know the labels are a
-            # max_iter snapshot, not a fixpoint (same contract as components)
-            warnings.warn(
-                f"label_propagation: no fixpoint after {max_iter} supersteps; "
-                "returning the last snapshot",
-                stacklevel=2,
-            )
+            _warn_no_fixpoint(max_iter)
         return state.result(state.frame)
+
+
+def _warn_no_fixpoint(max_iter: int) -> None:
+    # synchronous LPA can oscillate; the caller must know the labels are a
+    # max_iter snapshot, not a fixpoint (same contract as components)
+    warnings.warn(
+        f"label_propagation: no fixpoint after {max_iter} supersteps; "
+        "returning the last snapshot",
+        stacklevel=3,
+    )

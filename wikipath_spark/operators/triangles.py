@@ -10,14 +10,86 @@ Degree ordering (not plain id ordering) bounds the out-degree of the oriented
 graph by O(√m), which is what keeps the wedge self-join from exploding on
 power-law hubs — the skew-critical choice at 100 TB scale.  All joins are
 equi-joins; AQE handles residual join skew.
+
+Driver lane: an edge table whose Catalyst size estimate passes the shared
+gate (``_loop.driver_edge_arrays``, ``driver_threshold_bytes``) is collected
+once through Arrow and counted in numpy over
+``_loop.undirected_driver_graph`` (:func:`_closed_wedges`): the same
+orientation, wedges expanded from a CSR layout in fixed-size chunks and
+closed by ``searchsorted`` on the sorted oriented pair keys, so the driver
+holds one chunk of wedges at a time.  ``driver_threshold_bytes=0`` or an
+unknown-size plan keep the joins above.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import endpoint_vertices, symmetric_edges
+from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
+    driver_edge_arrays,
+    endpoint_vertices,
+    symmetric_edges,
+    undirected_driver_graph,
+)
+
+WEDGE_CHUNK = 1 << 16  # wedges expanded at once by the driver lane
+
+
+def _closed_wedges(lo, hi, n):
+    """Yield ``(a, b, c)`` index arrays of the closed wedges of an
+    :func:`~wikipath_spark.operators._loop.undirected_driver_graph`, one
+    chunk of about :data:`WEDGE_CHUNK` wedges at a time.  Each pair is
+    oriented from its (degree, id)-smaller end, as in :func:`_oriented`, so
+    every triangle is exactly one wedge ``a→b→c`` closed by ``a→c``."""
+    p = len(lo)
+    if p == 0:
+        return
+    deg = np.bincount(lo, minlength=n) + np.bincount(hi, minlength=n)
+    rank = np.empty(n, dtype=np.int64)
+    rank[np.argsort(deg, kind="stable")] = np.arange(n)  # (degree, id) order
+    del deg
+    flip = rank[lo] > rank[hi]
+    del rank
+    # oriented pairs as sorted a * n + b keys: the CSR layout of a's
+    # out-neighbours and the membership index of the closing edges at once
+    key = np.multiply(np.where(flip, hi, lo), n, dtype=np.int64)
+    key += np.where(flip, lo, hi)
+    del flip
+    key.sort()
+    nbr = (key % n).astype(np.int32)
+    off = np.searchsorted(key, np.arange(n + 1, dtype=np.int64) * n)
+    out_deg = np.diff(off)
+    ends = np.cumsum(out_deg[nbr])  # wedges through edges [0, e]
+    e0 = 0
+    while e0 < p:
+        base = int(ends[e0 - 1]) if e0 else 0
+        e1 = max(e0 + 1, int(np.searchsorted(ends, base + WEDGE_CHUNK, side="right")))
+        b_e = nbr[e0:e1]
+        cnt = out_deg[b_e]
+        # wedge j of edge a→b reads b's j-th out-neighbour c
+        first = off[b_e] - (ends[e0:e1] - cnt - base)
+        c = nbr[np.repeat(first, cnt) + np.arange(int(ends[e1 - 1]) - base)]
+        an = np.repeat(key[e0:e1] - b_e, cnt)  # a * n
+        wedge = an + c
+        pos = np.searchsorted(key, wedge)
+        pos[pos == p] = 0
+        hit = key[pos] == wedge
+        yield an[hit] // n, np.repeat(b_e, cnt)[hit], c[hit]
+        e0 = e1
+
+
+def _per_vertex_counts(lo, hi, n):
+    """Triangles through each vertex index: every closed wedge counts once
+    for each of its three corners."""
+    per = np.zeros(n, dtype=np.int64)
+    for corners in _closed_wedges(lo, hi, n):
+        for x in corners:
+            per += np.bincount(x, minlength=n)
+    return per
 
 
 def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -45,8 +117,19 @@ def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return with_deg.filter(keep).select("u", "v")
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
-    """Total number of distinct triangles in the undirected graph."""
+def triangle_count(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
+) -> int:
+    """Total number of distinct triangles in the undirected graph.  Small
+    edge tables take the numpy driver lane (module docstring)."""
+    arrays = driver_edge_arrays(edges, src, dst, driver_threshold_bytes)
+    if arrays is not None:
+        ids, lo, hi = undirected_driver_graph(*arrays)
+        del arrays
+        return sum(len(a) for a, _b, _c in _closed_wedges(lo, hi, len(ids)))
     o = _oriented(edges, src, dst).persist()
     wedges = o.alias("e1").join(
         o.alias("e2"), F.col("e1.v") == F.col("e2.u")
@@ -59,9 +142,29 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
     return n
 
 
-def triangles_per_vertex(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles_per_vertex(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
+) -> DataFrame:
     """``(page_id, triangles)`` — per-vertex triangle participation counts.
-    Vertices in no triangle get 0 iff they appear in ``edges``."""
+    Vertices in no triangle get 0 iff they appear in ``edges``.  Small edge
+    tables take the numpy driver lane (module docstring)."""
+    arrays = driver_edge_arrays(edges, src, dst, driver_threshold_bytes)
+    if arrays is not None:
+        u, v = arrays
+        loops = u[u == v]
+        ids, lo, hi = undirected_driver_graph(u, v)
+        del arrays, u, v
+        per = _per_vertex_counts(lo, hi, len(ids))
+        # endpoint_vertices: vertices seen only on self-loops count 0
+        page_id = np.union1d(ids, loops)
+        tri = np.zeros(len(page_id), dtype=np.int64)
+        tri[np.searchsorted(page_id, ids)] = per
+        return edges.sparkSession.createDataFrame(
+            pa.table({"page_id": page_id, "triangles": tri})
+        )
     o = _oriented(edges, src, dst).persist()
     wedges = o.alias("e1").join(
         o.alias("e2"), F.col("e1.v") == F.col("e2.u")
