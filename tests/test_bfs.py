@@ -180,8 +180,9 @@ def test_shortest_paths_releases_its_checkpoints(edges_df, leaked):
 
 
 def test_bfs_distances_result_carries_its_checkpoints(edges_df, leaked):
-    """The distributed lane releases its edge projection when the loop ends;
-    the result carries the ids of the frontier checkpoints it reads."""
+    """The distributed lane (a ``createDataFrame`` input reports an unknown
+    size) releases its edge projection when the loop ends; the result
+    carries the ids of the frontier checkpoints it reads."""
     from wikipath_spark.operators._loop import release_checkpoint
     from wikipath_spark.operators.bfs import bfs_distances
 
@@ -189,7 +190,7 @@ def test_bfs_distances_result_carries_its_checkpoints(edges_df, leaked):
     for depth in range(1, 11):
         frontier = [b for a, b in _CHAIN if a in frontier and b not in dist]
         dist.update((v, depth) for v in frontier)
-    out = bfs_distances(edges_df(_CHAIN), 0, max_depth=10, driver_threshold_bytes=0)
+    out = bfs_distances(edges_df(_CHAIN), 0, max_depth=10)
     assert {r.page_id: r.distance for r in out.collect()} == dist
     release_checkpoint(out)
     assert not leaked()
@@ -207,7 +208,7 @@ def test_multi_source_bfs_releases_everything_on_abort(edges_df, leaked):
 
     df = edges_df(_CHAIN)
     with pytest.raises(QueryBudgetExceeded):
-        multi_source_bfs(df, [0, 5], budget_s=0.0, driver_threshold_bytes=0)
+        multi_source_bfs(df, [0, 5], budget_s=0.0)
     with pytest.raises(RuntimeError, match="disk full"):
         multi_source_bfs(df, [0, 5], checkpoint_mgr=_FailingSave(), checkpoint_interval=3)
     assert not leaked()

@@ -2,8 +2,9 @@
 
 Edge tables read from parquet carry a real (small) size estimate, so
 ``label_propagation``, ``triangle_count`` and ``triangles_per_vertex`` run
-them in numpy on the driver; ``driver_threshold_bytes=0`` forces the
-distributed lane on the same input.  Both lanes must give identical output.
+them in numpy on the driver; the same rows as a ``createDataFrame`` list
+report an unknown size and take the distributed lane.  Both lanes must give
+identical output.
 """
 
 from __future__ import annotations
@@ -73,12 +74,11 @@ def _labels(edges, **kw):
 
 
 @pytest.mark.parametrize("case", list(LANE_CASES))
-def test_lpa_driver_lane_matches_distributed(parquet, lane_calls, case):
+def test_lpa_driver_lane_matches_distributed(parquet, edges_df, lane_calls, case):
     edge_list, max_iter = LANE_CASES[case]
-    edges = parquet("edges", edge_list)
-    fast = _labels(edges, max_iter=max_iter)
+    fast = _labels(parquet("edges", edge_list), max_iter=max_iter)
     assert lane_calls["lpa"] == 1
-    slow = _labels(edges, max_iter=max_iter, driver_threshold_bytes=0)
+    slow = _labels(edges_df(edge_list), max_iter=max_iter)
     assert lane_calls["lpa"] == 1
     assert fast == slow
     assert fast[1] == (case == "oscillating")
@@ -86,11 +86,12 @@ def test_lpa_driver_lane_matches_distributed(parquet, lane_calls, case):
 
 
 @pytest.mark.parametrize("case", list(LANE_CASES))
-def test_triangles_driver_lane_matches_distributed(parquet, lane_calls, case):
-    edges = parquet("edges", LANE_CASES[case][0])
-    assert triangle_count(edges) == triangle_count(edges, driver_threshold_bytes=0)
+def test_triangles_driver_lane_matches_distributed(parquet, edges_df, lane_calls, case):
+    edge_list = LANE_CASES[case][0]
+    edges, reference = parquet("edges", edge_list), edges_df(edge_list)
+    assert triangle_count(edges) == triangle_count(reference)
     fast = triangles_per_vertex(edges)
-    slow = triangles_per_vertex(edges, driver_threshold_bytes=0)
+    slow = triangles_per_vertex(reference)
     assert lane_calls["triangles"] == 2
     assert fast.columns == slow.columns == ["page_id", "triangles"]
     assert sorted(fast.collect()) == sorted(slow.collect())
@@ -134,12 +135,12 @@ def test_driver_kernels_peak_memory():
     src, dst = rng.integers(0, 12_000, 66_000), rng.integers(0, 12_000, 66_000)
 
     def lpa():
-        ids, lo, hi = undirected_driver_graph(src, dst)
-        lp._lpa_driver(lo, hi, len(ids), 10, lambda: None)
+        g = undirected_driver_graph(src, dst)
+        lp._lpa_driver(g.lo, g.hi, len(g.ids), 10, lambda: None)
 
     def triangles():
-        ids, lo, hi = undirected_driver_graph(src, dst)
-        tr._per_vertex_counts(lo, hi, len(ids))
+        g = undirected_driver_graph(src, dst)
+        tr._per_vertex_counts(g.lo, g.hi, len(g.ids))
 
     for kernel in (lpa, triangles):
         per_edge = _peak_bytes(kernel) / len(src)

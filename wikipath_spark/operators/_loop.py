@@ -13,13 +13,15 @@ checkpoint cadence, release of superseded and abandoned frames, and the
 checkpoint ids carried on the result.
 
 :func:`driver_edge_arrays` is the one size gate of every driver-side
-small-graph lane, and :func:`undirected_driver_graph` the one undirected
-graph the CC, LPA and triangle lanes run on.
+small-graph lane, and :func:`driver_graph` puts the one undirected graph the
+CC, LPA and triangle lanes run on (:func:`undirected_driver_graph`) behind
+it.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -261,19 +263,27 @@ def symmetric_edges(edges, src: str = "src", dst: str = "dst"):
     )
 
 
-def undirected_driver_graph(src: np.ndarray, dst: np.ndarray):
+class DriverGraph(NamedTuple):
+    """The undirected driver graph of :func:`undirected_driver_graph`."""
+
+    ids: np.ndarray  # sorted distinct endpoints of the non-self-loop edges
+    lo: np.ndarray  # int32 index into ids of each distinct pair's smaller end
+    hi: np.ndarray  # int32 index into ids of its larger end; lo < hi
+    loop_only: np.ndarray  # ids seen only on self-loops (not in ``ids``)
+
+
+def undirected_driver_graph(src: np.ndarray, dst: np.ndarray) -> DriverGraph:
     """Driver twin of :func:`symmetric_edges` over collected endpoint arrays.
 
-    Returns ``(ids, lo, hi)``: ``ids`` are the sorted distinct endpoints of
-    every non-self-loop edge, and ``lo < hi`` are the int32 indices into
-    ``ids`` of each distinct undirected pair, sorted by ``(lo, hi)``.  Index
-    order is id order, so a minimum index is a minimum id.
+    ``lo < hi`` index each distinct undirected pair, sorted by ``(lo, hi)``.
+    Index order is id order, so a minimum index is a minimum id.
 
     Kept lean, because the lanes share the driver process: ids come from
     ``np.unique`` over each endpoint column plus ``searchsorted``, never an
     inverse over the 2m-long concatenation, and every per-edge index array
     is int32."""
     keep = src != dst
+    loops = src[~keep]
     s, d = src[keep], dst[keep]
     del keep
     ids = np.union1d(np.unique(s), np.unique(d))
@@ -289,7 +299,24 @@ def undirected_driver_graph(src: np.ndarray, dst: np.ndarray):
     key += b
     del lo, b
     lo, hi = np.divmod(np.unique(key), n)
-    return ids, lo.astype(np.int32), hi.astype(np.int32)
+    return DriverGraph(
+        ids, lo.astype(np.int32), hi.astype(np.int32), np.setdiff1d(loops, ids)
+    )
+
+
+def driver_graph(
+    edges,
+    src: str = "src",
+    dst: str = "dst",
+    threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
+    durable: bool = False,
+    check_budget=None,
+) -> DriverGraph | None:
+    """:func:`driver_edge_arrays` (same arguments) turned into the
+    :class:`DriverGraph` the CC, LPA and triangle lanes run on, or ``None``
+    for the distributed lane.  The collected arrays are dropped on return."""
+    arrays = driver_edge_arrays(edges, src, dst, threshold_bytes, durable, check_budget)
+    return None if arrays is None else undirected_driver_graph(*arrays)
 
 
 def endpoint_vertices(edges, src: str = "src", dst: str = "dst"):

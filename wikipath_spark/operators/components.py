@@ -29,10 +29,9 @@ from wikipath_spark.operators._loop import (
     DRIVER_THRESHOLD_BYTES,
     LoopState,
     checkpoint_tracked,
-    driver_edge_arrays,
+    driver_graph,
     latest_checkpoint,
     symmetric_edges,
-    undirected_driver_graph,
 )
 
 
@@ -115,7 +114,7 @@ def connected_components(
     Adaptive physical strategy (round 6 — the compress_redirects /
     serve-BFS pattern): when Catalyst's own size estimate says the edge
     table fits comfortably in driver memory, the fixpoint runs as ONE Arrow
-    collect (:func:`driver_edge_arrays`) + vectorized numpy min-label pointer
+    collect (:func:`driver_graph`) + vectorized numpy min-label pointer
     jumping — the alternating-star loop costs ~1s of fixed scheduling per
     round even on a 42k-row edge set (measured, OPTIMIZATION_r06.md), and
     resume/checkpoint machinery is meaningless at that size.  Identical
@@ -127,16 +126,14 @@ def connected_components(
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "connected_components")
-    arrays = driver_edge_arrays(
+    g = driver_graph(
         edges, src, dst, driver_threshold_bytes,
         durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
-    if arrays is not None:
-        ids, lo, hi = undirected_driver_graph(*arrays)
-        del arrays
-        label = _cc_driver_numpy(lo, hi, len(ids), check_budget)
+    if g is not None:
+        label = _cc_driver_numpy(g.lo, g.hi, len(g.ids), check_budget)
         return edges.sparkSession.createDataFrame(
-            pa.table({"page_id": ids, "component": ids[label]})
+            pa.table({"page_id": g.ids, "component": g.ids[label]})
         )
 
     # convergence check = (row count, order-insensitive hash sum) fingerprint

@@ -17,12 +17,12 @@ the loop and the stable-count convergence test stops early when labels stop
 changing. Deterministic by construction either way.
 
 Driver lane: an edge table whose Catalyst size estimate passes the shared
-gate (``_loop.driver_edge_arrays``, ``driver_threshold_bytes``) is collected
-once through Arrow and iterated in numpy over
-``_loop.undirected_driver_graph`` (:func:`_lpa_driver`): the same rounds,
-tie-break, stop rule and no-fixpoint warning, with no Spark job per round.
-``driver_threshold_bytes=0``, an unknown-size plan, ``checkpoint_mgr`` or
-``resume`` keep the distributed loop.
+gate (``_loop.driver_graph``, ``DRIVER_THRESHOLD_BYTES``) is collected once
+through Arrow and iterated in numpy over its undirected driver graph
+(:func:`_lpa_driver`): the same rounds, tie-break, stop rule and no-fixpoint
+warning, with no Spark job per round.  An unknown-size plan (e.g. a
+``createDataFrame`` list), ``checkpoint_mgr`` or ``resume`` keep the
+distributed loop.
 """
 
 from __future__ import annotations
@@ -35,12 +35,10 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
-    DRIVER_THRESHOLD_BYTES,
     LoopState,
-    driver_edge_arrays,
+    driver_graph,
     latest_checkpoint,
     symmetric_edges,
-    undirected_driver_graph,
 )
 
 
@@ -105,7 +103,6 @@ def label_propagation(
     checkpoint_interval: int = 3,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Returns ``(page_id, label)``; label = a community representative id.
     Vertices that appear only on self-loops are absent.  Small edge tables
@@ -114,18 +111,16 @@ def label_propagation(
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "label_propagation")
-    arrays = driver_edge_arrays(
-        edges, src, dst, driver_threshold_bytes,
+    g = driver_graph(
+        edges, src, dst,
         durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
-    if arrays is not None:
-        ids, lo, hi = undirected_driver_graph(*arrays)
-        del arrays
-        label, converged = _lpa_driver(lo, hi, len(ids), max_iter, check_budget)
+    if g is not None:
+        label, converged = _lpa_driver(g.lo, g.hi, len(g.ids), max_iter, check_budget)
         if not converged and max_iter > 0:
             _warn_no_fixpoint(max_iter)
         return edges.sparkSession.createDataFrame(
-            pa.table({"page_id": ids, "label": ids[label]})
+            pa.table({"page_id": g.ids, "label": g.ids[label]})
         )
     # AQE left on: like CC (and unlike PageRank's fixed-shape superstep),
     # message volume varies round to round as labels converge

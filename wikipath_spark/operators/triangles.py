@@ -12,13 +12,12 @@ power-law hubs — the skew-critical choice at 100 TB scale.  All joins are
 equi-joins; AQE handles residual join skew.
 
 Driver lane: an edge table whose Catalyst size estimate passes the shared
-gate (``_loop.driver_edge_arrays``, ``driver_threshold_bytes``) is collected
-once through Arrow and counted in numpy over
-``_loop.undirected_driver_graph`` (:func:`_closed_wedges`): the same
-orientation, wedges expanded from a CSR layout in fixed-size chunks and
-closed by ``searchsorted`` on the sorted oriented pair keys, so the driver
-holds one chunk of wedges at a time.  ``driver_threshold_bytes=0`` or an
-unknown-size plan keep the joins above.
+gate (``_loop.driver_graph``, ``DRIVER_THRESHOLD_BYTES``) is collected once
+through Arrow and counted in numpy over its undirected driver graph
+(:func:`_closed_wedges`): the same orientation, wedges expanded from a CSR
+layout in fixed-size chunks and closed by ``searchsorted`` on the sorted
+oriented pair keys, so the driver holds one chunk of wedges at a time.  An
+unknown-size plan (e.g. a ``createDataFrame`` list) keeps the joins above.
 """
 
 from __future__ import annotations
@@ -29,11 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
-    DRIVER_THRESHOLD_BYTES,
-    driver_edge_arrays,
+    driver_graph,
     endpoint_vertices,
     symmetric_edges,
-    undirected_driver_graph,
 )
 
 WEDGE_CHUNK = 1 << 16  # wedges expanded at once by the driver lane
@@ -117,19 +114,12 @@ def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return with_deg.filter(keep).select("u", "v")
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
-) -> int:
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
     """Total number of distinct triangles in the undirected graph.  Small
     edge tables take the numpy driver lane (module docstring)."""
-    arrays = driver_edge_arrays(edges, src, dst, driver_threshold_bytes)
-    if arrays is not None:
-        ids, lo, hi = undirected_driver_graph(*arrays)
-        del arrays
-        return sum(len(a) for a, _b, _c in _closed_wedges(lo, hi, len(ids)))
+    g = driver_graph(edges, src, dst)
+    if g is not None:
+        return sum(len(a) for a, _b, _c in _closed_wedges(g.lo, g.hi, len(g.ids)))
     o = _oriented(edges, src, dst).persist()
     wedges = o.alias("e1").join(
         o.alias("e2"), F.col("e1.v") == F.col("e2.u")
@@ -142,28 +132,17 @@ def triangle_count(
     return n
 
 
-def triangles_per_vertex(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
-) -> DataFrame:
+def triangles_per_vertex(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """``(page_id, triangles)`` — per-vertex triangle participation counts.
     Vertices in no triangle get 0 iff they appear in ``edges``.  Small edge
     tables take the numpy driver lane (module docstring)."""
-    arrays = driver_edge_arrays(edges, src, dst, driver_threshold_bytes)
-    if arrays is not None:
-        u, v = arrays
-        loops = u[u == v]
-        ids, lo, hi = undirected_driver_graph(u, v)
-        del arrays, u, v
-        per = _per_vertex_counts(lo, hi, len(ids))
+    g = driver_graph(edges, src, dst)
+    if g is not None:
         # endpoint_vertices: vertices seen only on self-loops count 0
-        page_id = np.union1d(ids, loops)
-        tri = np.zeros(len(page_id), dtype=np.int64)
-        tri[np.searchsorted(page_id, ids)] = per
+        tri = np.zeros(len(g.ids) + len(g.loop_only), dtype=np.int64)
+        tri[: len(g.ids)] = _per_vertex_counts(g.lo, g.hi, len(g.ids))
         return edges.sparkSession.createDataFrame(
-            pa.table({"page_id": page_id, "triangles": tri})
+            pa.table({"page_id": np.concatenate((g.ids, g.loop_only)), "triangles": tri})
         )
     o = _oriented(edges, src, dst).persist()
     wedges = o.alias("e1").join(
