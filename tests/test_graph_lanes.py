@@ -1,6 +1,8 @@
-"""Driver lanes of label propagation and triangle counting.
+"""Driver lanes of connected components, BFS, label propagation and
+triangle counting.
 
 Edge tables read from parquet carry a real (small) size estimate, so
+``connected_components``, ``bfs_distances``, ``multi_source_bfs``,
 ``label_propagation``, ``triangle_count`` and ``triangles_per_vertex`` run
 them in numpy on the driver; the same rows as a ``createDataFrame`` list
 report an unknown size and take the distributed lane.  Both lanes must give
@@ -18,10 +20,14 @@ import numpy as np
 import pytest
 
 from wikipath_spark.operators._loop import undirected_driver_graph
+from wikipath_spark.operators.bfs import bfs_distances, multi_source_bfs
+from wikipath_spark.operators.components import connected_components
 from wikipath_spark.operators.labelprop import label_propagation
 from wikipath_spark.operators.triangles import triangle_count, triangles_per_vertex
 
 # the package re-exports functions over these submodule names
+bfs = importlib.import_module("wikipath_spark.operators.bfs")
+cc = importlib.import_module("wikipath_spark.operators.components")
 lp = importlib.import_module("wikipath_spark.operators.labelprop")
 tr = importlib.import_module("wikipath_spark.operators.triangles")
 
@@ -46,8 +52,8 @@ LANE_CASES = {
 
 @pytest.fixture()
 def lane_calls(monkeypatch):
-    """Counts entries into the LPA and triangle driver kernels."""
-    calls = {"lpa": 0, "triangles": 0}
+    """Counts entries into the CC, BFS, LPA and triangle driver kernels."""
+    calls = {"cc": 0, "bfs": 0, "lpa": 0, "triangles": 0}
 
     def spy(mod, name, key):
         real = getattr(mod, name)
@@ -58,9 +64,60 @@ def lane_calls(monkeypatch):
 
         monkeypatch.setattr(mod, name, wrapped)
 
+    spy(cc, "_cc_driver_numpy", "cc")
+    spy(bfs, "_bfs_driver_numpy", "bfs")
     spy(lp, "_lpa_driver", "lpa")
     spy(tr, "_closed_wedges", "triangles")
     return calls
+
+
+def test_cc_driver_lane_matches_distributed(parquet, edges_df, lane_calls):
+    """The driver lane (numpy min-label pointer jumping) labels every vertex
+    as the alternating-star lane does, and drops self-loop-only vertices."""
+    edge_list = [(i, (i * 7 + 3) % 40) for i in range(40)] + [
+        (100, 101), (101, 102), (200, 200),  # chain + self-loop-only vertex
+        (300, 301), (301, 300),
+    ]
+
+    def components(edges):
+        return sorted((r.page_id, r.component) for r in connected_components(edges).collect())
+
+    fast = components(parquet("edges", edge_list))
+    assert lane_calls["cc"] == 1
+    slow = components(edges_df(edge_list))
+    assert lane_calls["cc"] == 1
+    assert fast == slow and len(fast) > 0
+    assert 200 not in {p for p, _ in fast}  # self-loop-only vertex absent
+
+
+def test_bfs_driver_lane_matches_distributed(parquet, edges_df, lane_calls):
+    """The driver CSR lane returns the exact rows of the distributed frontier
+    loop, including the seed row of a sink-only or absent source and the
+    max_depth cutoff."""
+    edge_list = [(i, i + 1) for i in range(30)] + [(0, 40), (40, 41), (99, 0)]
+    on_disk, reference = parquet("edges", edge_list), edges_df(edge_list)
+
+    def distances(edges, source):
+        return sorted(
+            (r.page_id, r.distance)
+            for r in bfs_distances(edges, source, max_depth=5).collect()
+        )
+
+    for source in (0, 41, 123):  # mid-graph, sink-only vertex, absent vertex
+        fast = distances(on_disk, source)
+        slow = distances(reference, source)
+        assert fast == slow, f"source {source}: {fast} != {slow}"
+
+    def batch(edges):
+        return sorted(
+            (r.source, r.page_id, r.distance)
+            for r in multi_source_bfs(edges, [0, 99, 41], max_depth=6).collect()
+        )
+
+    fast = batch(on_disk)
+    slow = batch(reference)
+    assert fast == slow and len(fast) > 0
+    assert lane_calls["bfs"] == 4
 
 
 def _labels(edges, **kw):
@@ -129,8 +186,8 @@ def _peak_bytes(fn) -> int:
 
 def test_driver_kernels_peak_memory():
     """The LPA and triangle kernels, from the collected endpoint arrays to
-    the result, stay within 128 B per input edge (the driver's RSS is a
-    gated benchmark metric)."""
+    the result, stay within 128 B per input edge, and the BFS kernel within
+    64 (the driver's RSS is a gated benchmark metric)."""
     rng = np.random.default_rng(3)
     src, dst = rng.integers(0, 12_000, 66_000), rng.integers(0, 12_000, 66_000)
 
@@ -142,6 +199,9 @@ def test_driver_kernels_peak_memory():
         g = undirected_driver_graph(src, dst)
         tr._per_vertex_counts(g.lo, g.hi, len(g.ids))
 
-    for kernel in (lpa, triangles):
+    def bfs_one_source():
+        bfs._bfs_driver_numpy(src, dst, [int(src[0])], 30, lambda: None)
+
+    for kernel, bound in ((lpa, 128), (triangles, 128), (bfs_one_source, 64)):
         per_edge = _peak_bytes(kernel) / len(src)
-        assert per_edge <= 128, f"{kernel.__name__}: {per_edge:.0f} B per edge"
+        assert per_edge <= bound, f"{kernel.__name__}: {per_edge:.0f} B per edge"

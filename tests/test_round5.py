@@ -319,45 +319,6 @@ def test_oracle_fixpoint_guard_detects_under_convergence():
         con.close()
 
 
-def test_checkpoint_every_gt1_keeps_supporting_checkpoint_alive(spark, edges_df):
-    """With checkpoint_every > 1 the loop may end on a persist-only frame
-    whose recompute path runs THROUGH the last checkpoint — those blocks
-    must stay alive for the caller (released only when a newer checkpoint
-    supersedes them), and the mixed cadence must not change the numbers."""
-    e = edges_df(_CHAIN_EDGES)
-    v = spark.range(0, 41).selectExpr("id as page_id")
-    base = {r.page_id: r.rank for r in
-            pagerank(e, vertices=v, tol=0.0, max_iter=5, checkpoint_every=1).ranks.collect()}
-    res = pagerank(e, vertices=v, tol=0.0, max_iter=5, checkpoint_every=3)
-    # iteration 5 took the persist-only branch; iteration 3's checkpoint backs it
-    got = {r.page_id: r.rank for r in res.ranks.collect()}
-    assert got == base
-    # the result must survive repeated materialization (a released supporting
-    # checkpoint would make any recompute of the persist-only frame fatal)
-    assert res.ranks.count() == len(base)
-    assert {r.page_id: r.rank for r in res.ranks.collect()} == base
-    # disposal API: the ids riding the result cover the deferred checkpoint
-    assert getattr(res.ranks, "_wps_ckpt_rdd_ids", None)
-    from wikipath_spark.operators._loop import release_checkpoint
-
-    release_checkpoint(res.ranks)
-
-
-def test_label_propagation_checkpoint_every_gt1_matches(spark, edges_df):
-    import warnings as _w
-
-    from wikipath_spark.operators.labelprop import label_propagation
-
-    e = edges_df(_CHAIN_EDGES)
-    with _w.catch_warnings():
-        _w.simplefilter("ignore")
-        a = {r.page_id: r.label for r in label_propagation(e, max_iter=5).collect()}
-        res = label_propagation(e, max_iter=5, checkpoint_every=3)
-    b = {r.page_id: r.label for r in res.collect()}
-    assert a == b
-    assert {r.page_id: r.label for r in res.collect()} == a  # re-materializable
-
-
 # ---------------------------------------------------------------------------
 # driver-side BFS fast lane: whole request = zero Spark jobs (serve parity)
 # ---------------------------------------------------------------------------

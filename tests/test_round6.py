@@ -97,69 +97,6 @@ def test_ngram_vocab_cap_routes_to_prefix(spark):
     assert len(out) > 0
 
 
-def test_cc_driver_lane_matches_distributed(spark, tmp_path):
-    """connected_components' driver union-find lane (numpy min-label pointer
-    jumping, taken when Catalyst's size estimate is small) must label every
-    vertex identically to the alternating-star lane — including dropping
-    self-loop-only vertices."""
-    from wikipath_spark.operators.components import connected_components
-
-    edges = [(i, (i * 7 + 3) % 40) for i in range(40)] + [
-        (100, 101), (101, 102), (200, 200),  # chain + self-loop-only vertex
-        (300, 301), (301, 300),
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    path = str(tmp_path / "cc_edges.parquet")
-    df.write.mode("overwrite").parquet(path)
-    on_disk = spark.read.parquet(path)  # real (small) size estimate → driver lane
-    fast = sorted(
-        (r.page_id, r.component) for r in connected_components(on_disk).collect()
-    )
-    slow = sorted(
-        (r.page_id, r.component)
-        for r in connected_components(on_disk, driver_threshold_bytes=0).collect()
-    )
-    assert fast == slow and len(fast) > 0
-    assert 200 not in {p for p, _ in fast}  # self-loop-only vertex absent
-
-
-def test_bfs_driver_lane_matches_distributed(spark, tmp_path):
-    """bfs_distances / multi_source_bfs driver CSR lane must return the
-    exact rows of the distributed frontier loop — including the seed row
-    for a source with no outgoing edges and the max_depth cutoff."""
-    from wikipath_spark.operators.bfs import bfs_distances, multi_source_bfs
-
-    edges = [(i, i + 1) for i in range(30)] + [(0, 40), (40, 41), (99, 0)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    path = str(tmp_path / "bfs_edges.parquet")
-    df.write.mode("overwrite").parquet(path)
-    on_disk = spark.read.parquet(path)  # real (small) estimate → driver lane
-
-    for source in (0, 41, 123):  # mid-graph, sink-only vertex, absent vertex
-        fast = sorted(
-            (r.page_id, r.distance)
-            for r in bfs_distances(on_disk, source, max_depth=5).collect()
-        )
-        slow = sorted(
-            (r.page_id, r.distance)
-            for r in bfs_distances(
-                on_disk, source, max_depth=5, driver_threshold_bytes=0
-            ).collect()
-        )
-        assert fast == slow, f"source {source}: {fast} != {slow}"
-    fast = sorted(
-        (r.source, r.page_id, r.distance)
-        for r in multi_source_bfs(on_disk, [0, 99, 41], max_depth=6).collect()
-    )
-    slow = sorted(
-        (r.source, r.page_id, r.distance)
-        for r in multi_source_bfs(
-            on_disk, [0, 99, 41], max_depth=6, driver_threshold_bytes=0
-        ).collect()
-    )
-    assert fast == slow and len(fast) > 0
-
-
 def test_curate_fused_dedup_matches_three_rule_definition(spark):
     """curate_corpus fused rules (b)+(c) into one pair pass; the output must
     still satisfy the documented three-rule contract, including the chain

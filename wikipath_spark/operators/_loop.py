@@ -9,13 +9,16 @@ shuffle parallelism should track data volume rather than cores
 :class:`LoopState` is the one owner of the state frames of every Spark loop
 that replaces its state each superstep (PageRank and its fixed-point and
 vector twins, LPA, CC, k-core, coreness, distributed redirect compression):
-checkpoint cadence, release of superseded and abandoned frames, and the
-checkpoint ids carried on the result.
+a checkpoint every superstep, release of superseded and abandoned frames,
+and the checkpoint ids carried on the result.  ``shortest_paths`` uses it
+only to hold the frames it reads and release them on every exit.
 
 :func:`driver_edge_arrays` is the one size gate of every driver-side
-small-graph lane, and :func:`driver_graph` puts the one undirected graph the
-CC, LPA and triangle lanes run on (:func:`undirected_driver_graph`) behind
-it.
+small-graph lane, and :func:`factorize_endpoints` the one factorization of
+their endpoints.  :func:`driver_graph` puts the one undirected graph the CC,
+LPA and triangle lanes run on (:func:`undirected_driver_graph`) behind the
+gate; the PageRank and BFS lanes index their directed edges through
+:func:`factorize_endpoints` directly.
 """
 
 from __future__ import annotations
@@ -161,32 +164,27 @@ def release_checkpoint(df) -> None:
 
 
 class LoopState:
-    """Context manager that owns one Spark loop's state frames and their release.
+    """Context manager that owns one Spark loop's frames and their release.
 
     The loop assigns its initial state to ``frame`` and hands each new state
     to :meth:`advance`; :meth:`hold` registers the frames it reads but never
     replaces.  The release policy lives only here:
 
-    - :meth:`advance` checkpoints (:func:`checkpoint_tracked`) on every
-      ``checkpoint_every``-th step and otherwise persists and counts.  A
-      checkpoint is self-contained, so the predecessor and any deferred frame
-      are released at once.  A persist-only successor recomputes THROUGH its
-      predecessor, and a localCheckpointed RDD cannot be recomputed, so a
-      checkpointed predecessor is deferred until a newer checkpoint exists; a
-      plain persisted one is unpersisted.
+    - :meth:`advance` checkpoints every step (:func:`checkpoint_tracked`; the
+      eager lineage truncation measured 2x faster than letting the plan grow
+      even 5 iterations, BENCH/BASELINE.md).  A checkpoint is
+      self-contained, so the predecessor is released at once.
     - Held frames are released on every exit.
     - On an exception (budget timeout, hook failure, corrupt checkpoint) the
-      current and deferred state are released too — a long-lived serve
-      session would otherwise keep executor storage per failed call.  On
-      success they stay alive for the caller, and :meth:`result` carries
-      their checkpoint ids on the returned frame so a caller that is done
-      with it can :func:`release_checkpoint` it.
+      current state is released too — a long-lived serve session would
+      otherwise keep executor storage per failed call.  On success it stays
+      alive for the caller, and :meth:`result` carries its checkpoint ids on
+      the returned frame so a caller that is done with it can
+      :func:`release_checkpoint` it.
     """
 
-    def __init__(self, checkpoint_every: int = 1):
+    def __init__(self):
         self.frame = None
-        self._every = checkpoint_every
-        self._deferred: list = []
         self._held: list = []
 
     def __enter__(self) -> "LoopState":
@@ -195,7 +193,7 @@ class LoopState:
     def __exit__(self, exc_type, exc, tb) -> None:
         stale = list(self._held)
         if exc_type is not None:
-            stale += [self.frame, *self._deferred]
+            stale.append(self.frame)
         for df in stale:
             if df is not None:
                 release_checkpoint(df)
@@ -204,37 +202,18 @@ class LoopState:
         self._held.append(df)
         return df
 
-    def advance(self, new, it: int):
-        """Materialize ``new`` as the state after step ``it`` and release or
-        defer its predecessor; returns the materialized frame."""
-        prev = self.frame
-        if it % self._every == 0:
-            # eager lineage truncation: measured 2x faster than letting the
-            # plan grow even 5 iterations (BENCH/BASELINE.md)
-            new = checkpoint_tracked(new)
-            stale = [prev, *self._deferred]
-            self._deferred = []
-        else:
-            new = new.persist()
-            new.count()
-            stale = []
-            if getattr(prev, "_wps_ckpt_rdd_ids", None):
-                self._deferred.append(prev)
-            else:
-                stale = [prev]
-        for df in stale:
-            if df is not None:
-                release_checkpoint(df)
-        self.frame = new
-        return new
+    def advance(self, new):
+        """Checkpoint ``new`` as the next state and release its predecessor;
+        returns the checkpointed frame."""
+        prev, self.frame = self.frame, checkpoint_tracked(new)
+        if prev is not None:
+            release_checkpoint(prev)
+        return self.frame
 
     def result(self, out):
-        """``out`` (read from the final state) carrying the checkpoint ids of
-        the final state and of the deferred checkpoint backing it."""
-        ids: set[int] = set()
-        for df in (self.frame, *self._deferred):
-            ids |= getattr(df, "_wps_ckpt_rdd_ids", None) or set()
-        out._wps_ckpt_rdd_ids = ids
+        """``out`` (read from the final state) carrying the final state's
+        checkpoint ids."""
+        out._wps_ckpt_rdd_ids = set(getattr(self.frame, "_wps_ckpt_rdd_ids", None) or ())
         return out
 
 
@@ -272,26 +251,40 @@ class DriverGraph(NamedTuple):
     loop_only: np.ndarray  # ids seen only on self-loops (not in ``ids``)
 
 
+def factorize_endpoints(src: np.ndarray, dst: np.ndarray, ids: np.ndarray | None = None):
+    """``(ids, si, di)``: sorted vertex ids and the int32 index into them of
+    each ``src`` and ``dst`` endpoint — the one factorization of every driver
+    lane.  ``ids`` defaults to the distinct endpoints; an endpoint outside a
+    given sorted, distinct ``ids`` gets index -1.
+
+    Kept lean, because the lanes share the driver process: ids come from
+    ``np.unique`` over each endpoint column plus ``searchsorted``, never an
+    inverse over the 2m-long concatenation, and the indices are int32."""
+    given = ids is not None
+    if not given:
+        ids = np.union1d(np.unique(src), np.unique(dst))
+
+    def index(col):
+        idx = np.searchsorted(ids, col).astype(np.int32)
+        if given and not len(ids):
+            idx.fill(-1)
+        elif given:  # past the end, or onto another id: outside the set
+            idx[ids.take(idx, mode="clip") != col] = -1
+        return idx
+
+    return ids, index(src), index(dst)
+
+
 def undirected_driver_graph(src: np.ndarray, dst: np.ndarray) -> DriverGraph:
     """Driver twin of :func:`symmetric_edges` over collected endpoint arrays.
 
     ``lo < hi`` index each distinct undirected pair, sorted by ``(lo, hi)``.
-    Index order is id order, so a minimum index is a minimum id.
-
-    Kept lean, because the lanes share the driver process: ids come from
-    ``np.unique`` over each endpoint column plus ``searchsorted``, never an
-    inverse over the 2m-long concatenation, and every per-edge index array
-    is int32."""
+    Index order is id order, so a minimum index is a minimum id."""
     keep = src != dst
     loops = src[~keep]
-    s, d = src[keep], dst[keep]
+    ids, a, b = factorize_endpoints(src[keep], dst[keep])
     del keep
-    ids = np.union1d(np.unique(s), np.unique(d))
     n = len(ids)
-    a = np.searchsorted(ids, s).astype(np.int32)
-    del s
-    b = np.searchsorted(ids, d).astype(np.int32)
-    del d
     lo = np.minimum(a, b)
     np.maximum(a, b, out=b)
     del a
@@ -308,14 +301,14 @@ def driver_graph(
     edges,
     src: str = "src",
     dst: str = "dst",
-    threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
     durable: bool = False,
     check_budget=None,
 ) -> DriverGraph | None:
-    """:func:`driver_edge_arrays` (same arguments) turned into the
-    :class:`DriverGraph` the CC, LPA and triangle lanes run on, or ``None``
-    for the distributed lane.  The collected arrays are dropped on return."""
-    arrays = driver_edge_arrays(edges, src, dst, threshold_bytes, durable, check_budget)
+    """:func:`driver_edge_arrays` (same arguments, default threshold) turned
+    into the :class:`DriverGraph` the CC, LPA and triangle lanes run on, or
+    ``None`` for the distributed lane.  The collected arrays are dropped on
+    return."""
+    arrays = driver_edge_arrays(edges, src, dst, durable=durable, check_budget=check_budget)
     return None if arrays is None else undirected_driver_graph(*arrays)
 
 

@@ -33,13 +33,15 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
-    DRIVER_THRESHOLD_BYTES,
+    LoopState,
     checkpoint_tracked,
     driver_edge_arrays,
+    factorize_endpoints,
     latest_checkpoint,
     release_checkpoint,
 )
@@ -184,6 +186,9 @@ def shortest_paths(
         res.length, res.count = 0, 1
         return res
 
+    def one(v: int) -> DataFrame:
+        return spark.createDataFrame([(v,)], "id long")
+
     # every superstep joins the frontier against the edge table; if the
     # caller passed a derived (un-cached) frame, each level would recompute
     # its whole lineage from source — materialize once
@@ -192,16 +197,11 @@ def shortest_paths(
     # per-level persists (dag layers) and checkpoints (edge projection,
     # flagged frontiers) must not outlive the request — a long-lived serve
     # session would otherwise accumulate executor storage per query (and a
-    # budget timeout would leak it even faster)
-    _persisted: list[DataFrame] = []
-    if not cached:
-        edges = checkpoint_tracked(edges)
-        _persisted.append(edges)
-
-    def one(v: int) -> DataFrame:
-        return spark.createDataFrame([(v,)], "id long")
-
-    try:
+    # budget timeout would leak it even faster): LoopState holds them and
+    # releases them on every exit
+    with LoopState() as state:
+        if not cached:
+            edges = state.hold(checkpoint_tracked(edges))
         # visited: (id, depth); DAG edge stores (pred, id, depth-of-id) per side
         fwd_visited, bwd_visited = one(src_id), one(dst_id)
         fwd_frontier, bwd_frontier = one(src_id), one(dst_id)
@@ -230,8 +230,7 @@ def shortest_paths(
                     fwd_frontier.join(edges, fwd_frontier["id"] == edges["src"])
                     .select(F.col("id").alias("pred"), F.col("dst").alias("id"))
                 )
-                new = cand.join(fwd_visited, "id", "left_anti").persist()
-                _persisted.append(new)
+                new = state.hold(cand.join(fwd_visited, "id", "left_anti").persist())
                 fwd_depth += 1
                 fwd_dag.append(new.withColumn("depth", F.lit(fwd_depth)))
                 obs = Observation(f"sp_f{fwd_depth}")
@@ -241,8 +240,7 @@ def shortest_paths(
                     bwd_frontier.join(edges, bwd_frontier["id"] == edges["dst"])
                     .select(F.col("id").alias("succ"), F.col("src").alias("id"))
                 )
-                new = cand.join(bwd_visited, "id", "left_anti").persist()
-                _persisted.append(new)
+                new = state.hold(cand.join(bwd_visited, "id", "left_anti").persist())
                 bwd_depth += 1
                 bwd_dag.append(new.withColumn("depth", F.lit(bwd_depth)))
                 obs = Observation(f"sp_b{bwd_depth}")
@@ -261,8 +259,7 @@ def shortest_paths(
                     F.sum(F.col("_meet").cast("long")).alias("m"),
                 )
             )
-            flagged = checkpoint_tracked(flagged)
-            _persisted.append(flagged)
+            flagged = state.hold(checkpoint_tracked(flagged))
             frontier = flagged.select("id")
             n_new = int(obs.get["n"] or 0)
             meet_n = int(obs.get["m"] or 0)
@@ -314,24 +311,20 @@ def shortest_paths(
 
         return _assemble_paths(res, fwd_edges, bwd_edges, src_id, dst_id, meet_ids)
 
-    finally:
-        for _df in _persisted:
-            release_checkpoint(_df)
 
 def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth, check_budget):
     """Vectorized driver-side level-synchronous BFS over numpy id arrays:
-    factorize ids, sort edges by source into a CSR layout, expand frontiers
-    with array slicing — the same distances the distributed frontier loop
-    produces (BFS distances are partitioning-independent).  Returns
-    [(source, page_id, distance), ...] including (s, s, 0) seeds."""
-    import numpy as np
-
-    ids, inv = np.unique(np.concatenate([src_ids, dst_ids]), return_inverse=True)
-    ui, vi = inv[: len(src_ids)], inv[len(src_ids):]
-    order = np.argsort(ui, kind="stable")
-    ui_s, vi_s = ui[order], vi[order]
-    starts = np.searchsorted(ui_s, np.arange(len(ids)))
-    ends = np.searchsorted(ui_s, np.arange(len(ids)) + 1)
+    factorize ids (:func:`factorize_endpoints`), sort edges by source into a
+    CSR layout, expand frontiers with array slicing — the same distances the
+    distributed frontier loop produces (BFS distances are
+    partitioning-independent).  Returns [(source, page_id, distance), ...]
+    including (s, s, 0) seeds."""
+    ids, ui, vi = factorize_endpoints(src_ids, dst_ids)
+    nbr = vi[np.argsort(ui, kind="stable")]
+    del vi
+    starts = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(ui, minlength=len(ids)), out=starts[1:])
+    del ui
     out: list[tuple[int, int, int]] = []
     for s in sources:
         pos = np.searchsorted(ids, s)
@@ -340,15 +333,10 @@ def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth, check_budget):
             continue  # source absent from the edge table: seed row only
         visited = np.zeros(len(ids), dtype=bool)
         visited[pos] = True
-        frontier = np.array([pos], dtype=np.int64)
+        frontier = [pos]
         for depth in range(1, max_depth + 1):
             check_budget()
-            if not len(frontier):
-                break
-            nbrs = np.concatenate(
-                [vi_s[starts[f]: ends[f]] for f in frontier]
-            ) if len(frontier) else np.array([], dtype=np.int64)
-            nbrs = np.unique(nbrs)
+            nbrs = np.unique(np.concatenate([nbr[starts[f]: starts[f + 1]] for f in frontier]))
             nbrs = nbrs[~visited[nbrs]]
             if not len(nbrs):
                 break
@@ -394,7 +382,6 @@ def bfs_distances(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Single-source BFS distances: :func:`multi_source_bfs` over
     ``[source]``, projected to ``(page_id, distance)`` for every vertex
@@ -403,7 +390,7 @@ def bfs_distances(
     SQL-oracle-checkable via a recursive CTE."""
     visited = _multi_source_bfs(
         edges, [source], src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-        resume, wall_budget(budget_s, "bfs_distances"), driver_threshold_bytes,
+        resume, wall_budget(budget_s, "bfs_distances"),
     )
     out = visited.select("page_id", "distance")
     out._wps_ckpt_rdd_ids = getattr(visited, "_wps_ckpt_rdd_ids", set())
@@ -420,7 +407,6 @@ def multi_source_bfs(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Batched single-source BFS: ``(source, page_id, distance)`` for every
     vertex reachable from each source within ``max_depth`` hops.
@@ -453,18 +439,18 @@ def multi_source_bfs(
     distributed."""
     return _multi_source_bfs(
         edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-        resume, wall_budget(budget_s, "multi_source_bfs"), driver_threshold_bytes,
+        resume, wall_budget(budget_s, "multi_source_bfs"),
     )
 
 
 def _multi_source_bfs(
     edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-    resume, check_budget, driver_threshold_bytes,
+    resume, check_budget,
 ) -> DataFrame:
     spark = edges.sparkSession
     sources = list(dict.fromkeys(int(s) for s in sources))
     arrays = driver_edge_arrays(
-        edges, src, dst, driver_threshold_bytes,
+        edges, src, dst,
         durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
     if arrays is not None:

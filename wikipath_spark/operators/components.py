@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from wikipath_spark.operators._loop import (
-    DRIVER_THRESHOLD_BYTES,
     LoopState,
     checkpoint_tracked,
     driver_graph,
@@ -103,7 +102,6 @@ def connected_components(
     checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
-    driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
 ) -> DataFrame:
     """Undirected connected components over a directed edge table.
 
@@ -127,7 +125,7 @@ def connected_components(
 
     check_budget = wall_budget(budget_s, "connected_components")
     g = driver_graph(
-        edges, src, dst, driver_threshold_bytes,
+        edges, src, dst,
         durable=checkpoint_mgr is not None or resume, check_budget=check_budget,
     )
     if g is not None:
@@ -175,7 +173,7 @@ def connected_components(
             )
             # the early rounds hold FULL symmetrized edge sets: the superseded
             # round's checkpoint is released as soon as this one exists
-            e = state.advance(new_e, i)
+            e = state.advance(new_e)
             # fingerprint equality is probabilistic (40-bit hash-sum + count);
             # collision odds are astronomically small and the cost of a stale
             # match is one extra idempotent round, not a wrong answer

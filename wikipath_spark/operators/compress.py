@@ -64,7 +64,6 @@ def compress_redirects(
     redirects: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iters: int | None = None,
     driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Compress an alias map ``(src, dst)`` to terminal targets.
@@ -101,7 +100,7 @@ def compress_redirects(
     with LoopState() as state:
         r = state.frame = checkpoint_tracked(r)
         n = r.count()
-        cap = max_iters if max_iters is not None else int(math.ceil(math.log2(n + 1))) + 2
+        cap = int(math.ceil(math.log2(n + 1))) + 2
 
         for it in range(cap):
             hop = r.select(F.col("src").alias("h_src"), F.col("dst").alias("h_dst"))
@@ -118,7 +117,7 @@ def compress_redirects(
                 .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n"))
                 .drop("_changed")
             )
-            r = state.advance(stepped, it)
+            r = state.advance(stepped)
             if int(obs.get["n"] or 0) == 0:
                 break
 

@@ -111,7 +111,7 @@ def coreness(
                 .select(F.col("u").alias("page_id"), "est")
                 .observe(obs, *fingerprint)
             )
-            est = state.advance(new_est, i)
+            est = state.advance(new_est)
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
             converged = sig == prev_sig
             if converged:
@@ -174,8 +174,7 @@ def k_core(
             e = state.advance(
                 e.join(keep, "u", "left_semi")
                 .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("n")),
-                i,
+                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
             n2 = int(obs.get["n"] or 0)
             converged = n2 == prev_n or n2 == 0

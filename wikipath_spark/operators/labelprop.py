@@ -98,7 +98,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 10,
-    checkpoint_every: int = 1,
     checkpoint_mgr=None,
     checkpoint_interval: int = 3,
     resume: bool = False,
@@ -130,9 +129,9 @@ def label_propagation(
     # (the same trick as connected_components; replaces an old-vs-new join +
     # count that cost an extra job per superstep).  Equality of a 40-bit
     # hash-sum fingerprint is probabilistic but astronomically safe, and a
-    # stale fixpoint only costs one extra (idempotent) round.  Checkpoint
-    # cadence and release of the label frames: LoopState.
-    with LoopState(checkpoint_every) as state:
+    # stale fixpoint only costs one extra (idempotent) round.  Checkpoints
+    # and release of the label frames: LoopState.
+    with LoopState() as state:
         sym = state.hold(symmetric_edges(edges, src, dst).persist())
         resumed = latest_checkpoint(
             checkpoint_mgr, resume, edges.sparkSession, ["page_id", "label"]
@@ -164,7 +163,7 @@ def label_propagation(
                     F.sum(F.pmod(F.xxhash64("page_id", "label"), F.lit(1 << 40))).alias("h"),
                 )
             )
-            labels = state.advance(picked, it)
+            labels = state.advance(picked)
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
             converged = sig == prev_sig
             if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged):

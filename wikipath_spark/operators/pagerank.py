@@ -17,17 +17,18 @@ reference's adjacency lists embody, database.rs:225-243) concentrate one
 groupBy key.  ``salt_partials=k`` turns the aggregation into salted two-stage
 (partial sums over (dst, salt) then final over dst) via operators/skew.py.
 
-Lineage: driver-side iteration grows the plan each superstep;
-``localCheckpoint`` every ``checkpoint_every`` steps truncates it
+Lineage: driver-side iteration grows the plan each superstep; a
+``localCheckpoint`` every superstep truncates it
 (:class:`~wikipath_spark.operators._loop.LoopState` owns the state frames),
 and an optional durable checkpoint (plans/checkpoint.py) makes runs
 resumable with per-partition lineage + convergence metrics.
 
 Driver lane: an edge table small enough for the driver (the shared
-``driver_edge_arrays`` gate of the CC and BFS lanes) skips the loop above and
-runs the same power iteration in numpy (:func:`_pagerank_driver`) — each
-distributed superstep is one Spark job of fixed scheduling cost whatever the
-graph size.
+``driver_edge_arrays`` gate of every driver lane) skips the loop above and
+runs the same power iteration in numpy (:func:`_pagerank_driver`) over edges
+indexed by the lanes' one ``factorize_endpoints`` — each distributed
+superstep is one Spark job of fixed scheduling cost whatever the graph
+size.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from wikipath_spark.operators._loop import (
     checkpoint_tracked,
     driver_edge_arrays,
     endpoint_vertices,
+    factorize_endpoints,
     latest_checkpoint,
     loop_confs,
 )
@@ -70,7 +72,6 @@ def pagerank(
     tol: float = 1e-6,
     max_iter: int = 100,
     salt_partials: int | None = None,
-    checkpoint_every: int = 1,
     on_superstep=None,
     checkpoint_mgr=None,
     checkpoint_interval: int = 10,
@@ -89,8 +90,8 @@ def pagerank(
     Catalyst size estimate is at most ``driver_threshold_bytes`` is
     collected once through Arrow and iterated in numpy by
     :func:`_pagerank_driver` — same damping, dangling mass, stop rule,
-    budget checks and result; ``salt_partials`` and ``checkpoint_every``
-    shape only the distributed plan.  Unknown-size plans report MaxValue
+    budget checks and result; ``salt_partials`` shapes only the
+    distributed plan.  Unknown-size plans report MaxValue
     and stay distributed; ``driver_threshold_bytes=0`` forces the
     distributed lane.  Its hook frame is ``(page_id, rank)``,
     built only when a hook is passed.
@@ -125,8 +126,8 @@ def pagerank(
     with loop_confs(spark, rows=n_edges) as sc_parts:
         return _pagerank_loop(
             spark, edges, vertices, damping, tol, max_iter, salt_partials,
-            checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-            resume, n_edges, sc_parts, check_budget,
+            on_superstep, checkpoint_mgr, checkpoint_interval, resume, n_edges,
+            sc_parts, check_budget,
         )
 
 
@@ -139,13 +140,22 @@ def _driver_graph(src, dst, vertex_ids):
     the dangling flags.  Out-degree counts every edge of an in-set src, also
     those to a dst outside the set — the distributed lane's join semantics,
     where such an edge's contribution is dropped."""
-    ids = np.unique(np.concatenate([src, dst]) if vertex_ids is None else vertex_ids)
-    src_in = np.isin(src, ids)
-    out_deg = np.bincount(np.searchsorted(ids, src[src_in]), minlength=len(ids))
-    keep = src_in & np.isin(dst, ids)
-    si, di = np.searchsorted(ids, src[keep]), np.searchsorted(ids, dst[keep])
-    order = np.lexsort((si, di))
-    si, di = si[order], di[order]
+    ids, si, di = factorize_endpoints(
+        src, dst, None if vertex_ids is None else np.unique(vertex_ids)
+    )
+    n = len(ids)
+    src_in = si >= 0
+    out_deg = np.bincount(si[src_in], minlength=n)
+    keep = src_in & (di >= 0)
+    del src_in
+    key = np.multiply(di[keep], n, dtype=np.int64)
+    key += si[keep]
+    del si, di, keep
+    key.sort()
+    si = (key % n).astype(np.int32)
+    key //= n
+    di = key.astype(np.int32)
+    del key
     return ids, si, di, 1.0 / out_deg[si], out_deg == 0
 
 
@@ -191,8 +201,8 @@ def _pagerank_driver(
 
 def _pagerank_loop(
     spark, edges, vertices, damping, tol, max_iter, salt_partials,
-    checkpoint_every, on_superstep, checkpoint_mgr, checkpoint_interval,
-    resume, n_edges, sc_parts, check_budget,
+    on_superstep, checkpoint_mgr, checkpoint_interval, resume, n_edges,
+    sc_parts, check_budget,
 ) -> PageRankResult:
     if vertices is None:
         vertices = endpoint_vertices(edges)
@@ -213,7 +223,7 @@ def _pagerank_loop(
     # setup itself (a corrupt checkpoint raising from load, a budget timeout
     # in-loop): a long-lived serve session would otherwise accumulate
     # executor storage per failed call
-    with LoopState(checkpoint_every) as state:
+    with LoopState() as state:
         # contribution edges: weight = 1/out_deg, partitioned once by src and
         # reused every superstep (the join's build side never re-shuffles).
         # checkpoint_tracked, not persist: a cached frame EMBEDS its whole
@@ -321,8 +331,7 @@ def _pagerank_loop(
                     F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"),
                     F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
                 )
-                .drop("_old"),
-                it,
+                .drop("_old")
             )
             metrics = obs.get
             delta, dangling_mass = metrics["d"], metrics["dm"] or 0.0
@@ -448,8 +457,7 @@ def pagerank_fixedpoint(
                     F.sum(
                         F.when(F.col("is_dangling"), F.col("rank_fp")).otherwise(F.lit(0).cast("long"))
                     ).alias("dm"),
-                ),
-                it,
+                )
             )
             dm = int(obs.get["dm"] or 0)
         return state.result(ranks.select("page_id", "rank_fp"))
@@ -636,8 +644,7 @@ def pagerank_multi(
             ranks = state.advance(
                 ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                .observe(obs, *dm_aggs),
-                it,
+                .observe(obs, *dm_aggs)
             )
             metrics = obs.get
             dm = [float(metrics[f"dm{i}"] or 0.0) for i in range(k)]
@@ -804,8 +811,7 @@ def pagerank_multi_fixedpoint(
             ranks = state.advance(
                 ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                .observe(obs, *dm_aggs),
-                it,
+                .observe(obs, *dm_aggs)
             )
             metrics = obs.get
             dm = [int(metrics[f"dm{i}"] or 0) for i in range(k)]
