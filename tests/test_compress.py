@@ -3,9 +3,26 @@
 
 from __future__ import annotations
 
+import importlib
+
+import pyarrow as pa
 import pytest
 
 from wikipath_spark.operators.compress import compress_redirects, resolve_through
+
+# the package re-exports the function over this submodule name
+compress_mod = importlib.import_module("wikipath_spark.operators.compress")
+
+
+def _alias_map(spark, pairs):
+    """``pairs`` as a local relation: a real size estimate, so the driver
+    walk takes it up to its row threshold (a ``createDataFrame`` list has an
+    unknown size and always goes distributed)."""
+    src, dst = zip(*pairs) if pairs else ((), ())
+    return spark.createDataFrame(
+        pa.table({"src": pa.array(src, pa.int64()), "dst": pa.array(dst, pa.int64())}),
+        "src long, dst long",
+    )
 
 FIXTURES = [
     # (name, input map, expected compressed map, reference lines)
@@ -27,7 +44,7 @@ FIXTURES = [
 @pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "distributed"])
 @pytest.mark.parametrize("name,inp,expected", FIXTURES, ids=[f[0] for f in FIXTURES])
 def test_compress_fixture(spark, name, inp, expected, threshold):
-    df = spark.createDataFrame(list(inp.items()), "src long, dst long")
+    df = _alias_map(spark, list(inp.items()))
     got = {
         r.src: r.dst
         for r in compress_redirects(df, driver_threshold=threshold).collect()
@@ -110,12 +127,32 @@ def test_compress_random_vs_oracle(spark, seed, threshold):
     rng = random.Random(seed)
     n = rng.randrange(5, 60)
     m = {s: rng.randrange(0, 70) for s in rng.sample(range(70), n)}
-    df = spark.createDataFrame(list(m.items()), "src long, dst long")
+    df = _alias_map(spark, list(m.items()))
     got = {
         r.src: r.dst
         for r in compress_redirects(df, driver_threshold=threshold).collect()
     }
     assert got == _compress_oracle(m)
+
+
+def test_compress_over_threshold_estimate_skips_driver_collect(spark, monkeypatch):
+    """An estimate above the driver-lane gate goes straight to pointer
+    doubling: no driver collect, and the same rows as the driver walk."""
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 20), (21, 20)]
+    want = sorted(compress_redirects(_alias_map(spark, pairs)).collect())
+    frame = _alias_map(spark, pairs)
+    collects, walks = [], []
+    frame_cls, real_walk = type(frame), compress_mod._compress_driver_side
+    real_collect = frame_cls.collect
+    monkeypatch.setattr(frame_cls, "collect", lambda df: collects.append(1) or real_collect(df))
+    monkeypatch.setattr(
+        compress_mod, "_compress_driver_side", lambda rows: walks.append(1) or real_walk(rows)
+    )
+    monkeypatch.setattr(compress_mod, "DRIVER_THRESHOLD_BYTES", 1)
+    out = compress_redirects(frame)
+    assert not collects and not walks
+    monkeypatch.undo()
+    assert sorted(out.collect()) == want == [(1, 4), (2, 4), (3, 4)]
 
 
 def test_resolve_through_identity_fallback(spark):

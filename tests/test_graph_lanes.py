@@ -1,5 +1,5 @@
 """Driver lanes of connected components, BFS, label propagation and
-triangle counting.
+triangle counting, and the driver memory of every driver lane.
 
 Edge tables read from parquet carry a real (small) size estimate, so
 ``connected_components``, ``bfs_distances``, ``multi_source_bfs``,
@@ -17,6 +17,7 @@ import tracemalloc
 import warnings
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from wikipath_spark.operators._loop import undirected_driver_graph
@@ -24,6 +25,7 @@ from wikipath_spark.operators.bfs import bfs_distances, multi_source_bfs
 from wikipath_spark.operators.components import connected_components
 from wikipath_spark.operators.labelprop import label_propagation
 from wikipath_spark.operators.triangles import triangle_count, triangles_per_vertex
+from wikipath_spark.plans.build import _resolve_on_driver
 
 # the package re-exports functions over these submodule names
 bfs = importlib.import_module("wikipath_spark.operators.bfs")
@@ -176,20 +178,48 @@ def test_lpa_durable_runs_stay_distributed(parquet, tmp_path, lane_calls):
 
 
 def _peak_bytes(fn) -> int:
+    """Peak Python heap (tracemalloc) plus peak Arrow memory pool bytes,
+    which tracemalloc does not see, while ``fn`` runs."""
+    default = pa.default_memory_pool()
+    pool = pa.proxy_memory_pool(default)
+    pa.set_memory_pool(pool)
     tracemalloc.start()
     try:
         fn()
-        return tracemalloc.get_traced_memory()[1]
+        return tracemalloc.get_traced_memory()[1] + pool.max_memory()
     finally:
         tracemalloc.stop()
+        pa.set_memory_pool(default)
+
+
+def _extraction_table(rng, n: int, m: int) -> pa.Table:
+    """A collected extraction as the build's driver lane reads it: ``n``
+    pages in 4 repos, every 12th an alias, ``m`` refs within each repo."""
+    paths = [f"src/pkg{i % 16}/mod{i}.py" for i in range(n)]
+    counts = np.diff(np.concatenate([[0], np.sort(rng.integers(0, m, n - 1)), [m]]))
+    targets = rng.integers(0, n // 4, m) * 4 + np.repeat(np.arange(n) % 4, counts)
+    return pa.table({
+        "repo": [f"r{i % 4}" for i in range(n)],
+        "path": paths,
+        "shard": rng.integers(0, 16, n),
+        "alias": [paths[(i + 4) % n] if i % 12 == 0 else None for i in range(n)],
+        "refs": pa.ListArray.from_arrays(
+            pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32()),
+            pa.array([paths[t] for t in targets]),
+        ),
+        "truncated": np.zeros(n, bool),
+    })
 
 
 def test_driver_kernels_peak_memory():
     """The LPA and triangle kernels, from the collected endpoint arrays to
     the result, stay within 128 B per input edge, and the BFS kernel within
-    64 (the driver's RSS is a gated benchmark metric)."""
+    64; the build's resolution, from the collected extraction to the
+    tables, within 640 B per source row (12k pages, 66k refs; the driver's
+    RSS is a gated benchmark metric)."""
     rng = np.random.default_rng(3)
     src, dst = rng.integers(0, 12_000, 66_000), rng.integers(0, 12_000, 66_000)
+    extraction = _extraction_table(rng, 12_000, 66_000)
 
     def lpa():
         g = undirected_driver_graph(src, dst)
@@ -205,3 +235,9 @@ def test_driver_kernels_peak_memory():
     for kernel, bound in ((lpa, 128), (triangles, 128), (bfs_one_source, 64)):
         per_edge = _peak_bytes(kernel) / len(src)
         assert per_edge <= bound, f"{kernel.__name__}: {per_edge:.0f} B per edge"
+
+    def build():
+        assert _resolve_on_driver(extraction)[4]["edges"] > 60_000
+
+    per_row = _peak_bytes(build) / extraction.num_rows
+    assert per_row <= 640, f"build: {per_row:.0f} B per source row"

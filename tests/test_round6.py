@@ -219,8 +219,11 @@ def test_compress_probe_boundary_lanes_identical(spark):
     both produce the identical compressed map."""
     from wikipath_spark.operators.compress import compress_redirects
 
+    import pandas as pd
+
     chains = [(i, i + 100) for i in range(1, 11)] + [(200, 201), (201, 202)]
-    df = spark.createDataFrame(chains, "src long, dst long")
+    # a local relation: its real size estimate lets the row probe run
+    df = spark.createDataFrame(pd.DataFrame(chains, columns=["src", "dst"]))
     n = len(chains)
     driver = {
         (r.src, r.dst)

@@ -14,8 +14,9 @@ and the checkpoint ids carried on the result.  ``shortest_paths`` uses it
 only to hold the frames it reads and release them on every exit.
 
 :func:`driver_edge_arrays` is the one size gate of every driver-side
-small-graph lane, and :func:`factorize_endpoints` the one factorization of
-their endpoints.  :func:`driver_graph` puts the one undirected graph the CC,
+small-graph lane (the graph build's driver lane gates on the same
+:data:`DRIVER_THRESHOLD_BYTES`), and :func:`factorize_endpoints` the one
+factorization of their endpoints.  :func:`driver_graph` puts the one undirected graph the CC,
 LPA and triangle lanes run on (:func:`undirected_driver_graph`) behind the
 gate; the PageRank and BFS lanes index their directed edges through
 :func:`factorize_endpoints` directly.
@@ -73,9 +74,14 @@ def loop_confs(spark: SparkSession, rows: int | None = None, rows_per_partition:
 
 def estimated_bytes(df) -> int:
     """Catalyst's optimizer size estimate for a frame — NO job.  Source- and
-    cache-derived plans carry real sizes; unknown plans report Long.MaxValue,
-    which safely routes adaptive driver/distributed lane choices to the
-    distributed lane."""
+    cache-derived plans carry real sizes, and so does a local relation:
+    ``createDataFrame`` of a pandas frame or an Arrow table up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB).  Unknown
+    plans — a ``createDataFrame`` list, or an Arrow table above that
+    threshold, which arrives as an RDD (``LogicalRDD``) — report
+    Long.MaxValue, which safely routes adaptive driver/distributed lane
+    choices to the distributed lane.  Joins report the product of their
+    sides' sizes, far above the real one."""
     try:
         return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:

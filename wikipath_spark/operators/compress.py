@@ -26,7 +26,12 @@ import math
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import LoopState, checkpoint_tracked
+from wikipath_spark.operators._loop import (
+    DRIVER_THRESHOLD_BYTES,
+    LoopState,
+    checkpoint_tracked,
+    estimated_bytes,
+)
 
 
 def _compress_driver_side(rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -75,7 +80,11 @@ def compress_redirects(
     Adaptive physical strategy: alias maps are a small fraction of the page
     set by nature, so up to ``driver_threshold`` rows the compression is the
     reference's own memoized driver-side walk (collect → walk → parallelize;
-    exact, one pass).  Above it, distributed pointer doubling — note cycle
+    exact, one pass).  Above it, distributed pointer doubling.  A map whose
+    Catalyst estimate (:func:`~wikipath_spark.operators._loop.estimated_bytes`)
+    exceeds the driver-lane gate goes distributed without the row probe, so
+    a large map is never collected only to be discarded; unknown-size
+    inputs (a ``createDataFrame`` list, a join) count as large.  Note cycle
     rows never stabilize under pointer jumping (their dst rotates each
     round), so that path always runs its full ⌈log2 n⌉ cap when cycles
     exist; both paths produce identical results (tested)."""
@@ -90,11 +99,12 @@ def compress_redirects(
     # action instead of the old checkpoint + count + collect triple.  The walk
     # result is row-order independent (each chain's terminal is unique and
     # cycle membership is a property of the map, not the visit order).
-    probe = r.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        spark = redirects.sparkSession
-        compressed = _compress_driver_side([(row.src, row.dst) for row in probe])
-        return spark.createDataFrame(compressed or [], "src long, dst long")
+    if estimated_bytes(r) <= DRIVER_THRESHOLD_BYTES:
+        probe = r.limit(driver_threshold + 1).collect()
+        if len(probe) <= driver_threshold:
+            spark = redirects.sparkSession
+            compressed = _compress_driver_side([(row.src, row.dst) for row in probe])
+            return spark.createDataFrame(compressed or [], "src long, dst long")
     # distributed pointer doubling: NOW materialize once (every iteration
     # re-reads the full table) and take the exact count for the log2 cap
     with LoopState() as state:

@@ -18,18 +18,44 @@ The Spark re-expression of the reference's whole build (build.rs:19-134):
 
 Parse-statistics counters (A5/A6, parse.rs:500-534) ride along via
 ``df.observe`` — no extra jobs.
+
+Driver lane.  Steps 2-5 are many small Spark jobs (dense-id window, offset
+probe, compression probe, broadcast joins, distinct) whose cold planning
+cost dominates a build of a few thousand pages.  When the checkpointed
+extraction's Catalyst estimate (``_loop.estimated_bytes``) is at most the
+one driver-lane gate (``_loop.DRIVER_THRESHOLD_BYTES``), one ``toArrow()``
+of ``(_rowid, repo, path, shard, alias, refs, truncated)`` feeds an
+Arrow/numpy resolution instead (:func:`_driver_build`); ``edges`` and
+``redirects`` come back as local relations with a real size estimate, and
+``pages`` is the checkpointed extraction joined to a broadcast ``(_rowid,
+page_id)`` table, so path strings never cross back.  Unknown-size sources (a
+``createDataFrame`` list) report no estimate and stay distributed, as do
+sources with null keys or, without ``check_conflicts``, duplicate
+``(repo, path)`` rows.
+
+Id order (both lanes): ``page_id`` is the rank of a page by ``(repo,
+pmod(xxhash64(path), 16), path)``, so both lanes give every page the same
+id and every output table the same rows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wikipath_spark.functions.extract import extract_refs_sql, extract_refs_udf, sha256_col
-from wikipath_spark.operators.compress import compress_redirects, resolve_through
+from wikipath_spark.operators._loop import DRIVER_THRESHOLD_BYTES, estimated_bytes
+from wikipath_spark.operators.compress import (
+    _compress_driver_side,
+    compress_redirects,
+    resolve_through,
+)
 
 
 @dataclass
@@ -40,9 +66,14 @@ class GraphTables:
     stats: dict = field(default_factory=dict)
 
 
+_SHARDS = 16  # dense-id hash shards per partition before any escalation
 _SHARD_TARGET_ROWS = 8_000_000  # max rows one dense-id window task should sort
 _DRIVER_OFFSET_LIMIT = 100_000  # (repos × shards) rows above which offsets go distributed
 _BROADCAST_PAGES_ROWS = 5_000_000  # id-probe side broadcast cap (~350 MB framed)
+
+
+def _shard_col(order_cols, n_shards: int):
+    return F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_shards))
 
 
 def assign_dense_ids(
@@ -84,13 +115,12 @@ def assign_dense_ids(
     window task sorts more than the target, at the cost of one extra pass.
     """
     auto = shards is None
-    shards = 16 if auto else shards
+    shards = _SHARDS if auto else shards
     spark = df.sparkSession
     probe_limit = _DRIVER_OFFSET_LIMIT
 
     def _counts(n_shards: int):
-        shard = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_shards))
-        sharded = df.withColumn("_shard", shard)
+        sharded = df.withColumn("_shard", _shard_col(order_cols, n_shards))
         counts = sharded.groupBy(partition_col, "_shard").count()
         # ordered limit(L+1): if fewer than L+1 rows come back we hold the
         # FULL ordered count set (limit returns everything when the input is
@@ -157,10 +187,14 @@ def build_graph(
     """Run the full build. ``extractor`` ∈ {"pandas", "sql"} (identical
     semantics; pandas is the mandated Arrow path, sql the JVM benchmark).
     ``check_conflicts``: fail on duplicate (repo, path) source rows — A7,
-    parse.rs:203-209 parity."""
+    parse.rs:203-209 parity.  Small sources take the driver lane (module
+    docstring); ``broadcast_redirects`` only shapes the distributed one."""
     extract = extract_refs_udf if extractor == "pandas" else extract_refs_sql
 
     extracted = repos_df.select(
+        # row key of the driver lane's (_rowid, page_id) join; frozen by the
+        # checkpoint below, so the lane and its join read the same values
+        F.monotonically_increasing_id().alias("_rowid"),
         "repo",
         "path",
         "commit",
@@ -174,6 +208,10 @@ def build_graph(
     # whole build at scale — would run twice.  `content` is already projected
     # away, so the checkpoint holds only refs/alias/sha columns.
     extracted = extracted.localCheckpoint(eager=True)
+    if estimated_bytes(extracted) <= DRIVER_THRESHOLD_BYTES:
+        graph = _driver_build(extracted, check_conflicts, with_stats)
+        if graph is not None:
+            return graph
 
     page_rows = extracted.select(
         "repo",
@@ -186,17 +224,6 @@ def build_graph(
         F.col("_x.alias").alias("_alias"),
         F.col("_x.truncated").alias("_truncated"),
     )
-    # parse-stats counters piggyback on the first materialization — the
-    # analogue of the reference's per-file counter block (A6, parse.rs:500-534)
-    obs = Observation("parse_stats") if with_stats else None
-    if obs is not None:
-        page_rows = page_rows.observe(
-            obs,
-            F.count(F.lit(1)).alias("pages"),
-            F.sum(F.when(F.col("is_alias"), 1).otherwise(0)).alias("aliases"),
-            F.sum(F.size("_refs")).alias("raw_refs"),
-            F.sum(F.when(F.col("_truncated"), 1).otherwise(0)).alias("truncated_rows"),
-        )
     # conflict detection (A7, parse.rs:203-209) rides the dense-id window
     # pass as a lag-equality flag + observe on the pages materialization —
     # the previous groupBy+limit+collect job over the window output was the
@@ -210,6 +237,18 @@ def build_graph(
         assigned = assigned.observe(
             conflict_obs, F.sum(F.col("_dup").cast("long")).alias("dups")
         ).drop("_dup")
+    # parse-stats counters piggyback on the pages materialization — the
+    # analogue of the reference's per-file counter block (A6, parse.rs:500-534).
+    # After the window exchange, so an input with no partitions still reports.
+    obs = Observation("parse_stats") if with_stats else None
+    if obs is not None:
+        assigned = assigned.observe(
+            obs,
+            F.count(F.lit(1)).alias("pages"),
+            F.sum(F.when(F.col("is_alias"), 1).otherwise(0)).alias("aliases"),
+            F.sum(F.size("_refs")).alias("raw_refs"),
+            F.sum(F.when(F.col("_truncated"), 1).otherwise(0)).alias("truncated_rows"),
+        )
     pages = assigned.persist()
     n_pages = pages.count()  # materializes the cache + collects the observes
 
@@ -270,8 +309,158 @@ def build_graph(
             "redirects_compressed": redirects.count(),
             "edges": edges.count(),
         }
-        stats.update({k: int(v) for k, v in obs.get.items()})
+        stats.update({k: int(v or 0) for k, v in obs.get.items()})
         # dangling references dropped by the inner resolution join (P4)
         stats["dangling_dropped"] = stats["raw_refs"] - stats["resolved_refs"]
         resolved.unpersist()
     return GraphTables(pages=pages_out, redirects=redirects, edges=edges, stats=stats)
+
+
+def _local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """``columns`` as a local relation, which carries a real size estimate,
+    so the operators' driver lanes take it.  Arrow tables above
+    ``spark.sql.execution.arrow.localRelationThreshold`` arrive as an RDD of
+    unknown size instead; those are persisted and counted, which gives them
+    the cache's measured size.  (The check reads the analyzed plan: an
+    optimized plan read before the persist would keep the unknown size.)"""
+    df = spark.createDataFrame(pa.table(columns), schema)
+    if not df._jdf.queryExecution().analyzed().getClass().getName().endswith("LocalRelation"):
+        df = df.persist()
+        df.count()
+    return df
+
+
+def _driver_build(
+    extracted: DataFrame, check_conflicts: bool, with_stats: bool
+) -> GraphTables | None:
+    """The driver lane: one Arrow collect of the checkpointed extraction,
+    :func:`_resolve_on_driver`, and the tables back as local relations.
+    ``None`` where :func:`_resolve_on_driver` declines."""
+    spark = extracted.sparkSession
+    tbl = extracted.select(
+        "_rowid",
+        "repo",
+        "path",
+        _shard_col(("path",), _SHARDS).alias("shard"),
+        F.col("_x.alias").alias("alias"),
+        F.col("_x.refs").alias("refs"),
+        F.col("_x.truncated").alias("truncated"),
+    ).toArrow()
+    out = _resolve_on_driver(tbl, check_conflicts)
+    if out is None:
+        return None
+    page_id, red, src, dst, stats = out
+    ids = _local_frame(
+        spark,
+        {"_rowid": tbl.column("_rowid").to_numpy(), "page_id": page_id},
+        "_rowid long, page_id long",
+    )
+    del tbl
+    pages = extracted.join(F.broadcast(ids), "_rowid").select(
+        "repo",
+        "path",
+        "lang",
+        "commit",
+        "content_sha256",
+        F.col("_x.alias").isNotNull().alias("is_alias"),
+        "page_id",
+    )
+    return GraphTables(
+        pages=pages,
+        redirects=_local_frame(spark, {"src": red[:, 0], "dst": red[:, 1]}, "src long, dst long"),
+        edges=_local_frame(spark, {"src": src, "dst": dst}, "src long, dst long"),
+        stats=stats if with_stats else {},
+    )
+
+
+def _resolve_on_driver(tbl: pa.Table, check_conflicts: bool = True):
+    """Steps 2-5 of the build over the collected extraction ``tbl``
+    (``repo``, ``path``, ``shard``, ``alias``, ``refs``, ``truncated``).
+
+    Returns ``(page_id, redirects, src, dst, stats)``: the int64 id of each
+    row of ``tbl``, the compressed ``(src, dst)`` alias map as a ``(k, 2)``
+    array sorted by ``src``, the distinct self-free edges sorted by
+    ``(src, dst)``, and the distributed lane's ``with_stats`` counters.
+    Returns ``None`` (take the distributed lane) for a null ``repo`` or
+    ``path``, for duplicate ``(repo, path)`` rows when ``check_conflicts``
+    is off (their ids depend on the window's row order), and above the row
+    count at which dense-id sharding escalates.
+
+    Kept lean, because the later driver lanes share the process: int64
+    numpy arrays and Arrow kernels, no pandas, no Acero joins and no
+    per-row Python objects beyond the alias map."""
+    n = tbl.num_rows
+    repo, path = tbl.column("repo"), tbl.column("path")
+    if repo.null_count or path.null_count or n > _SHARD_TARGET_ROWS:
+        return None
+
+    # dense ids: rank by (repo, shard, path), assign_dense_ids' order
+    order = pc.sort_indices(
+        tbl, sort_keys=[("repo", "ascending"), ("shard", "ascending"), ("path", "ascending")]
+    ).to_numpy()
+    page_id = np.empty(n, np.int64)
+    page_id[order] = np.arange(n)
+    del order
+
+    # (repo, path) -> page_id: one sorted int64 key per page, repo code * m
+    # + path code
+    paths = pc.unique(path)
+    m = len(paths)
+    repo_code = pc.index_in(repo, pc.unique(repo)).to_numpy().astype(np.int64)
+    key = repo_code * m + pc.index_in(path, paths).to_numpy()
+    by_key = np.argsort(key)
+    key = key[by_key]
+    dup = np.flatnonzero(key[1:] == key[:-1])
+    if dup.size:
+        if not check_conflicts:
+            return None
+        row = int(by_key[dup[0]])
+        raise ValueError(
+            f"conflicting source rows: ({repo[row].as_py()}, {path[row].as_py()}) "
+            f"appears {np.count_nonzero(key == key[dup[0]])} times"
+        )
+    id_by_key = page_id[by_key]
+    del by_key
+
+    def resolve(rows: np.ndarray, targets) -> tuple[np.ndarray, np.ndarray]:
+        """``(src, dst)`` page ids of each ``rows[i]`` -> ``targets[i]``
+        path in the same repo; unresolvable targets drop (P4)."""
+        code = pc.fill_null(pc.index_in(targets, paths), -1).to_numpy()
+        want = repo_code[rows] * m + code
+        pos = np.searchsorted(key, want)
+        hit = (code >= 0) & (key.take(pos, mode="clip") == want)
+        return page_id[rows[hit]], id_by_key[pos[hit]]
+
+    # alias rows -> raw redirects, compressed by the reference's walk (G1)
+    alias = tbl.column("alias")
+    is_alias = pc.is_valid(alias).to_numpy(zero_copy_only=False)
+    red_src, red_dst = resolve(np.flatnonzero(is_alias), pc.drop_null(alias))
+    compressed = _compress_driver_side(list(zip(red_src.tolist(), red_dst.tolist())))
+    red = np.array(compressed, np.int64).reshape(-1, 2)
+    red = red[np.argsort(red[:, 0])]
+
+    # reference rows -> edges: resolve, map both ends through the compressed
+    # map (J4), drop self-links (P3), dedup (A2)
+    refs = tbl.column("refs")
+    parent = pc.list_parent_indices(refs).to_numpy()
+    src, dst = resolve(parent, pc.list_flatten(refs))
+    raw_refs, resolved_refs = len(parent), len(src)
+    del parent
+    target = np.arange(n, dtype=np.int64)
+    target[red[:, 0]] = red[:, 1]
+    src, dst = target[src], target[dst]
+    keep = src != dst
+    pair = src[keep] * max(n, 1) + dst[keep]
+    del src, dst, keep, target
+    src, dst = np.divmod(np.unique(pair), max(n, 1))
+    stats = {
+        "resolved_refs": resolved_refs,
+        "redirects_compressed": len(red),
+        "edges": len(src),
+        "pages": n,
+        "aliases": int(np.count_nonzero(is_alias)),
+        "raw_refs": raw_refs,
+        "truncated_rows": int(pc.sum(tbl.column("truncated")).as_py() or 0),
+        "dangling_dropped": raw_refs - resolved_refs,
+    }
+    return page_id, red, src, dst, stats
