@@ -611,7 +611,7 @@ def q_graph_pagerank_multi(spark, sf):  # rows-only: float vector ranks
     (hash-exact float vectors are impossible across engines); correctness is
     carried by the numpy oracle + csr≡sql (1e-12) + per-component ranking ≡
     the ORACLED integer twin graph_pagerank_personalized
-    (tests/test_round4.py)."""
+    (tests/test_pagerank.py)."""
     g = _synthetic_graph(spark)
     verts = _keyed_pages(g).select(F.col("vkey").alias("page_id"))
     out = pagerank_multi(

@@ -3,26 +3,23 @@
 
 from __future__ import annotations
 
-import importlib
-
-import pyarrow as pa
 import pytest
 
-from wikipath_spark.operators.compress import compress_redirects, resolve_through
+from wikipath_spark.operators.compress import (
+    _compress_driver_side,
+    compress_redirects,
+    resolve_through,
+)
 
-# the package re-exports the function over this submodule name
-compress_mod = importlib.import_module("wikipath_spark.operators.compress")
 
+def _compress(spark, pairs, lane):
+    """``pairs`` compressed by the reference's walk (``driver``, the build's
+    driver lane) or by pointer doubling (``distributed``)."""
+    if lane == "driver":
+        return dict(_compress_driver_side(pairs))
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    return {r.src: r.dst for r in compress_redirects(df).collect()}
 
-def _alias_map(spark, pairs):
-    """``pairs`` as a local relation: a real size estimate, so the driver
-    walk takes it up to its row threshold (a ``createDataFrame`` list has an
-    unknown size and always goes distributed)."""
-    src, dst = zip(*pairs) if pairs else ((), ())
-    return spark.createDataFrame(
-        pa.table({"src": pa.array(src, pa.int64()), "dst": pa.array(dst, pa.int64())}),
-        "src long, dst long",
-    )
 
 FIXTURES = [
     # (name, input map, expected compressed map, reference lines)
@@ -41,15 +38,10 @@ FIXTURES = [
 ]
 
 
-@pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "distributed"])
+@pytest.mark.parametrize("lane", ["driver", "distributed"])
 @pytest.mark.parametrize("name,inp,expected", FIXTURES, ids=[f[0] for f in FIXTURES])
-def test_compress_fixture(spark, name, inp, expected, threshold):
-    df = _alias_map(spark, list(inp.items()))
-    got = {
-        r.src: r.dst
-        for r in compress_redirects(df, driver_threshold=threshold).collect()
-    }
-    assert got == expected
+def test_compress_fixture(spark, name, inp, expected, lane):
+    assert _compress(spark, list(inp.items()), lane) == expected
 
 
 def test_compress_empty(spark):
@@ -58,10 +50,9 @@ def test_compress_empty(spark):
 
 
 def test_compress_long_chain(spark):
-    # 0→1→…→63: log-bound pointer doubling must fully flatten (forced
-    # distributed path — the driver walk is exercised by the fixtures)
+    # 0→1→…→63: log-bound pointer doubling must fully flatten
     df = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
-    got = {r.src: r.dst for r in compress_redirects(df, driver_threshold=0).collect()}
+    got = {r.src: r.dst for r in compress_redirects(df).collect()}
     assert got == {i: 63 for i in range(63)}
 
 
@@ -77,7 +68,7 @@ def test_compress_distributed_releases_superseded_state(spark):
     spark.sparkContext._jvm.System.gc()  # flush ContextCleaner backlog first
     df = spark.createDataFrame([(i, i + 1) for i in range(63)], "src long, dst long")
     before = persistent_rdd_ids(spark)
-    out = compress_redirects(df, driver_threshold=0)
+    out = compress_redirects(df)
     assert out.count() == 63
     leaked = persistent_rdd_ids(spark) - before
     assert len(leaked) <= 1, f"{len(leaked)} persistent RDDs remain after the loop"
@@ -117,9 +108,9 @@ def test_oracle_agrees_with_reference_fixtures():
         assert _compress_oracle(inp) == expected, name
 
 
-@pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "distributed"])
+@pytest.mark.parametrize("lane", ["driver", "distributed"])
 @pytest.mark.parametrize("seed", range(12))
-def test_compress_random_vs_oracle(spark, seed, threshold):
+def test_compress_random_vs_oracle(spark, seed, lane):
     """Random functional graphs (chains, trees, cycles, ρ-shapes) must match
     the reference-semantics oracle exactly — on BOTH physical strategies."""
     import random
@@ -127,32 +118,7 @@ def test_compress_random_vs_oracle(spark, seed, threshold):
     rng = random.Random(seed)
     n = rng.randrange(5, 60)
     m = {s: rng.randrange(0, 70) for s in rng.sample(range(70), n)}
-    df = _alias_map(spark, list(m.items()))
-    got = {
-        r.src: r.dst
-        for r in compress_redirects(df, driver_threshold=threshold).collect()
-    }
-    assert got == _compress_oracle(m)
-
-
-def test_compress_over_threshold_estimate_skips_driver_collect(spark, monkeypatch):
-    """An estimate above the driver-lane gate goes straight to pointer
-    doubling: no driver collect, and the same rows as the driver walk."""
-    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 20), (21, 20)]
-    want = sorted(compress_redirects(_alias_map(spark, pairs)).collect())
-    frame = _alias_map(spark, pairs)
-    collects, walks = [], []
-    frame_cls, real_walk = type(frame), compress_mod._compress_driver_side
-    real_collect = frame_cls.collect
-    monkeypatch.setattr(frame_cls, "collect", lambda df: collects.append(1) or real_collect(df))
-    monkeypatch.setattr(
-        compress_mod, "_compress_driver_side", lambda rows: walks.append(1) or real_walk(rows)
-    )
-    monkeypatch.setattr(compress_mod, "DRIVER_THRESHOLD_BYTES", 1)
-    out = compress_redirects(frame)
-    assert not collects and not walks
-    monkeypatch.undo()
-    assert sorted(out.collect()) == want == [(1, 4), (2, 4), (3, 4)]
+    assert _compress(spark, list(m.items()), lane) == _compress_oracle(m)
 
 
 def test_resolve_through_identity_fallback(spark):

@@ -1,13 +1,21 @@
-"""PageRank golden tests: tiny hand-checkable graphs (FIXTURES.md §4) against
-the pure-numpy power-iteration oracle (allclose 1e-6), plain and salted
-hash aggregation, and determinism across parallelism levels."""
+"""PageRank tests: tiny hand-checkable graphs (FIXTURES.md §4) against the
+pure-numpy power-iteration oracle (allclose 1e-6), plain and salted hash
+aggregation, determinism across parallelism levels, the driver lane, the
+fixed-point and vector (multi-seed) twins, and the distributed loops' Spark
+job budget."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from wikipath_spark.operators.pagerank import pagerank, pagerank_numpy_oracle
+from wikipath_spark.operators.pagerank import (
+    pagerank,
+    pagerank_fixedpoint,
+    pagerank_multi,
+    pagerank_multi_fixedpoint,
+    pagerank_numpy_oracle,
+)
 
 GRAPHS = {
     "path4": [(1, 2), (2, 3), (3, 4)],
@@ -181,3 +189,194 @@ def test_pagerank_durable_runs_stay_distributed(parquet, tmp_path, driver_calls)
     pagerank(edges, checkpoint_mgr=mgr, resume=True)
     pagerank(edges, resume=True)
     assert driver_calls == []
+
+
+# --- pagerank_fixedpoint source hygiene (ADVICE low) -----------------------
+
+
+def test_personalized_pagerank_dedups_sources(spark):
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], ["src", "dst"])
+    dup = sorted(map(tuple, pagerank_fixedpoint(e, sources=[2, 1, 1, 2]).collect()))
+    ded = sorted(map(tuple, pagerank_fixedpoint(e, sources=[2, 1]).collect()))
+    assert dup == ded
+
+
+def test_personalized_pagerank_rejects_unknown_source(spark):
+    e = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+    with pytest.raises(ValueError, match="not in the vertex set"):
+        pagerank_fixedpoint(e, sources=[1, 999])
+
+
+# --- wide-state (vector) personalized PageRank (VERDICT item 7) ------------
+
+
+def test_pagerank_multi_matches_numpy_oracle_both_impls(spark, edges_df):
+    import random
+
+    from wikipath_spark.operators.pagerank import (
+        pagerank_multi,
+        pagerank_multi_numpy_oracle,
+    )
+
+    random.seed(11)
+    el = sorted({(random.randrange(40), random.randrange(40)) for _ in range(200)})
+    el = [(a, b) for a, b in el if a != b]
+    df = edges_df(el)
+    ids = sorted({v for ab in el for v in ab})
+    seeds = [ids[0], ids[len(ids) // 2], ids[-1]]  # distinct by construction
+    oracle = pagerank_multi_numpy_oracle(el, seeds, iters=12)
+    results = {}
+    for impl in ("csr", "sql"):
+        got = {r.page_id: r.ranks for r in
+               pagerank_multi(df, seeds, iters=12, impl=impl).collect()}
+        assert set(got) == set(oracle)
+        for v in got:
+            for i in range(len(seeds)):
+                assert got[v][i] == pytest.approx(oracle[v][i], abs=1e-9)
+        # each personalized component is a probability distribution
+        for i in range(len(seeds)):
+            assert sum(got[v][i] for v in got) == pytest.approx(1.0, abs=1e-9)
+        results[impl] = got
+    # the two physical strategies agree to summation-order noise
+    for v in results["csr"]:
+        for i in range(len(seeds)):
+            assert results["csr"][v][i] == pytest.approx(
+                results["sql"][v][i], abs=1e-12
+            )
+
+
+def test_pagerank_multi_seed_hygiene(spark, edges_df):
+    from wikipath_spark.operators.pagerank import pagerank_multi
+
+    df = edges_df([(1, 2), (2, 3), (3, 1)])
+    a = sorted(map(tuple, pagerank_multi(df, [1, 1, 2], iters=3).collect()))
+    b = sorted(map(tuple, pagerank_multi(df, [1, 2], iters=3).collect()))
+    assert a == b
+    with pytest.raises(ValueError, match="not in the vertex set"):
+        pagerank_multi(df, [1, 999], iters=2)
+    with pytest.raises(ValueError, match="non-empty"):
+        pagerank_multi(df, [], iters=2)
+
+
+def test_pagerank_multi_single_seed_equals_scalar_personalized(spark, edges_df):
+    """k=1 vector pass agrees with the integer fixed-point personalized twin
+    in RANKING (the fixed-point twin truncates; compare top-order)."""
+    from wikipath_spark.operators.pagerank import pagerank_fixedpoint, pagerank_multi
+
+    el = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)]
+    df = edges_df(el)
+    vec = {r.page_id: r.ranks[0] for r in
+           pagerank_multi(df, [1], iters=30, impl="sql").collect()}
+    fp = {r.page_id: r.rank_fp for r in
+          pagerank_fixedpoint(df, sources=[1], iters=30).collect()}
+    order_vec = sorted(vec, key=lambda v: (-vec[v], v))
+    order_fp = sorted(fp, key=lambda v: (-fp[v], v))
+    assert order_vec == order_fp
+
+
+def test_pagerank_multi_fixedpoint_bitwise_equivalences(spark, edges_df):
+    """Integer vector twin: csr == sql BITWISE (integer sums commute across
+    any physical aggregation), and each component == the scalar personalized
+    fixed-point run — the chain that lets a DuckDB oracle hash-verify the
+    Arrow 2-D scatter-add kernel itself."""
+    import random
+
+    from wikipath_spark.operators.pagerank import (
+        pagerank_fixedpoint,
+        pagerank_multi_fixedpoint,
+    )
+
+    random.seed(5)
+    el = sorted({(random.randrange(30), random.randrange(30)) for _ in range(150)})
+    el = [(a, b) for a, b in el if a != b]
+    df = edges_df(el)
+    ids = sorted({v for ab in el for v in ab})
+    seeds = [ids[0], ids[-1]]
+    csr = {r.page_id: list(r.ranks) for r in
+           pagerank_multi_fixedpoint(df, seeds, impl="csr").collect()}
+    sql = {r.page_id: list(r.ranks) for r in
+           pagerank_multi_fixedpoint(df, seeds, impl="sql").collect()}
+    assert csr == sql
+    for i, s in enumerate(seeds):
+        single = {r.page_id: r.rank_fp for r in
+                  pagerank_fixedpoint(df, sources=[s]).collect()}
+        assert all(csr[v][i] == single[v] for v in csr)
+    with pytest.raises(ValueError, match="not in the vertex set"):
+        pagerank_multi_fixedpoint(df, [ids[0], 10**9])
+
+
+def test_pagerank_setup_failure_does_not_leak(spark, edges_df, tmp_path):
+    """A corrupt checkpoint makes resume raise DURING SETUP (after several
+    frames are persisted); nothing may stay pinned (code-review finding)."""
+    import json
+    import os
+
+    from wikipath_spark.operators.pagerank import pagerank
+    from wikipath_spark.plans.checkpoint import CheckpointManager
+
+    sc = spark.sparkContext
+    df = edges_df([(i, (i * 3) % 20) for i in range(60)])
+    mgr = CheckpointManager(str(tmp_path), "leak")
+    pagerank(df, checkpoint_mgr=mgr, checkpoint_interval=2, max_iter=4, tol=0.0)
+    latest = mgr.latest()
+    marker = os.path.join(str(tmp_path), "leak", f"superstep={latest}", "_COMMITTED")
+    meta = json.load(open(marker))
+    meta["rows"] += 7
+    json.dump(meta, open(marker, "w"))
+
+    spark.catalog.clearCache()
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(ValueError, match="corrupt"):
+        pagerank(df, checkpoint_mgr=mgr, resume=True)
+    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    assert after <= before, f"setup-phase leak: {after - before}"
+
+
+def test_pagerank_multi_empty_and_vector_cleanup(spark, edges_df):
+    """Empty vertex set returns an empty frame (no TypeError), and the loop
+    releases superseded state frames (code-review findings)."""
+    from wikipath_spark.operators.pagerank import (
+        pagerank_multi,
+        pagerank_multi_fixedpoint,
+    )
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert pagerank_multi(empty, [1], iters=2).count() == 0
+    assert pagerank_multi_fixedpoint(empty, [1], iters=2).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Spark job budget of the four distributed loops: one shared setup, then one
+# job per superstep (every loop runs under loop_confs, AQE off).
+# ---------------------------------------------------------------------------
+
+LOOPS = {
+    "pagerank": lambda e, n: pagerank(e, tol=0.0, max_iter=n),
+    "pagerank_fixedpoint": lambda e, n: pagerank_fixedpoint(e, iters=n),
+    "pagerank_multi": lambda e, n: pagerank_multi(e, [1, 4], iters=n),
+    "pagerank_multi_fixedpoint": lambda e, n: pagerank_multi_fixedpoint(e, [1, 4], iters=n),
+}
+
+
+@pytest.mark.parametrize("loop", list(LOOPS))
+def test_distributed_loops_one_job_per_superstep(spark, edges_df, loop):
+    """A ``createDataFrame`` edge list (unknown size: the distributed loop)
+    at 1 and at 3 supersteps: the difference is one job per superstep, and
+    the setup before the first superstep takes at most 4 jobs."""
+    run = LOOPS[loop]
+    e = edges_df([(1, 2), (2, 3), (3, 1), (3, 4)])
+    sc = spark.sparkContext
+
+    def jobs(steps):
+        group = f"pr_jobs_{loop}_{steps}"
+        sc.setJobGroup(group, "probe")
+        try:
+            run(e, steps)
+        finally:
+            sc.setJobGroup(f"{group}_done", "done")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    run(e, 1)  # warm (lazy session init jobs stay out of the count)
+    one, three = jobs(1), jobs(3)
+    assert three - one == 2, f"{(three - one) / 2} jobs per superstep"
+    assert one - 1 <= 4, f"{one - 1} setup jobs"

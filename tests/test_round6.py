@@ -211,26 +211,3 @@ def test_pagerank_auto_salt_short_circuit_exact(spark, edges_df):
     auto = {r.page_id: r.rank for r in pagerank(df).ranks.collect()}
     expl = {r.page_id: r.rank for r in pagerank(df, salt_partials=1).ranks.collect()}
     assert auto == expl  # dict equality on floats = bitwise-equal ranks
-
-
-def test_compress_probe_boundary_lanes_identical(spark):
-    """The one-job limit(threshold+1) size probe: exactly-at-threshold input
-    takes the driver walk, one-over takes distributed pointer doubling, and
-    both produce the identical compressed map."""
-    from wikipath_spark.operators.compress import compress_redirects
-
-    import pandas as pd
-
-    chains = [(i, i + 100) for i in range(1, 11)] + [(200, 201), (201, 202)]
-    # a local relation: its real size estimate lets the row probe run
-    df = spark.createDataFrame(pd.DataFrame(chains, columns=["src", "dst"]))
-    n = len(chains)
-    driver = {
-        (r.src, r.dst)
-        for r in compress_redirects(df, driver_threshold=n).collect()
-    }
-    dist = {
-        (r.src, r.dst)
-        for r in compress_redirects(df, driver_threshold=n - 1).collect()
-    }
-    assert driver == dist and len(driver) > 0

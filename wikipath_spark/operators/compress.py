@@ -6,12 +6,14 @@ terminal targets, remove self-redirects, and remove every chain that is part
 of — or leads into — a cycle.
 
 The reference does a memoized sequential walk per source with per-walk cycle
-detection.  Distributed, we use **pointer doubling**: each iteration replaces
-``dst`` with ``dst``'s own target when one exists, doubling the resolved
-distance, so acyclic chains of length L flatten in ⌈log2 L⌉ iterations.
-Chains touching a cycle never resolve to a terminal; after convergence (or
-the log-bound cap) their ``dst`` still appears as a source, and one anti-join
-removes them — exactly the reference's cycle semantics.
+detection (:func:`_compress_driver_side`, which the build's driver lane calls
+on its collected alias map).  Distributed, we use **pointer doubling**: each
+iteration replaces ``dst`` with ``dst``'s own target when one exists,
+doubling the resolved distance, so acyclic chains of length L flatten in
+⌈log2 L⌉ iterations.  Chains touching a cycle never resolve to a terminal;
+after convergence (or the log-bound cap) their ``dst`` still appears as a
+source, and one anti-join removes them — exactly the reference's cycle
+semantics.
 
 Scale: the redirect table is a small fraction of the page set (aliases are
 rare), each iteration is one self-equi-join on ``dst = src`` — broadcastable
@@ -26,12 +28,7 @@ import math
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wikipath_spark.operators._loop import (
-    DRIVER_THRESHOLD_BYTES,
-    LoopState,
-    checkpoint_tracked,
-    estimated_bytes,
-)
+from wikipath_spark.operators._loop import LoopState, checkpoint_tracked
 
 
 def _compress_driver_side(rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -65,48 +62,23 @@ def _compress_driver_side(rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return [(s, t) for s, t in resolved.items() if t is not None]
 
 
-def compress_redirects(
-    redirects: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_threshold: int = 2_000_000,
-) -> DataFrame:
-    """Compress an alias map ``(src, dst)`` to terminal targets.
+def compress_redirects(redirects: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Compress an alias map ``(src, dst)`` to terminal targets by pointer
+    doubling.
 
     Returns the compressed map: every surviving row points directly at a
     terminal (non-source) vertex; self-redirects and all cycle-touching
-    chains are gone (parse.rs:756-804 semantics).
-
-    Adaptive physical strategy: alias maps are a small fraction of the page
-    set by nature, so up to ``driver_threshold`` rows the compression is the
-    reference's own memoized driver-side walk (collect → walk → parallelize;
-    exact, one pass).  Above it, distributed pointer doubling.  A map whose
-    Catalyst estimate (:func:`~wikipath_spark.operators._loop.estimated_bytes`)
-    exceeds the driver-lane gate goes distributed without the row probe, so
-    a large map is never collected only to be discarded; unknown-size
-    inputs (a ``createDataFrame`` list, a join) count as large.  Note cycle
-    rows never stabilize under pointer jumping (their dst rotates each
-    round), so that path always runs its full ⌈log2 n⌉ cap when cycles
-    exist; both paths produce identical results (tested)."""
+    chains are gone (parse.rs:756-804 semantics), exactly as in the
+    reference's walk :func:`_compress_driver_side` (tested against it).
+    Cycle rows never stabilize under pointer jumping (their dst rotates each
+    round), so the loop runs its full ⌈log2(n+1)⌉+2 cap when cycles exist."""
     # NB: self-redirects are NOT pre-filtered — the reference treats x→x as a
     # 1-cycle, so chains *into* a self-redirect must also die (parse.rs:767-779
     # fixture: {1:2, 2:2} ⇒ both removed). A self-loop is stable under pointer
     # jumping and the final cycle anti-join removes it plus its feeders.
     r = redirects.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # size probe and driver-path input in ONE job: limit(threshold+1) returns
-    # the COMPLETE row set whenever the input is smaller (and early-stops the
-    # scan when it is not), so the common small-alias-map path pays a single
-    # action instead of the old checkpoint + count + collect triple.  The walk
-    # result is row-order independent (each chain's terminal is unique and
-    # cycle membership is a property of the map, not the visit order).
-    if estimated_bytes(r) <= DRIVER_THRESHOLD_BYTES:
-        probe = r.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            spark = redirects.sparkSession
-            compressed = _compress_driver_side([(row.src, row.dst) for row in probe])
-            return spark.createDataFrame(compressed or [], "src long, dst long")
-    # distributed pointer doubling: NOW materialize once (every iteration
-    # re-reads the full table) and take the exact count for the log2 cap
+    # materialize once (every iteration re-reads the full table) and take the
+    # exact count for the log2 cap
     with LoopState() as state:
         r = state.frame = checkpoint_tracked(r)
         n = r.count()
@@ -137,20 +109,13 @@ def compress_redirects(
         return state.result(r.join(keys, r["dst"] == keys["k"], "left_anti"))
 
 
-def resolve_through(
-    df: DataFrame,
-    redirects: DataFrame,
-    cols: list[str],
-    broadcast: bool = True,
-) -> DataFrame:
+def resolve_through(df: DataFrame, redirects: DataFrame, cols: list[str]) -> DataFrame:
     """Map each id column through the compressed alias map with identity
     fallback — the reference's ``redirects.get(x).unwrap_or(x)`` applied to
-    both endpoints (parse.rs:360-361).  Canonical left-join + coalesce (J4);
-    the compressed map is broadcast when small.
+    both endpoints (parse.rs:360-361).  Canonical left-join + coalesce (J4)
+    against the broadcast map.
     """
-    r = redirects.select("src", "dst")
-    if broadcast:
-        r = F.broadcast(r)
+    r = F.broadcast(redirects.select("src", "dst"))
     out = df
     for c in cols:
         rr = r.select(F.col("src").alias(f"_r_{c}"), F.col("dst").alias(f"_t_{c}"))

@@ -17,11 +17,15 @@ reference's adjacency lists embody, database.rs:225-243) concentrate one
 groupBy key.  ``salt_partials=k`` turns the aggregation into salted two-stage
 (partial sums over (dst, salt) then final over dst) via operators/skew.py.
 
-Lineage: driver-side iteration grows the plan each superstep; a
-``localCheckpoint`` every superstep truncates it
-(:class:`~wikipath_spark.operators._loop.LoopState` owns the state frames),
-and an optional durable checkpoint (plans/checkpoint.py) makes runs
-resumable with per-partition lineage + convergence metrics.
+Distributed loops: :func:`pagerank`, :func:`pagerank_fixedpoint`,
+:func:`pagerank_multi` and :func:`pagerank_multi_fixedpoint` all run under
+``loop_confs`` on one setup (:func:`_loop_setup`: the out-degree edges and
+the vertex flags, checkpointed once, with the vertex count, dangling count
+and seed checks on one observe), then one Spark job per superstep: a
+``localCheckpoint`` that truncates the lineage and carries the superstep's
+observed metrics (:class:`~wikipath_spark.operators._loop.LoopState` owns
+the state frames).  An optional durable checkpoint (plans/checkpoint.py)
+makes :func:`pagerank` resumable.
 
 Driver lane: an edge table small enough for the driver (the shared
 ``driver_edge_arrays`` gate of every driver lane) skips the loop above and
@@ -117,18 +121,105 @@ def pagerank(
         )
 
     n_edges = edges.count()
-    # loop_confs: AQE off (fixed-shape superstep — re-planning is pure
-    # per-iteration overhead), auto-broadcast off (driver-serialized broadcast
-    # of the evolving ranks flattens core scaling — measured 8→32 gave only
-    # 1.2x), shuffle parallelism sized to data (~500k edge rows/partition, so
-    # tiny graphs don't fan out into near-empty tasks).  Context manager =
-    # try/finally: an exception mid-loop must not leak these confs.
-    with loop_confs(spark, rows=n_edges) as sc_parts:
-        return _pagerank_loop(
-            spark, edges, vertices, damping, tol, max_iter, salt_partials,
-            on_superstep, checkpoint_mgr, checkpoint_interval, resume, n_edges,
-            sc_parts, check_budget,
-        )
+    # loop_confs, as in every distributed loop here: AQE off (re-planning a
+    # fixed-shape superstep is pure overhead), auto-broadcast off (a driver-
+    # serialized broadcast of the ranks flattens core scaling: 8→32 cores
+    # gave 1.2x), shuffle parallelism sized to data; restored on any exit.
+    # LoopState releases what the loop holds on ANY exit, also a setup
+    # failure (a corrupt checkpoint raising from load).
+    with loop_confs(spark, rows=n_edges) as parts, LoopState() as state:
+        if salt_partials is None:
+            # auto (the default): salt so no hub's in-neighborhood exceeds
+            # one task's budget (SURVEY.md §4.2 — from the degree
+            # distribution).  n_edges bounds every in-degree, so salt=1 is
+            # always sufficient when n_edges <= rows_per_task — skip the
+            # degree-probe job then
+            salt_partials = (
+                1 if n_edges <= ROWS_PER_TASK
+                else pick_salt(edges, key="dst", rows_per_task=ROWS_PER_TASK)
+            )
+        edges_od, vflag, vertices, metrics = _loop_setup(state, edges, vertices, parts)
+        n = int(metrics["nv"])
+        if n == 0:
+            # derive from `vertices`, NOT vflag — the held vflag checkpoint
+            # is released on this return
+            return PageRankResult(vertices.withColumn("rank", F.lit(0.0)), 0, 0.0, True)
+        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, ["page_id", "rank"])
+        if resumed is None:
+            start_it = 0
+            state.frame = vflag.select(
+                "page_id", F.lit(1.0 / n).alias("rank"), "is_dangling"
+            ).persist()
+            dangling_mass = int(metrics["nd"] or 0) * (1.0 / n)
+        else:
+            loaded, start_it = resumed
+            state.frame = (
+                loaded.join(vflag, "page_id").select("page_id", "rank", "is_dangling").persist()
+            )
+            # resumed: recompute the dangling mass of the restored state (1 job)
+            dangling_mass = (
+                state.frame.join(vflag.filter("is_dangling"), "page_id", "left_semi")
+                .agg(F.sum("rank"))
+                .collect()[0][0]
+                or 0.0
+            )
+        base = (1.0 - damping) / n
+        delta = float("inf")
+        it = start_it
+        for it in range(start_it + 1, max_iter + 1):
+            check_budget()
+            ranks = state.frame
+            joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
+            # src rides along only when salting needs it (deterministic
+            # per-row salt source) — otherwise keep the shuffled message row
+            # minimal
+            msg_cols = (["src"] if salt_partials > 1 else []) + ["dst"]
+            msgs = joined.select(
+                *msg_cols, (F.col("rank") * (F.lit(1.0) / F.col("od"))).alias("contrib")
+            )
+            if salt_partials > 1:
+                # salt bucket from the message's src vertex: row-distinct in a
+                # hub's in-neighborhood (the contrib value is not, at uniform
+                # init) and deterministic, as bit-identical ranks require
+                sums = salted_sum(
+                    msgs, key="dst", value="contrib", salt=salt_partials,
+                    out="msum", salt_source="src",
+                )
+            else:
+                sums = msgs.groupBy("dst").agg(F.sum("contrib").alias("msum"))
+
+            const = base + damping * dangling_mass / n
+            # state = (page_id, rank, is_dangling); convergence delta and next
+            # dangling mass ride on df.observe over the SAME materializing
+            # pass — no old-vs-new join: the old rank is a column of the
+            # state being updated (SURVEY.md §4.5)
+            obs = Observation(f"pr_{it}")
+            ranks = state.advance(
+                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
+                .select(
+                    "page_id",
+                    (F.lit(const) + F.lit(damping) * F.coalesce("msum", F.lit(0.0))).alias("rank"),
+                    "is_dangling",
+                    F.col("rank").alias("_old"),
+                )
+                .observe(
+                    obs,
+                    F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"),
+                    F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
+                )
+                .drop("_old")
+            )
+            metrics = obs.get
+            delta, dangling_mass = metrics["d"], metrics["dm"] or 0.0
+            converged_now = delta < tol
+            if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged_now):
+                checkpoint_mgr.save(it, ranks.select("page_id", "rank"), float(delta))
+            if on_superstep is not None:
+                on_superstep(it, ranks, delta)
+            if converged_now:
+                break
+        out = state.result(state.frame.select("page_id", "rank"))
+        return PageRankResult(out, it, float(delta), delta < tol)
 
 
 def _driver_graph(src, dst, vertex_ids):
@@ -199,151 +290,50 @@ def _pagerank_driver(
     return PageRankResult(_ranks_frame(spark, ids, rank), it, delta, delta < tol)
 
 
-def _pagerank_loop(
-    spark, edges, vertices, damping, tol, max_iter, salt_partials,
-    on_superstep, checkpoint_mgr, checkpoint_interval, resume, n_edges,
-    sc_parts, check_budget,
-) -> PageRankResult:
+def _loop_setup(state, edges, vertices, parts, cols=(), aggs=()):
+    """The one setup of the four distributed loops; ``state`` holds its two
+    checkpoints.  Returns ``(edges_od, vflag, vertices, metrics)``:
+
+    - ``edges_od``: ``(src, dst, od)``, od = out-degree of src, partitioned
+      once by hash(src) and reused every superstep (the join's build side
+      never re-shuffles).  A checkpoint, not a persist: a cached frame
+      EMBEDS its build lineage in every superstep's logical plan, which
+      Catalyst re-analyzes per iteration — with a LogicalRDD leaf the
+      superstep plan is a few nodes (OPTIMIZATION_r06.md: driver-side plan
+      build 0.10s → 0.03s per superstep).  AQE is off (loop_confs), so the
+      partitioning survives the checkpoint and the superstep join needs no
+      exchange.
+    - ``vflag``: ``(page_id, is_dangling, *cols)`` partitioned by
+      hash(page_id); the flag rides the loop state, so each superstep's one
+      job also yields the next dangling mass.  Its src set comes from
+      ``edges_od``, already hash(src)-partitioned, so the distinct needs no
+      second shuffle of the raw edges.
+    - ``vertices``: the ``page_id`` frame (the edge endpoints by default).
+    - ``metrics``: ONE observe on the vflag checkpoint: ``nv`` vertices,
+      ``nd`` dangling vertices and the caller's ``aggs`` over vflag's
+      columns — no separate count, seed-hit or dangling-mass job.
+    """
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("od"))
+    edges_od = state.hold(checkpoint_tracked(
+        edges.join(out_deg, "src").select("src", "dst", "od").repartition(parts, "src")
+    ))
     if vertices is None:
         vertices = endpoint_vertices(edges)
     vertices = vertices.select("page_id")
-    if salt_partials is None:
-        # auto (the default): salt so no hub's in-neighborhood exceeds one
-        # task's budget (SURVEY.md §4.2 — from the degree distribution).
-        # n_edges bounds every in-degree, so salt=1 is always sufficient
-        # when n_edges <= rows_per_task — skip the degree-probe job then
-        # (one fewer fixed-latency setup action)
-        salt_partials = (
-            1 if n_edges <= ROWS_PER_TASK
-            else pick_salt(edges, key="dst", rows_per_task=ROWS_PER_TASK)
+    srcs = edges_od.select("src").distinct()
+    obs = Observation("pr_setup")
+    vflag = state.hold(checkpoint_tracked(
+        vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
+        .select("page_id", F.col("src").isNull().alias("is_dangling"), *cols)
+        .repartition(parts, "page_id")
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("nv"),
+            F.sum(F.col("is_dangling").cast("long")).alias("nd"),
+            *aggs,
         )
-
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # everything below is released on ANY exit — including a failure during
-    # setup itself (a corrupt checkpoint raising from load, a budget timeout
-    # in-loop): a long-lived serve session would otherwise accumulate
-    # executor storage per failed call
-    with LoopState() as state:
-        # contribution edges: weight = 1/out_deg, partitioned once by src and
-        # reused every superstep (the join's build side never re-shuffles).
-        # checkpoint_tracked, not persist: a cached frame EMBEDS its whole
-        # build lineage in every superstep's logical plan, and Catalyst
-        # re-analyzes that tree per iteration — with a LogicalRDD leaf the
-        # per-superstep plan is a few nodes (measured in OPTIMIZATION_r06.md:
-        # driver-side plan build 0.10s → 0.03s per superstep).  AQE is off
-        # here (loop_confs), so the hash(src) partitioning and sort survive
-        # the checkpoint and the superstep join still needs no exchange.
-        contrib_edges = state.hold(checkpoint_tracked(
-            edges.join(out_deg, "src")
-            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-            .repartition(sc_parts, "src")
-        ))
-
-        # dangling flag lives on the vertex frame so the per-superstep action
-        # can produce next iteration's dangling mass and the convergence delta
-        # in ONE aggregation (one Spark job per superstep, not three).
-        # src ids come from the checkpointed contribution table — already
-        # hash(src)-partitioned, so the distinct needs no exchange (the old
-        # edges.select(src).distinct() re-shuffled the raw edge table); the
-        # initial dangling mass AND the vertex count both ride the
-        # materializing checkpoint as observes (the old separate
-        # vertices.persist()+count() action — and its cache — are gone).
-        srcs = contrib_edges.select("src").distinct()
-        vobs = Observation("pr_init")
-        vflag = state.hold(checkpoint_tracked(
-            vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
-            .select("page_id", F.col("src").isNull().alias("is_dangling"))
-            .repartition(sc_parts, "page_id")
-            .observe(
-                vobs,
-                F.sum(F.col("is_dangling").cast("long")).alias("nd"),
-                F.count(F.lit(1)).alias("nv"),
-            )
-        ))
-        metrics = vobs.get
-        n = int(metrics["nv"] or 0)
-        if n == 0:
-            # empty-graph exit: derive from `vertices`, NOT vflag — the
-            # held vflag checkpoint is released on this return
-            return PageRankResult(
-                vertices.withColumn("rank", F.lit(0.0)), 0, 0.0, True
-            )
-        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, ["page_id", "rank"])
-        if resumed is None:
-            start_it = 0
-            state.frame = vflag.select(
-                "page_id", F.lit(1.0 / n).alias("rank"), "is_dangling"
-            ).persist()
-            dangling_mass = int(metrics["nd"] or 0) * (1.0 / n)
-        else:
-            loaded, start_it = resumed
-            state.frame = (
-                loaded.join(vflag, "page_id")
-                .select("page_id", "rank", "is_dangling")
-                .persist()
-            )
-            # resumed: recompute the dangling mass of the restored state (1 job)
-            dangling_mass = (
-                state.frame.join(vflag.filter("is_dangling"), "page_id", "left_semi")
-                .agg(F.sum("rank"))
-                .collect()[0][0]
-                or 0.0
-            )
-        base = (1.0 - damping) / n
-        delta = float("inf")
-        it = start_it
-        for it in range(start_it + 1, max_iter + 1):
-            check_budget()
-            ranks = state.frame
-            joined = contrib_edges.join(ranks, contrib_edges["src"] == ranks["page_id"])
-            # src rides along only when salting needs it (deterministic per-row
-            # salt source) — otherwise keep the shuffled message row minimal
-            msg_cols = (["src"] if salt_partials > 1 else []) + ["dst"]
-            msgs = joined.select(*msg_cols, (F.col("rank") * F.col("w")).alias("contrib"))
-            if salt_partials > 1:
-                # salt bucket from the message's src vertex: row-distinct within a
-                # hub's in-neighborhood (unlike the contrib value, which is equal
-                # across rows at uniform init) and deterministic across runs and
-                # parallelism levels — required for bit-identical ranks
-                sums = salted_sum(
-                    msgs, key="dst", value="contrib", salt=salt_partials,
-                    out="msum", salt_source="src",
-                )
-            else:
-                sums = msgs.groupBy("dst").agg(F.sum("contrib").alias("msum"))
-
-            const = base + damping * dangling_mass / n
-            # state = (page_id, rank, is_dangling); convergence delta and next
-            # dangling mass ride on df.observe over the SAME materializing pass —
-            # no separate old-vs-new join (SURVEY.md §4.5: no UDF, join-free here
-            # because the old rank is already a column of the state being updated)
-            obs = Observation(f"pr_{it}")
-            ranks = state.advance(
-                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
-                .select(
-                    "page_id",
-                    (F.lit(const) + F.lit(damping) * F.coalesce("msum", F.lit(0.0))).alias("rank"),
-                    "is_dangling",
-                    F.col("rank").alias("_old"),
-                )
-                .observe(
-                    obs,
-                    F.max(F.abs(F.col("rank") - F.col("_old"))).alias("d"),
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
-                )
-                .drop("_old")
-            )
-            metrics = obs.get
-            delta, dangling_mass = metrics["d"], metrics["dm"] or 0.0
-            converged_now = delta < tol
-            if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged_now):
-                checkpoint_mgr.save(it, ranks.select("page_id", "rank"), float(delta))
-            if on_superstep is not None:
-                on_superstep(it, ranks, delta)
-            if converged_now:
-                break
-        out = state.result(state.frame.select("page_id", "rank"))
-        return PageRankResult(out, it, float(delta), delta < tol)
+    ))
+    return edges_od, vflag, vertices, obs.get
 
 
 def pagerank_fixedpoint(
@@ -389,51 +379,34 @@ def pagerank_fixedpoint(
         sources = [int(s) for s in dict.fromkeys(sources)]
         if not sources:
             raise ValueError("pagerank_fixedpoint: sources must be non-empty (or None)")
-    if vertices is None:
-        vertices = endpoint_vertices(edges)
-    vertices = vertices.select("page_id")
-    n_vertices = vertices.count()
-    if n_vertices == 0:
-        return vertices.withColumn("rank_fp", F.lit(0).cast("long"))
-    # n = size of the jump set (all vertices, or the personalization seeds)
-    n = n_vertices if sources is None else len(sources)
-
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("od"))
-    srcs = edges.select("src").distinct()
-    in_jump = (
-        F.lit(True) if sources is None else F.col("page_id").isin([int(s) for s in sources])
-    )
-    with LoopState() as state:
-        edges_od = state.hold(checkpoint_tracked(edges.select("src", "dst").join(out_deg, "src")))
-        vflag = state.hold(checkpoint_tracked(
-            vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
-            .select(
-                "page_id",
-                F.col("src").isNull().alias("is_dangling"),
-                in_jump.alias("is_jump"),
-            )
-        ))
-        r0_val = scale // n
-        flags = vflag.agg(
-            F.count(F.when(F.col("is_jump"), 1)).alias("n_jump"),
-            F.count(F.when(F.col("is_dangling") & F.col("is_jump"), 1)).alias("n_dj"),
-        ).first()
-        if sources is not None and flags["n_jump"] != n:
+    in_jump = F.lit(True) if sources is None else F.col("page_id").isin(sources)
+    n_edges = edges.count()
+    with loop_confs(edges.sparkSession, rows=n_edges) as parts, LoopState() as state:
+        edges_od, vflag, vertices, metrics = _loop_setup(
+            state, edges, vertices, parts, [in_jump.alias("is_jump")], [
+                F.count(F.when(F.col("is_jump"), 1)).alias("n_jump"),
+                F.count(F.when(F.col("is_dangling") & F.col("is_jump"), 1)).alias("n_dj"),
+            ],
+        )
+        if metrics["nv"] == 0:
+            return vertices.withColumn("rank_fp", F.lit(0).cast("long"))
+        # n = size of the jump set (all vertices, or the personalization seeds)
+        n = metrics["nv"] if sources is None else len(sources)
+        if metrics["n_jump"] != n:
             raise ValueError(
-                f"pagerank_fixedpoint: {n - flags['n_jump']} source id(s) not in the "
+                f"pagerank_fixedpoint: {n - metrics['n_jump']} source id(s) not in the "
                 "vertex set — personalization mass would leak"
             )
-        dm = r0_val * flags["n_dj"]
+        r0_val = scale // n
+        dm = r0_val * metrics["n_dj"]
         jump = ((damping_den - damping_num) * scale) // (damping_den * n)
 
-        ranks = state.frame = checkpoint_tracked(
-            vflag.select(
-                "page_id",
-                F.when(F.col("is_jump"), F.lit(r0_val)).otherwise(F.lit(0)).cast("long").alias("rank_fp"),
-                "is_dangling",
-                "is_jump",
-            )
-        )
+        ranks = state.frame = vflag.select(
+            "page_id",
+            F.when(F.col("is_jump"), F.lit(r0_val)).otherwise(F.lit(0)).cast("long").alias("rank_fp"),
+            "is_dangling",
+            "is_jump",
+        ).persist()
         for it in range(1, iters + 1):
             msgs = edges_od.join(ranks, edges_od["src"] == ranks["page_id"]).select(
                 "dst", F.expr("rank_fp div od").alias("c")
@@ -563,72 +536,31 @@ def pagerank_multi(
     if not seeds:
         raise ValueError("pagerank_multi: seeds must be non-empty")
     k = len(seeds)
-    spark = edges.sparkSession
     n_edges = edges.count()
-    # dangling mass per component: k scalar aggregates (element_at is a
-    # cheap array index, k is small)
-    dm_aggs = [
-        F.sum(
-            F.when(F.col("is_dangling"), F.element_at("ranks", i + 1)).otherwise(0.0)
-        ).alias(f"dm{i}")
-        for i in range(k)
-    ]
-    with loop_confs(spark, rows=n_edges) as sc_parts, LoopState() as state:
-        if vertices is None:
-            vertices = endpoint_vertices(edges)
-        vertices = vertices.select("page_id")
-        if vertices.isEmpty():
+    zero = F.lit(0.0)
+    with loop_confs(edges.sparkSession, rows=n_edges) as parts, LoopState() as state:
+        edges_od, vflag, vertices, metrics = _vector_setup(
+            state, edges, vertices, parts, seeds, F.lit(1.0), zero
+        )
+        if metrics["nv"] == 0:
             return vertices.withColumn("ranks", F.lit(None).cast("array<double>"))
-
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        contrib_edges = state.hold(
-            edges.join(out_deg, "src")
-            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-            .repartition(sc_parts, "src")
-            .persist()
-        )
-        contrib_edges.count()
-
-        srcs = edges.select("src").distinct()
-        # static per-vertex frame: dangling flag + teleport basis vector
-        # slot[i] = 1.0 iff v == seeds[i] (k seed columns folded into one array)
-        slot = F.array(
-            *[F.when(F.col("page_id") == s, 1.0).otherwise(0.0) for s in seeds]
-        )
-        vflag = state.hold(checkpoint_tracked(
-            vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
-            .select(
-                "page_id",
-                F.col("src").isNull().alias("is_dangling"),
-                slot.alias("slot"),
-            )
-            .repartition(sc_parts, "page_id")
-        ))
-        n_seed_hits = vflag.agg(
-            F.sum(F.aggregate("slot", F.lit(0.0), lambda a, x: a + x))
-        ).collect()[0][0]
-        if int(n_seed_hits or 0) != k:
+        hits = int(metrics["hits"])
+        if hits != k:
             raise ValueError(
-                f"pagerank_multi: {k - int(n_seed_hits)} seed(s) not in the "
+                f"pagerank_multi: {k - hits} seed(s) not in the "
                 "vertex set — personalization mass would leak"
             )
-
-        ranks = state.frame = checkpoint_tracked(
-            vflag.select("page_id", "is_dangling", "slot", F.col("slot").alias("ranks"))
-        )
-        dm_row = ranks.agg(*dm_aggs).collect()[0]
-        dm = [float(dm_row[f"dm{i}"] or 0.0) for i in range(k)]
-
+        # the initial ranks are the slots: their dangling mass is the observe's
+        dm = [float(metrics[f"dm{i}"] or 0.0) for i in range(k)]
+        ranks = state.frame = vflag.select(
+            "page_id", "is_dangling", "slot", F.col("slot").alias("ranks")
+        ).persist()
         for it in range(1, iters + 1):
             check_budget()
-            joined = contrib_edges.join(
-                ranks, contrib_edges["src"] == ranks["page_id"]
-            )
-            msgs = joined.select(
-                "dst",
-                F.transform("ranks", lambda x: x * F.col("w")).alias("vec"),
-            )
-            sums = _vector_sums(msgs, impl, sc_parts, "double")
+            joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
+            w = F.lit(1.0) / F.col("od")
+            msgs = joined.select("dst", F.transform("ranks", lambda x: x * w).alias("vec"))
+            sums = _vector_sums(msgs, impl, parts, "double")
             new_vec = F.array(
                 *[
                     F.lit(1.0 - damping) * F.element_at("slot", i + 1)
@@ -644,11 +576,32 @@ def pagerank_multi(
             ranks = state.advance(
                 ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                .observe(obs, *dm_aggs)
+                .observe(obs, *_dangling_sums("ranks", k, zero))
             )
             metrics = obs.get
             dm = [float(metrics[f"dm{i}"] or 0.0) for i in range(k)]
         return state.result(ranks.select("page_id", "ranks"))
+
+
+def _vector_setup(state, edges, vertices, parts, seeds: list[int], one, zero):
+    """:func:`_loop_setup` of the vector loops.  Its ``slot`` column is the
+    teleport basis of the k walks (``slot[i] = one`` iff ``page_id ==
+    seeds[i]``); its observe adds ``hits`` (Σ of every slot: k when each seed
+    is a vertex) and the slots' :func:`_dangling_sums`."""
+    slot = F.array(*[F.when(F.col("page_id") == s, one).otherwise(zero) for s in seeds])
+    return _loop_setup(state, edges, vertices, parts, [slot.alias("slot")], [
+        F.sum(F.aggregate("slot", zero, lambda a, x: a + x)).alias("hits"),
+        *_dangling_sums("slot", len(seeds), zero),
+    ])
+
+
+def _dangling_sums(col: str, k: int, zero) -> list:
+    """``dm{i}`` = Σ ``col[i]`` over the dangling vertices, per component."""
+    return [
+        F.sum(F.when(F.col("is_dangling"), F.element_at(col, i + 1)).otherwise(zero))
+        .alias(f"dm{i}")
+        for i in range(k)
+    ]
 
 
 def _vector_sums(msgs: DataFrame, impl: str, parts: int, elem: str) -> DataFrame:
@@ -729,74 +682,31 @@ def pagerank_multi_fixedpoint(
     if not seeds:
         raise ValueError("pagerank_multi_fixedpoint: seeds must be non-empty")
     k = len(seeds)
-    spark = edges.sparkSession
     n_edges = edges.count()
     jump = ((damping_den - damping_num) * scale) // damping_den  # n = 1
-    dm_aggs = [
-        F.sum(
-            F.when(F.col("is_dangling"), F.element_at("ranks", i + 1))
-            .otherwise(F.lit(0).cast("long"))
-        ).alias(f"dm{i}")
-        for i in range(k)
-    ]
-    with loop_confs(spark, rows=n_edges) as sc_parts, LoopState() as state:
-        if vertices is None:
-            vertices = endpoint_vertices(edges)
-        vertices = vertices.select("page_id")
-        if vertices.isEmpty():
+    zero = F.lit(0).cast("long")
+    with loop_confs(edges.sparkSession, rows=n_edges) as parts, LoopState() as state:
+        edges_od, vflag, vertices, metrics = _vector_setup(
+            state, edges, vertices, parts, seeds, F.lit(1).cast("long"), zero
+        )
+        if metrics["nv"] == 0:
             return vertices.withColumn("ranks", F.lit(None).cast("array<long>"))
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("od"))
-        edges_od = state.hold(
-            edges.select("src", "dst").join(out_deg, "src")
-            .repartition(sc_parts, "src")
-            .persist()
-        )
-        edges_od.count()
-        srcs = edges.select("src").distinct()
-        slot = F.array(
-            *[
-                F.when(F.col("page_id") == s, F.lit(1).cast("long"))
-                .otherwise(F.lit(0).cast("long"))
-                for s in seeds
-            ]
-        )
-        vflag = state.hold(checkpoint_tracked(
-            vertices.join(srcs, vertices["page_id"] == srcs["src"], "left")
-            .select(
-                "page_id",
-                F.col("src").isNull().alias("is_dangling"),
-                slot.alias("slot"),
-            )
-            .repartition(sc_parts, "page_id")
-        ))
-        n_hits = vflag.agg(
-            F.sum(F.aggregate("slot", F.lit(0).cast("long"), lambda a, x: a + x))
-        ).collect()[0][0]
-        if int(n_hits or 0) != k:
+        hits = int(metrics["hits"])
+        if hits != k:
             raise ValueError(
-                f"pagerank_multi_fixedpoint: {k - int(n_hits)} seed(s) not in "
+                f"pagerank_multi_fixedpoint: {k - hits} seed(s) not in "
                 "the vertex set — personalization mass would leak"
             )
-        ranks = state.frame = checkpoint_tracked(
-            vflag.select(
-                "page_id",
-                "is_dangling",
-                "slot",
-                F.transform("slot", lambda x: x * scale).alias("ranks"),
-            )
-        )
-        dm_row = ranks.agg(*dm_aggs).collect()[0]
-        dm = [int(dm_row[f"dm{i}"] or 0) for i in range(k)]
+        # the initial ranks are scale · slot: their dangling mass is the observe's
+        dm = [scale * int(metrics[f"dm{i}"] or 0) for i in range(k)]
+        init = F.transform("slot", lambda x: x * scale).alias("ranks")
+        ranks = state.frame = vflag.select("page_id", "is_dangling", "slot", init).persist()
         for it in range(1, iters + 1):
             joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
-            msgs = joined.select(
-                "dst", F.expr("transform(ranks, x -> x div od)").alias("vec")
-            )
-            sums = _vector_sums(msgs, impl, sc_parts, "long")
+            msgs = joined.select("dst", F.expr("transform(ranks, x -> x div od)").alias("vec"))
+            sums = _vector_sums(msgs, impl, parts, "long")
             # seed term computed in exact Python ints per component
-            seed_terms = [
-                jump + (damping_num * dm[i]) // damping_den for i in range(k)
-            ]
+            seed_terms = [jump + (damping_num * dm[i]) // damping_den for i in range(k)]
             new_vec = F.array(
                 *[
                     F.element_at("slot", i + 1) * F.lit(seed_terms[i]).cast("long")
@@ -811,7 +721,7 @@ def pagerank_multi_fixedpoint(
             ranks = state.advance(
                 ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
-                .observe(obs, *dm_aggs)
+                .observe(obs, *_dangling_sums("ranks", k, zero))
             )
             metrics = obs.get
             dm = [int(metrics[f"dm{i}"] or 0) for i in range(k)]

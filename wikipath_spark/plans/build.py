@@ -20,8 +20,8 @@ Parse-statistics counters (A5/A6, parse.rs:500-534) ride along via
 ``df.observe`` — no extra jobs.
 
 Driver lane.  Steps 2-5 are many small Spark jobs (dense-id window, offset
-probe, compression probe, broadcast joins, distinct) whose cold planning
-cost dominates a build of a few thousand pages.  When the checkpointed
+probe, pointer-doubling compression, broadcast joins, distinct) whose cold
+planning cost dominates a build of a few thousand pages.  When the checkpointed
 extraction's Catalyst estimate (``_loop.estimated_bytes``) is at most the
 one driver-lane gate (``_loop.DRIVER_THRESHOLD_BYTES``), one ``toArrow()``
 of ``(_rowid, repo, path, shard, alias, refs, truncated)`` feeds an
@@ -180,7 +180,6 @@ def build_graph(
     spark: SparkSession,
     repos_df: DataFrame,
     extractor: str = "pandas",
-    broadcast_redirects: bool = True,
     with_stats: bool = False,
     check_conflicts: bool = True,
 ) -> GraphTables:
@@ -188,7 +187,7 @@ def build_graph(
     semantics; pandas is the mandated Arrow path, sql the JVM benchmark).
     ``check_conflicts``: fail on duplicate (repo, path) source rows — A7,
     parse.rs:203-209 parity.  Small sources take the driver lane (module
-    docstring); ``broadcast_redirects`` only shapes the distributed one."""
+    docstring)."""
     extract = extract_refs_udf if extractor == "pandas" else extract_refs_sql
 
     extracted = repos_df.select(
@@ -292,7 +291,7 @@ def build_graph(
     resolved = refs.join(tgt2, ["repo", "_ref_path"], "inner").select("src", "dst")
 
     edges = (
-        resolve_through(resolved, redirects, ["src", "dst"], broadcast=broadcast_redirects)
+        resolve_through(resolved, redirects, ["src", "dst"])
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
