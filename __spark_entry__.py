@@ -606,17 +606,15 @@ def q_graph_pagerank_multi(spark, sf):  # rows-only: float vector ranks
     """Wide-state batched personalized PageRank: one loop carries a length-2
     rank VECTOR per vertex (components seeded at the graph_pagerank_personalized
     seeds), aggregated by the CSR/Arrow 2-D scatter-add kernel — the workload
-    where the Arrow crossing beats the JVM aggregate (scripts/
-    bench_widestate.py; BENCH/BASELINE.md).  Float output ⇒ rows-only here
-    (hash-exact float vectors are impossible across engines); correctness is
-    carried by the numpy oracle + csr≡sql (1e-12) + per-component ranking ≡
-    the ORACLED integer twin graph_pagerank_personalized
-    (tests/test_pagerank.py)."""
+    where the Arrow crossing beats the JVM aggregate (BENCH/BASELINE.md).
+    Float output ⇒ rows-only here (hash-exact float vectors are impossible
+    across engines); correctness is carried by the numpy oracle (1e-9) +
+    per-component ranking ≡ the ORACLED integer twin
+    graph_pagerank_personalized (tests/test_pagerank.py)."""
     g = _synthetic_graph(spark)
     verts = _keyed_pages(g).select(F.col("vkey").alias("page_id"))
     out = pagerank_multi(
-        _graph_vkey_edges(g), list(_PRF_SOURCES), vertices=verts, iters=_PRF_ITERS,
-        impl="csr",
+        _graph_vkey_edges(g), list(_PRF_SOURCES), vertices=verts, iters=_PRF_ITERS
     )
     return out.select(
         F.col("page_id").alias("vkey"),
@@ -636,7 +634,7 @@ def q_graph_pagerank_multi_fixed(spark, sf):
     verts = _keyed_pages(g).select(F.col("vkey").alias("page_id"))
     out = pagerank_multi_fixedpoint(
         _graph_vkey_edges(g), list(_PRF_SOURCES), vertices=verts,
-        iters=_PRF_ITERS, scale=_PRF_SCALE, impl="csr",
+        iters=_PRF_ITERS, scale=_PRF_SCALE,
     )
     return out.select(
         F.col("page_id").alias("vkey"),
@@ -726,9 +724,13 @@ def q_graph_multi_bfs(spark, sf):
     distance queries cost the supersteps of one (state keyed by (source,
     vertex)); the scale shape for bulk reachability/distance workloads."""
     g = _synthetic_graph(spark)
-    return multi_source_bfs(
+    visited = multi_source_bfs(
         _graph_vkey_edges(g), list(_MSBFS_SOURCES), max_depth=_MSBFS_DEPTH
-    ).select("source", F.col("page_id").alias("vkey"), "distance")
+    )
+    out = visited.select("source", F.col("page_id").alias("vkey"), "distance")
+    # the distributed lane's level checkpoints: release_checkpoint(out) frees them
+    out._wps_ckpt_rdd_ids = getattr(visited, "_wps_ckpt_rdd_ids", set())
+    return out
 
 
 def q_graph_triangles(spark, sf):
@@ -857,6 +859,26 @@ def _lsh_bucket_sql(vec: str, planes: int) -> str:
     return f"CAST({terms} AS BIGINT)"
 
 
+def _minhash_signatures_oracle(k: int) -> str:
+    """DuckDB twin of dedup.minhash_signatures: ``(id, m0..m{k-1})``, each
+    the min over a document's distinct lower-cased 4-gram shingles of one
+    permutation of that shingle's two md5 chunks."""
+    return f"""
+        WITH sh AS (
+            SELECT DISTINCT d.doc_id AS id, u.sh
+            FROM documents d,
+                 UNNEST([substr(lower(d.text), g, 4) FOR g IN range(1, length(d.text) - 2)]) AS u(sh)
+        ), hashed AS (
+            SELECT id,
+                   (CAST('0x' || substr(m, 1, 8) AS BIGINT) & {MINHASH_MASK30}) AS h1,
+                   (CAST('0x' || substr(m, 9, 8) AS BIGINT) & {MINHASH_MASK30}) AS h2
+            FROM (SELECT id, md5(sh) AS m FROM sh)
+        )
+        SELECT id, {', '.join(f"min({minhash_perm_sql('h1', 'h2', i)}) AS m{i}" for i in range(k))}
+        FROM hashed GROUP BY id
+    """
+
+
 def _minhash_lsh_oracle(k: int, bands: int, threshold: float, max_bucket: int) -> str:
     """DuckDB twin of dedup.minhash_lsh_pairs: k minhashes → ``bands`` band
     keys (md5 of the comma-joined band rows — the exact Spark expression) →
@@ -982,9 +1004,9 @@ def _graph_pagerank_multi_fixed_oracle(seeds: tuple[int, ...]) -> str:
     integer twin of operators/pagerank.pagerank_multi_fixedpoint: each
     column j is an independent single-seed walk (jump set = {seeds[j]},
     n = 1) sharing one CTE chain, term for term with truncating division.
-    Verifying this against the engine's impl="csr" run hash-checks the
-    Arrow 2-D scatter-add kernel itself (integer sums commute, so ANY
-    aggregation strategy must produce these exact bits)."""
+    Verifying this against the engine's run hash-checks the Arrow 2-D
+    scatter-add kernel itself (integer sums commute, so ANY aggregation
+    strategy must produce these exact bits)."""
     jump = (15 * _PRF_SCALE) // 100  # n = 1 per component
     k = len(seeds)
     parts = []
@@ -1426,20 +1448,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY c.doc_id, b.bench_id
             HAVING count(*) >= 3
         """,
-        "minhash_signatures": f"""
-            WITH sh AS (
-                SELECT DISTINCT d.doc_id AS id, u.sh
-                FROM documents d,
-                     UNNEST([substr(lower(d.text), g, 4) FOR g IN range(1, length(d.text) - 2)]) AS u(sh)
-            ), hashed AS (
-                SELECT id,
-                       (CAST('0x' || substr(m, 1, 8) AS BIGINT) & {MINHASH_MASK30}) AS h1,
-                       (CAST('0x' || substr(m, 9, 8) AS BIGINT) & {MINHASH_MASK30}) AS h2
-                FROM (SELECT id, md5(sh) AS m FROM sh)
-            )
-            SELECT id, {', '.join(f"min({minhash_perm_sql('h1', 'h2', i)}) AS m{i}" for i in range(4))}
-            FROM hashed GROUP BY id
-        """,
+        "minhash_signatures": _minhash_signatures_oracle(4),
         "simhash": f"""
             WITH toks AS (
                 SELECT d.doc_id AS id, u.tok

@@ -5,7 +5,7 @@ past bench scale to confirm no cliffs beyond sf0.1.
 Shape: the round-3 smoke's 480k-page synthetic build (20k classes × 3 langs
 × 8 repos, 128 input splits), then over its outputs:
 
-- ``pagerank_multi(impl="csr")`` — k=8 personalized walks as one wide-state
+- ``pagerank_multi`` — k=8 personalized walks as one wide-state
   vector loop over the resulting multi-million-edge graph (the Arrow 2-D
   scatter-add kernel at ~6× bench-scale vertex count),
 - PII redaction over all 480k file contents, with the driver query's
@@ -114,8 +114,7 @@ def main() -> None:
     # --- wide-state CSR kernel: k personalized walks in one vector loop
     seeds = [r.page_id for r in g.pages.select("page_id").orderBy("page_id").limit(k).collect()]
     t0 = time.time()
-    ranks = pagerank_multi(g.edges, seeds, vertices=g.pages.select("page_id"),
-                           iters=iters, impl="csr")
+    ranks = pagerank_multi(g.edges, seeds, vertices=g.pages.select("page_id"), iters=iters)
     n_ranked = ranks.count()
     dt = time.time() - t0
     out["pagerank_multi_csr"] = {

@@ -212,3 +212,31 @@ def test_multi_source_bfs_releases_everything_on_abort(edges_df, leaked):
     with pytest.raises(RuntimeError, match="disk full"):
         multi_source_bfs(df, [0, 5], checkpoint_mgr=_FailingSave(), checkpoint_interval=3)
     assert not leaked()
+
+
+def test_entry_multi_bfs_result_carries_its_checkpoints(spark, monkeypatch):
+    """``__spark_entry__.q_graph_multi_bfs`` projects the batched BFS result;
+    on the distributed lane (forced here by patching the size gate) the
+    projection still carries the level checkpoint ids, so
+    ``release_checkpoint`` frees every one of them."""
+    import gc
+    import importlib
+
+    import __spark_entry__ as entry
+    from wikipath_spark.operators._loop import persistent_rdd_ids, release_checkpoint
+
+    # the package re-exports functions over the submodule names
+    bfs = importlib.import_module("wikipath_spark.operators.bfs")
+    g = entry._synthetic_graph(spark)  # its cached frames are the session's
+    g.edges.count(), g.pages.count()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()  # flush ContextCleaner backlog first
+    before = persistent_rdd_ids(spark)
+    gate_calls = []
+    monkeypatch.setattr(bfs, "driver_edge_arrays", lambda *a, **kw: gate_calls.append(a))
+    out = entry.q_graph_multi_bfs(spark, 0.01)
+    assert len(gate_calls) == 1  # one BFS, on the distributed lane
+    assert {r.source for r in out.collect()} == set(entry._MSBFS_SOURCES)
+    assert persistent_rdd_ids(spark) - before  # the level checkpoints
+    release_checkpoint(out)
+    assert persistent_rdd_ids(spark) - before == set()

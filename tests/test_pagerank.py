@@ -210,7 +210,7 @@ def test_personalized_pagerank_rejects_unknown_source(spark):
 # --- wide-state (vector) personalized PageRank (VERDICT item 7) ------------
 
 
-def test_pagerank_multi_matches_numpy_oracle_both_impls(spark, edges_df):
+def test_pagerank_multi_matches_numpy_oracle(spark, edges_df):
     import random
 
     from wikipath_spark.operators.pagerank import (
@@ -225,24 +225,14 @@ def test_pagerank_multi_matches_numpy_oracle_both_impls(spark, edges_df):
     ids = sorted({v for ab in el for v in ab})
     seeds = [ids[0], ids[len(ids) // 2], ids[-1]]  # distinct by construction
     oracle = pagerank_multi_numpy_oracle(el, seeds, iters=12)
-    results = {}
-    for impl in ("csr", "sql"):
-        got = {r.page_id: r.ranks for r in
-               pagerank_multi(df, seeds, iters=12, impl=impl).collect()}
-        assert set(got) == set(oracle)
-        for v in got:
-            for i in range(len(seeds)):
-                assert got[v][i] == pytest.approx(oracle[v][i], abs=1e-9)
-        # each personalized component is a probability distribution
+    got = {r.page_id: r.ranks for r in pagerank_multi(df, seeds, iters=12).collect()}
+    assert set(got) == set(oracle)
+    for v in got:
         for i in range(len(seeds)):
-            assert sum(got[v][i] for v in got) == pytest.approx(1.0, abs=1e-9)
-        results[impl] = got
-    # the two physical strategies agree to summation-order noise
-    for v in results["csr"]:
-        for i in range(len(seeds)):
-            assert results["csr"][v][i] == pytest.approx(
-                results["sql"][v][i], abs=1e-12
-            )
+            assert got[v][i] == pytest.approx(oracle[v][i], abs=1e-9)
+    # each personalized component is a probability distribution
+    for i in range(len(seeds)):
+        assert sum(got[v][i] for v in got) == pytest.approx(1.0, abs=1e-9)
 
 
 def test_pagerank_multi_seed_hygiene(spark, edges_df):
@@ -266,7 +256,7 @@ def test_pagerank_multi_single_seed_equals_scalar_personalized(spark, edges_df):
     el = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)]
     df = edges_df(el)
     vec = {r.page_id: r.ranks[0] for r in
-           pagerank_multi(df, [1], iters=30, impl="sql").collect()}
+           pagerank_multi(df, [1], iters=30).collect()}
     fp = {r.page_id: r.rank_fp for r in
           pagerank_fixedpoint(df, sources=[1], iters=30).collect()}
     order_vec = sorted(vec, key=lambda v: (-vec[v], v))
@@ -275,10 +265,10 @@ def test_pagerank_multi_single_seed_equals_scalar_personalized(spark, edges_df):
 
 
 def test_pagerank_multi_fixedpoint_bitwise_equivalences(spark, edges_df):
-    """Integer vector twin: csr == sql BITWISE (integer sums commute across
-    any physical aggregation), and each component == the scalar personalized
-    fixed-point run — the chain that lets a DuckDB oracle hash-verify the
-    Arrow 2-D scatter-add kernel itself."""
+    """Integer vector twin: each component == the scalar personalized
+    fixed-point run BITWISE (integer sums commute across any physical
+    aggregation) — the chain that lets a DuckDB oracle hash-verify the Arrow
+    2-D scatter-add kernel itself."""
     import random
 
     from wikipath_spark.operators.pagerank import (
@@ -292,15 +282,13 @@ def test_pagerank_multi_fixedpoint_bitwise_equivalences(spark, edges_df):
     df = edges_df(el)
     ids = sorted({v for ab in el for v in ab})
     seeds = [ids[0], ids[-1]]
-    csr = {r.page_id: list(r.ranks) for r in
-           pagerank_multi_fixedpoint(df, seeds, impl="csr").collect()}
-    sql = {r.page_id: list(r.ranks) for r in
-           pagerank_multi_fixedpoint(df, seeds, impl="sql").collect()}
-    assert csr == sql
+    multi = {r.page_id: list(r.ranks) for r in
+             pagerank_multi_fixedpoint(df, seeds).collect()}
     for i, s in enumerate(seeds):
         single = {r.page_id: r.rank_fp for r in
                   pagerank_fixedpoint(df, sources=[s]).collect()}
-        assert all(csr[v][i] == single[v] for v in csr)
+        assert set(multi) == set(single)
+        assert all(multi[v][i] == single[v] for v in multi)
     with pytest.raises(ValueError, match="not in the vertex set"):
         pagerank_multi_fixedpoint(df, [ids[0], 10**9])
 

@@ -1,21 +1,19 @@
-"""Round-2 hardening tests: SimHash twin equivalence, planted embedding
-near-duplicates, loop-conf restoration on failure, checkpoint content
-verification, build conflict detection, extraction scan budgets, adaptive
-dense-id sharding, and the incremental merge sink."""
+"""Round-2 hardening tests: SimHash and MinHash against DuckDB twins,
+planted embedding near-duplicates, loop-conf restoration on failure,
+checkpoint content verification, build conflict detection, extraction scan
+budgets, adaptive dense-id sharding, and the incremental merge sink."""
 
 from __future__ import annotations
 
 import os
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from wikipath_spark.functions.extract import extract_refs_sql, extract_refs_udf
-from wikipath_spark.functions.text import simhash60
-from wikipath_spark.operators.dedup import (
-    simhash_fingerprints,
-    simhash_fingerprints_exploded,
-)
+from wikipath_spark.operators.dedup import minhash_signatures, simhash_fingerprints
 from wikipath_spark.operators.similarity import embedding_near_dup_pairs
 from wikipath_spark.plans import build as build_mod
 from wikipath_spark.plans.build import assign_dense_ids, build_graph
@@ -23,14 +21,25 @@ from wikipath_spark.plans.checkpoint import CheckpointManager
 from wikipath_spark.sources.tables import merge_upsert
 
 
-# ------------------------------------------------------------ simhash twins
+# -------------------------------------------------- simhash/minhash twins
+
+
+def _duck_rows(docs, sql: str) -> dict:
+    """``{id: (values...)}`` of ``sql`` run by DuckDB over ``docs`` as the
+    ``documents`` table."""
+    con = duckdb.connect()
+    try:
+        con.register("documents", docs.toPandas())
+        return {r[0]: tuple(r[1:]) for r in con.sql(sql).fetchall()}
+    finally:
+        con.close()
 
 
 def test_simhash_array_equals_exploded(spark):
     """The shuffle-free array-aggregate SimHash (engine default) and the
-    explode+groupBy formulation (oracle mirror) must produce bit-identical
-    fingerprints — the votes are exact integer sums, so aggregation order
-    cannot matter.  Zero-token docs exist only in the array form (simhash 0)."""
+    DuckDB explode+groupBy oracle must produce bit-identical fingerprints —
+    the votes are exact integer sums, so aggregation order cannot matter.
+    Zero-token docs fingerprint to 0 (the oracle's left join)."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -42,31 +51,28 @@ def test_simhash_array_equals_exploded(spark):
         "doc_id long, text string",
     )
     arr = {r.id: r.simhash for r in simhash_fingerprints(docs).collect()}
-    exp = {r.id: r.simhash for r in simhash_fingerprints_exploded(docs).collect()}
+    exp = {k: v for k, (v,) in _duck_rows(docs, entrymod.oracle_sql()["simhash"]).items()}
     assert set(arr) == {1, 2, 3, 4, 5}
-    assert set(exp) == {1, 2, 3}
-    for k, v in exp.items():
-        assert arr[k] == v, k
+    assert arr == exp
     assert arr[4] == 0 and arr[5] == 0
 
 
 def test_minhash_pandas_equals_sql_fold(spark):
-    """The Arrow minhash kernel and the JVM array fold must be bit-identical
-    (same md5-chunk derivation, same permutation arithmetic)."""
-    from wikipath_spark.operators.dedup import minhash_signatures
-
+    """The Arrow minhash kernel and a DuckDB min-fold over the same distinct
+    shingles must be bit-identical (same md5-chunk derivation, same
+    permutation arithmetic from ``minhash_perm_sql``)."""
+    k = 8
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
             (2, "Pack my box with FIVE dozen liquor jugs!"),
             (3, 'include!("src/pkg0/mod0.rs"); // ünïcode tail'),
-            (4, "abc"),  # shorter than n=4: dropped by both impls
+            (4, "abc"),  # shorter than n=4: dropped by both
         ],
         "doc_id long, text string",
     )
-    a = {r.id: tuple(r[1:]) for r in minhash_signatures(docs, k=8, impl="pandas").collect()}
-    b = {r.id: tuple(r[1:]) for r in minhash_signatures(docs, k=8, impl="sql").collect()}
-    assert set(a) == {1, 2, 3} and a == b
+    a = {r.id: tuple(r[1:]) for r in minhash_signatures(docs, k=k).collect()}
+    assert set(a) == {1, 2, 3} and a == _duck_rows(docs, entrymod._minhash_signatures_oracle(k))
 
 
 # ------------------------------------------------- planted near-duplicates
@@ -275,29 +281,6 @@ def test_dense_ids_explicit_shards_still_dense(spark):
     )
     ids = sorted(r.page_id for r in assign_dense_ids(df, shards=64).collect())
     assert ids == list(range(200))
-
-
-def test_stream_dedup_matches_batch(spark, tmp_path):
-    """Watermark-bounded streaming dedup over a static source must keep the
-    same key set as the batch dropDuplicates twin."""
-    from wikipath_spark.streaming.dedup import dedup_events, run_stream_dedup_to_memory
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # plant exact duplicates (same event_id + ts)
-    dup = events.limit(20)
-    src = str(tmp_path / "dedup_stream")
-    events.unionByName(dup).write.parquet(src)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    run_stream_dedup_to_memory(spark, src, schema, ["event_id"], table_name="dd")
-    stream_keys = {r.event_id for r in spark.table("dd").select("event_id").collect()}
-    stream_n = spark.table("dd").count()
-    batch = dedup_events(spark.read.parquet(src), ["event_id"])
-    batch_keys = {r.event_id for r in batch.select("event_id").collect()}
-    assert stream_keys == batch_keys
-    assert stream_n == len(batch_keys)  # every duplicate dropped exactly once
 
 
 # --------------------------------------------------------- merge upsert S6

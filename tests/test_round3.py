@@ -1,6 +1,6 @@
 """Round-3 regression tests: ADVICE r2 fixes (invalid PPJoin candidate
-bound, nondeterministic batch dedup keeper, spurious CC warning, merge
-crash-safety + counters) and the triangles checkpoint-regression revert."""
+bound, spurious CC warning, merge crash-safety + counters) and the
+triangles checkpoint-regression revert."""
 
 from __future__ import annotations
 
@@ -8,12 +8,10 @@ import os
 import warnings
 
 import pytest
-from pyspark.sql import functions as F
 
 from wikipath_spark.operators.components import connected_components
 from wikipath_spark.operators.dedup import ngram_jaccard_pairs
 from wikipath_spark.sources.tables import merge_upsert
-from wikipath_spark.streaming.dedup import dedup_events
 
 
 def test_ngram_jaccard_keeps_prefix_suffix_straddling_pair(spark):
@@ -414,26 +412,6 @@ def test_pagerank_fixedpoint_personalized_mass_at_sources(spark, edges_df):
     assert out[1] == max(out.values())
     assert out[5] == 0 and out[4] == 0
     assert out[2] > 0 and out[3] > 0
-
-
-def test_dedup_events_keeps_min_timestamp_row(spark):
-    rows = [
-        ("k1", "2024-01-01 10:00:00", "late"),
-        ("k1", "2024-01-01 09:00:00", "early"),
-        ("k2", "2024-01-01 08:00:00", "only"),
-        ("k1", "2024-01-01 09:00:00", "early-dup"),
-    ]
-    df = spark.createDataFrame(rows, "k string, ts string, tag string").withColumn(
-        "ts", F.to_timestamp("ts")
-    )
-    # determinism across parallelism: same answer from 1 and 8 partitions
-    for parts in (1, 8):
-        got = {
-            (r.k, r.tag)
-            for r in dedup_events(df.repartition(parts), ["k"]).collect()
-        }
-        # min struct tie-break: ('early' < 'early-dup') lexicographically
-        assert got == {("k1", "early"), ("k2", "only")}
 
 
 def test_cc_no_warning_when_loop_never_runs(spark, edges_df):

@@ -1,7 +1,6 @@
 """Round-4 regression tests: the round-3 ADVICE items (word_ngrams short-doc
-crash, dedup_events orderability, serve LRU cap) plus the serve-path
-point-lookup shape (driver-side dict index — LMDB point-read parity,
-reference database.rs:199-205)."""
+crash, serve LRU cap) plus the serve-path point-lookup shape (driver-side
+dict index — LMDB point-read parity, reference database.rs:199-205)."""
 
 from __future__ import annotations
 
@@ -14,7 +13,6 @@ from wikipath_spark.operators.dedup import contamination_pairs, word_ngrams
 from wikipath_spark.plans.build import build_graph
 from wikipath_spark.plans.catalog import DatasetCatalog
 from wikipath_spark.sources.synthetic import synthetic_repos
-from wikipath_spark.streaming.dedup import dedup_events
 
 
 # --- word_ngrams: documents shorter than n must not crash (ADVICE high) ----
@@ -45,30 +43,6 @@ def test_contamination_tolerates_short_docs(spark):
     )
     rows = contamination_pairs(corpus, bench, min_shared=1).collect()
     assert [(r.doc_id, r.bench_id) for r in rows] == [(3, 101)]
-
-
-# --- dedup_events: non-orderable columns + null timestamps (ADVICE low) ----
-
-
-def test_dedup_events_map_column_and_null_ts(spark):
-    df = spark.createDataFrame(
-        [(1, None, {"k": "x"}, "b"), (1, 5, {"k": "y"}, "a"),
-         (1, 7, {"k": "z"}, "a"), (2, None, {"q": "w"}, "c")],
-        "k int, ts int, m map<string,string>, v string",
-    )
-    out = {r.k: r for r in dedup_events(df, ["k"], "ts").collect()}
-    # null ts sorts AFTER non-null: the ts=5 row wins for key 1
-    assert out[1].ts == 5 and out[1].v == "a" and out[1].m == {"k": "y"}
-    # a key whose rows are ALL null-ts still yields its (only) row
-    assert out[2].ts is None and out[2].v == "c"
-
-
-def test_dedup_events_rejects_non_orderable_tie_break(spark):
-    df = spark.createDataFrame(
-        [(1, 5, {"k": "y"})], "k int, ts int, m map<string,string>"
-    )
-    with pytest.raises(ValueError, match="non-orderable"):
-        dedup_events(df, ["k"], "ts", tie_break=["m"])
 
 
 # --- serve path: driver-side point index + LRU pin cap ---------------------

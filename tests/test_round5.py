@@ -59,11 +59,8 @@ def catalog5(spark, tmp_path_factory):
         # pre-fix behavior left one checkpointed |V|-frame PER ITERATION
         (lambda e, v: pagerank(e, vertices=v, tol=0.0, max_iter=8).ranks, 3),
         (lambda e, v: pagerank_fixedpoint(e, vertices=v, iters=8), 1),
-        (lambda e, v: pagerank_multi(e, [0, 5], vertices=v, iters=8, impl="sql"), 2),
-        (
-            lambda e, v: pagerank_multi_fixedpoint(e, [0, 5], vertices=v, iters=8, impl="sql"),
-            2,
-        ),
+        (lambda e, v: pagerank_multi(e, [0, 5], vertices=v, iters=8), 2),
+        (lambda e, v: pagerank_multi_fixedpoint(e, [0, 5], vertices=v, iters=8), 2),
         (lambda e, v: connected_components(e, max_iter=20), 1),
         (lambda e, v: k_core(e, 2, max_iter=20), 1),
         (lambda e, v: coreness(e, max_iter=30), 1),
@@ -345,12 +342,15 @@ def test_driver_bfs_matches_distributed_on_random_graphs(spark, edges_df):
         for a, b in edges:
             adj_out.setdefault(a, []).append(b)
             adj_in.setdefault(b, []).append(a)
-        e = edges_df(edges)
+        # cached once per graph: shortest_paths reads a cached frame as is
+        # instead of checkpointing the edge projection on every request
+        e = edges_df(edges).persist()
         for _ in range(4):
             s, t = rng.randrange(n), rng.randrange(n)
             dist = shortest_paths(e, s, t).to_dict()
             drv = shortest_paths_driver(adj_out, adj_in, s, t).to_dict()
             assert drv == dist, f"trial {trial}: {s}->{t}\ndriver={drv}\ndist={dist}"
+        e.unpersist()
 
 
 def test_driver_bfs_redirect_dict(spark):

@@ -371,13 +371,3 @@ def documents_as_media(documents: DataFrame, id_col: str = "doc_id", text_col: s
         (F.col(id_col) % 640 + 1).cast("int").alias("declared_width"),
         (F.col(id_col) % 480 + 1).cast("int").alias("declared_height"),
     )
-
-
-def _fake_decode(batch: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic pseudo-decode (kept for direct use in tests)."""
-    rows = [
-        _row_features(r.media_id, r.payload, r.kind, real=False,
-                      dw=r.declared_width, dh=r.declared_height)
-        for r in batch.itertuples()
-    ]
-    return pd.DataFrame(rows)

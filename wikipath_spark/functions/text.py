@@ -47,11 +47,6 @@ def h60(col: Column, seed: int = 0) -> Column:
     ).cast("bigint")
 
 
-def h60_sql(expr: str, seed: int = 0) -> str:
-    """DuckDB twin of :func:`h60` (string-templated SQL fragment)."""
-    return f"CAST('0x' || substr(md5(concat('{seed}:', {expr})), 1, 15) AS BIGINT)"
-
-
 # MinHash permutation family: ONE md5 per shingle, then k cheap 2-independent
 # universal-hash permutations  m_i = (a_i*h1 + b_i*h2 + i) mod (2^31-1)  over
 # two disjoint 30-bit chunks of that md5 — the standard trick replacing k
@@ -71,13 +66,6 @@ def minhash_perm_consts(i: int) -> tuple[int, int]:
     return (
         (2654435761 * (i + 1)) % MINHASH_P31,
         (2246822519 * (i + 1)) % MINHASH_P31,
-    )
-
-
-def minhash_perm(h1: Column, h2: Column, i: int) -> Column:
-    a, b = minhash_perm_consts(i)
-    return (F.lit(a).cast("long") * h1 + F.lit(b).cast("long") * h2 + F.lit(i)) % F.lit(
-        MINHASH_P31
     )
 
 
@@ -120,12 +108,6 @@ def stopword_ratio(col: Column) -> Column:
 
 def punct_ratio(col: Column) -> Column:
     return F.round(_punct_ratio_raw(col), 6)
-
-
-def mean_token_len(col: Column) -> Column:
-    toks = word_tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.round(F.try_divide(total, F.size(toks)), 6)
 
 
 def quality_score(col: Column) -> Column:

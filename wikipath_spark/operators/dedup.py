@@ -21,15 +21,17 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wikipath_spark.functions.text import (
     MINHASH_MASK30,
+    MINHASH_P31,
     char_ngrams,
-    h60,
-    minhash_perm,
+    minhash_perm_consts,
     simhash60,
 )
 
@@ -65,66 +67,6 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 4) -> DataFrame
     )
 
 
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, shset): each document's distinct shingles as ONE array row —
-    the un-exploded twin of :func:`shingles` (drops the same empty rows)."""
-    return df.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(char_ngrams(F.col(text_col), n)).alias("shset"),
-    )
-
-
-def _signatures_inline(
-    df: DataFrame, id_col: str, text_col: str, k: int, n: int
-) -> DataFrame:
-    """(id, m0..m{k-1}) with ZERO shuffle: the minhash of a document is a
-    per-row array fold — distinct char n-grams → one md5 each (a single
-    transform pass projected to an attribute, so the k permutation columns
-    read hashes instead of recomputing them) → array_min per permutation.
-    The explode+groupBy formulation shuffles |doc|·|shingles| rows to
-    compute the same min; it remains only as the verification input and the
-    SQL-oracle mirror (min over the same distinct-shingle set — identical
-    values, tested).  Rows with no shingle (len(text) < n) are dropped, the
-    same set the explode path drops."""
-    grams = F.array_distinct(char_ngrams(F.col(text_col), n))
-
-    def chunk(m, start: int):
-        return (
-            F.conv(F.substring(m, start, 8), 16, 10)
-            .cast("bigint")
-            .bitwiseAND(F.lit(MINHASH_MASK30))
-        )
-
-    hashed = F.transform(
-        F.transform(grams, lambda g: F.md5(g)),
-        # m is the lambda VARIABLE of the outer transform: the md5 is
-        # computed once per shingle and read twice, not derived twice
-        lambda m: F.struct(chunk(m, 1).alias("h1"), chunk(m, 9).alias("h2")),
-    )
-    base = df.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("id"), hashed.alias("_hp")
-    )
-    # ONE fold pass carrying a k-field min-struct accumulator: k separate
-    # array_min(transform(...)) columns would materialize k intermediate
-    # arrays per row (measured ~2× the whole fold's cost in interpreted
-    # higher-order evaluation).  The fold is projected to an attribute so the
-    # k output columns read it instead of re-running it k times.
-    from wikipath_spark.functions.text import MINHASH_P31
-
-    init = F.struct(*[F.lit(MINHASH_P31).cast("long").alias(f"m{i}") for i in range(k)])
-
-    def step(acc, p):
-        return F.struct(
-            *[
-                F.least(acc[f"m{i}"], minhash_perm(p["h1"], p["h2"], i)).alias(f"m{i}")
-                for i in range(k)
-            ]
-        )
-
-    folded = base.select("id", F.aggregate(F.col("_hp"), init, step).alias("_sig"))
-    return folded.select("id", *[F.col(f"_sig.m{i}").alias(f"m{i}") for i in range(k)])
-
-
 _GRAM_MD5_CACHE_CAP = 1 << 20  # ~100 MB worst case per Python worker
 
 
@@ -152,44 +94,33 @@ def _md5_prefix8(shs: set, cache: dict) -> bytes:
     return b"".join(parts)
 
 
-def _signatures_pandas(
-    df: DataFrame, id_col: str, text_col: str, k: int, n: int
-) -> DataFrame:
-    """Arrow-batched signature kernel: per batch, C-speed hashlib md5 per
-    distinct shingle (cached across rows — see :func:`_md5_prefix8`) and ONE
-    numpy broadcast (k × |shingles| multiply-mod) per document.
-    Bit-identical to :func:`_signatures_inline` (tested): the
-    md5 chunks are digest bytes 0-4 / 4-8 big-endian == hex substrings
-    1-8 / 9-16.  The interpreted JVM array fold costs ~12s at sf0.1 where
-    this kernel costs ~1s — the measured case for the mandated Arrow path."""
-    import numpy as np
-    import pandas as pd
-
-    from wikipath_spark.functions.text import MINHASH_P31, minhash_perm_consts
-
+def _perm_consts(k: int):
+    """``(A, B, I)``: the k permutations' ``a_i``, ``b_i`` and ``i``
+    (:func:`~wikipath_spark.functions.text.minhash_perm_consts`) as (k, 1)
+    int64 columns, broadcast against a document's (|shingles|,) hashes."""
     consts = [minhash_perm_consts(i) for i in range(k)]
     A = np.array([c[0] for c in consts], dtype=np.int64)[:, None]
     B = np.array([c[1] for c in consts], dtype=np.int64)[:, None]
-    I = np.arange(k, dtype=np.int64)[:, None]
+    return A, B, np.arange(k, dtype=np.int64)[:, None]
 
-    def batch(texts):  # unannotated: `from __future__ import annotations`
-        # stringifies hints and breaks pandas_udf eval-type inference
-        out = []
-        cache: dict = {}
-        for t in texts:
-            t = t.lower()
-            shs = {t[i : i + n] for i in range(len(t) - n + 1)}
-            raw = _md5_prefix8(shs, cache)
-            hs = np.frombuffer(raw, dtype=">u4").reshape(-1, 2).astype(np.int64)
-            h1, h2 = hs[:, 0] & MINHASH_MASK30, hs[:, 1] & MINHASH_MASK30
-            out.append(((A * h1 + B * h2 + I) % MINHASH_P31).min(axis=1).tolist())
-        return pd.Series(out)
 
-    udf = F.pandas_udf(batch, returnType="array<long>")
-    base = df.filter(F.length(F.col(text_col)) >= n).select(
-        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("_sig")
-    )
-    return base.select("id", *[F.col("_sig").getItem(i).alias(f"m{i}") for i in range(k)])
+def _doc_prefixes(text: str, n: int, cache: dict) -> bytes:
+    """The 8-byte md5 prefixes of one document's distinct lower-cased char
+    n-grams, concatenated (:func:`_md5_prefix8`).  Read as ``>i8`` they are
+    the hashed shingle set; as ``>u4`` pairs, the two minhash chunks."""
+    t = text.lower()
+    return _md5_prefix8({t[i : i + n] for i in range(len(t) - n + 1)}, cache)
+
+
+def _signature(raw: bytes, consts) -> list:
+    """One document's k minhashes from its :func:`_doc_prefixes`: the md5
+    chunks are digest bytes 0-4 / 4-8 big-endian (== hex substrings 1-8 /
+    9-16 in the DuckDB oracle), masked to 30 bits, then ONE numpy broadcast
+    (k × |shingles| multiply-mod) and a min per permutation."""
+    A, B, I = consts
+    hs = np.frombuffer(raw, dtype=">u4").reshape(-1, 2).astype(np.int64)
+    h1, h2 = hs[:, 0] & MINHASH_MASK30, hs[:, 1] & MINHASH_MASK30
+    return ((A * h1 + B * h2 + I) % MINHASH_P31).min(axis=1).tolist()
 
 
 def minhash_signatures(
@@ -198,49 +129,50 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = 8,
     n: int = 4,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(id, m0..m{k-1}) minhash signature columns.
 
     m_i = min over distinct shingles of (a_i*h1 + b_i*h2 + i) mod (2^31-1)
     over two 30-bit chunks of one md5 per shingle (functions/text.py).
-    ``impl="pandas"`` (default) is the vectorized Arrow kernel;
-    ``impl="sql"`` the pure-JVM array fold — identical outputs (tested)."""
-    if impl == "pandas":
-        return _signatures_pandas(df, id_col, text_col, k, n)
-    return _signatures_inline(df, id_col, text_col, k, n)
+    Arrow-batched kernel: per batch, C-speed hashlib md5 per distinct
+    shingle (cached across rows — see :func:`_md5_prefix8`) and ONE numpy
+    broadcast per document (:func:`_signature`).  The interpreted JVM array
+    fold it replaced cost ~12s at sf0.1 where this kernel costs ~1s — the
+    measured case for the mandated Arrow path.  Rows with no shingle
+    (len(text) < n) are dropped; the DuckDB oracle ``minhash_signatures``
+    checks every value."""
+    consts = _perm_consts(k)
+
+    def batch(texts):  # unannotated: `from __future__ import annotations`
+        # stringifies hints and breaks pandas_udf eval-type inference
+        cache: dict = {}
+        return pd.Series([_signature(_doc_prefixes(t, n, cache), consts) for t in texts])
+
+    udf = F.pandas_udf(batch, returnType="array<long>")
+    base = df.filter(F.length(F.col(text_col)) >= n).select(
+        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("_sig")
+    )
+    return base.select("id", *[F.col("_sig").getItem(i).alias(f"m{i}") for i in range(k)])
 
 
 def _sig_and_hashed_sets_pandas(
     df: DataFrame, id_col: str, text_col: str, k: int, n: int
 ) -> DataFrame:
     """(id, _sig array<long>, shset array<long>) in ONE Arrow pass: the
-    minhash kernel of :func:`_signatures_pandas` already md5s every distinct
+    minhash kernel of :func:`minhash_signatures` already md5s every distinct
     shingle — this variant additionally emits those 8-byte md5 prefixes as an
     int64 set, so LSH verification can intersect fixed-width longs instead of
     re-deriving (and shipping) string shingle arrays.  64-bit hashing is
     collision-safe for Jaccard purposes: two distinct shingles of one
     document pair colliding has probability ~|set|²/2^64 ≈ 1e-14."""
-    import numpy as np
-    import pandas as pd
+    consts = _perm_consts(k)
 
-    from wikipath_spark.functions.text import MINHASH_P31, minhash_perm_consts
-
-    consts = [minhash_perm_consts(i) for i in range(k)]
-    A = np.array([c[0] for c in consts], dtype=np.int64)[:, None]
-    B = np.array([c[1] for c in consts], dtype=np.int64)[:, None]
-    I = np.arange(k, dtype=np.int64)[:, None]
-
-    def batch(texts):  # unannotated on purpose (see _signatures_pandas)
+    def batch(texts):  # unannotated on purpose (see minhash_signatures)
         out_sig, out_sh = [], []
         cache: dict = {}
         for t in texts:
-            t = t.lower()
-            shs = {t[i : i + n] for i in range(len(t) - n + 1)}
-            raw = _md5_prefix8(shs, cache)
-            hs = np.frombuffer(raw, dtype=">u4").reshape(-1, 2).astype(np.int64)
-            h1, h2 = hs[:, 0] & MINHASH_MASK30, hs[:, 1] & MINHASH_MASK30
-            out_sig.append(((A * h1 + B * h2 + I) % MINHASH_P31).min(axis=1).tolist())
+            raw = _doc_prefixes(t, n, cache)
+            out_sig.append(_signature(raw, consts))
             out_sh.append(np.frombuffer(raw, dtype=">i8").tolist())
         return pd.DataFrame({"_sig": out_sig, "shset": out_sh})
 
@@ -379,21 +311,16 @@ def _verify_jaccard(
 
 def _hashed_sets_pandas(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, shset array<long>): the document's distinct shingles as 8-byte
-    md5-prefix int64s — the fixed-width twin of :func:`_shingle_sets` for
-    verification (array_intersect over longs measured ~25× faster than over
-    the string arrays; collision odds per pair ~|set|²/2^64, negligible)."""
-    import numpy as np
-    import pandas as pd
+    md5-prefix int64s (:func:`_doc_prefixes`) for verification
+    (array_intersect over longs measured ~25× faster than over the string
+    arrays; collision odds per pair ~|set|²/2^64, negligible).  Rows with
+    len(text) < n are dropped, as :func:`shingles` drops them."""
 
-    def batch(texts):  # unannotated on purpose (see _signatures_pandas)
-        out = []
+    def batch(texts):  # unannotated on purpose (see minhash_signatures)
         cache: dict = {}
-        for t in texts:
-            t = t.lower()
-            shs = {t[i : i + n] for i in range(len(t) - n + 1)}
-            raw = _md5_prefix8(shs, cache)
-            out.append(np.frombuffer(raw, dtype=">i8").tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [np.frombuffer(_doc_prefixes(t, n, cache), dtype=">i8").tolist() for t in texts]
+        )
 
     udf = F.pandas_udf(batch, returnType="array<long>")
     return df.filter(F.length(F.col(text_col)) >= n).select(
@@ -424,7 +351,6 @@ def _ngram_vocab_probe(df: DataFrame, text_col: str, n: int, cap: int):
     so the shingle-bearing doc count (needed for lane blocking and the cost
     model) rides the same job — ``orderBy`` puts the summed sentinel first.
     Returns (vocab_rows, n_docs)."""
-    import pandas as pd
 
     def partial(batches):
         from collections import Counter
@@ -473,8 +399,6 @@ def _ngram_bitmap_pairs(
     ~1e-14 collision odds).  Replication factor is the block count (each doc
     participates in every pair involving its block), bounded by the lane
     gate: the kernel input is ~n_docs·B rows of int32 code arrays."""
-    import numpy as np
-    import pandas as pd
 
     spark = df.sparkSession
     code_of = {s: i for i, s in enumerate(sorted(vocab))}
@@ -776,45 +700,16 @@ def simhash_fingerprints(
 ) -> DataFrame:
     """(id, simhash) — 60-bit SimHash over word tokens.
 
-    Engine path: the shuffle-free array-aggregate formulation
+    The shuffle-free array-aggregate formulation
     (:func:`wikipath_spark.functions.text.simhash60`) — per-row integer bit
-    votes with JVM array builtins, zero extra rows.  The exploded twin below
-    (60 rows per token through the shuffle) is kept as the SQL-oracle mirror;
-    a unit test asserts both produce identical fingerprints (the votes are
-    exact integer sums, so order of aggregation cannot matter).
+    votes with JVM array builtins, zero extra rows.  The DuckDB oracle
+    ``simhash`` explodes (doc, bit) votes instead; the votes are exact
+    integer sums, so the aggregation order cannot matter.
     NB: docs with zero word tokens fingerprint to 0 here and are absent from
     the exploded form (explode of an empty array emits nothing).
     """
     return df.select(
         F.col(id_col).alias("id"), simhash60(F.col(text_col)).alias("simhash")
-    )
-
-
-def simhash_fingerprints_exploded(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash) via explode + groupBy — per (doc, bit) vote summation.
-    The oracle-mirror formulation (60× row blowup; do not use at scale)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)).alias("tok"),
-    )
-    hashed = toks.select("id", h60(F.col("tok"), 9).alias("h"))
-    bits = hashed.select(
-        "id", F.explode(F.sequence(F.lit(0), F.lit(59))).alias("b"), "h"
-    ).select(
-        "id",
-        "b",
-        # exact integer bit extraction (shiftright accepts a column in SQL form)
-        (F.expr("shiftright(h, cast(b as int))") % 2 * 2 - 1).alias("vote"),
-    )
-    votes = bits.groupBy("id", "b").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("id").agg(
-        F.sum(
-            F.when(F.col("v") > 0, F.expr("shiftleft(cast(1 as bigint), cast(b as int))")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
     )
 
 

@@ -482,8 +482,8 @@ def _csr_partial_vecsum(pdf: pd.DataFrame) -> pd.DataFrame:
     dst: factorize dst into dense local indices (a per-partition CSR column
     index), then one ``np.add.at`` over a 2-D array, so the per-row
     Arrow/pandas overhead is amortized over all k components at once (this
-    is where the CSR kernel beats the JVM path: the SQL formulation must
-    explode k rows per message)."""
+    is where the CSR kernel beats a JVM aggregate, which must explode k
+    rows per message)."""
     dst_codes, dst_uniques = pd.factorize(pdf["dst"], sort=False)
     mat = np.vstack(pdf["vec"].to_numpy())
     # dtype-generic: float64 for the float kernel, int64 for the fixed-point
@@ -499,7 +499,6 @@ def pagerank_multi(
     vertices: DataFrame | None = None,
     damping: float = 0.85,
     iters: int = 20,
-    impl: str = "csr",
     budget_s: float | None = None,
 ) -> DataFrame:
     """k personalized PageRank walks computed simultaneously: the per-vertex
@@ -511,24 +510,15 @@ def pagerank_multi(
     This is the wide-state workload the CSR kernel exists for (VERDICT r3
     item 7): at one double of state per vertex the Arrow crossing loses to
     the JVM hash aggregate (BENCH/BASELINE.md, −34%), but with k doubles the
-    kernel moves k values per Arrow row while the pure-SQL twin must
-    posexplode into k×|E| rows through the shuffle.
+    kernel moves k values per Arrow row.  Messages stay ONE row carrying an
+    array<double>; aggregation is a 2-D ``np.add.at`` inside
+    ``applyInPandas`` over dst-hash buckets (each dst in exactly one bucket
+    ⇒ sums are final; :func:`_vector_sums`).
 
-    impls (bit-for-bit different summation orders, equal within 1e-12):
-
-    - ``"csr"``     — messages stay ONE row carrying an array<double>;
-      aggregation is a 2-D ``np.add.at`` inside ``applyInPandas`` over
-      dst-hash buckets (each dst in exactly one bucket ⇒ sums are final).
-    - ``"sql"``     — posexplode to (dst, i, contrib), JVM hash aggregate,
-      reassemble with array_sort(collect_list(struct(i, s))).
-    - k separate scalar passes — benchmarked as ``pagerank_multi([s], "sql")``
-      per seed (scripts/bench_widestate.py), the round-3 status quo.
-
-    Fixed ``iters`` supersteps (the benchmark compares equal work; converged
-    personalized ranks need ~20).  Returns ``(page_id, ranks array<double>)``
-    with Σ_v ranks[v][i] = 1 per component.  Oracle:
-    :func:`pagerank_multi_numpy_oracle` (tests assert allclose 1e-9 and
-    csr == sql within 1e-12)."""
+    Fixed ``iters`` supersteps (converged personalized ranks need ~20).
+    Returns ``(page_id, ranks array<double>)`` with Σ_v ranks[v][i] = 1 per
+    component.  Oracle: :func:`pagerank_multi_numpy_oracle` (tests assert
+    allclose 1e-9)."""
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "pagerank_multi")
@@ -560,7 +550,7 @@ def pagerank_multi(
             joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
             w = F.lit(1.0) / F.col("od")
             msgs = joined.select("dst", F.transform("ranks", lambda x: x * w).alias("vec"))
-            sums = _vector_sums(msgs, impl, parts, "double")
+            sums = _vector_sums(msgs, parts, "double")
             new_vec = F.array(
                 *[
                     F.lit(1.0 - damping) * F.element_at("slot", i + 1)
@@ -573,8 +563,12 @@ def pagerank_multi(
                 ]
             )
             obs = Observation(f"prm_{it}")
+            # the static vflag, not ranks, takes the sums: a checkpoint keeps
+            # its plan's size estimate, and ranks ⋈ sums(ranks) would square
+            # it every superstep (its bit length doubles; by ~20 supersteps
+            # Catalyst spends minutes multiplying BigInts to plan one)
             ranks = state.advance(
-                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
+                vflag.join(sums, vflag["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
                 .observe(obs, *_dangling_sums("ranks", k, zero))
             )
@@ -604,25 +598,16 @@ def _dangling_sums(col: str, k: int, zero) -> list:
     ]
 
 
-def _vector_sums(msgs: DataFrame, impl: str, parts: int, elem: str) -> DataFrame:
+def _vector_sums(msgs: DataFrame, parts: int, elem: str) -> DataFrame:
     """Per-dst sums of the ``vec`` arrays (of ``elem``) of ``(dst, vec)``
-    messages, by the ``impl`` strategy of :func:`pagerank_multi`."""
-    if impl == "csr":
-        return (
-            msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(parts)))
-            .groupBy("_b")
-            .applyInPandas(
-                lambda pdf: _csr_partial_vecsum(pdf[["dst", "vec"]]),
-                schema=f"dst long, vec array<{elem}>",
-            )
-        )
+    messages: :func:`_csr_partial_vecsum` over ``parts`` dst-hash buckets."""
     return (
-        msgs.select("dst", F.posexplode("vec").alias("i", "c"))
-        .groupBy("dst", "i")
-        .agg(F.sum("c").alias("s"))
-        .groupBy("dst")
-        .agg(F.array_sort(F.collect_list(F.struct("i", "s"))).alias("p"))
-        .select("dst", F.transform("p", lambda st: st["s"]).alias("vec"))
+        msgs.withColumn("_b", F.pmod(F.xxhash64("dst"), F.lit(parts)))
+        .groupBy("_b")
+        .applyInPandas(
+            lambda pdf: _csr_partial_vecsum(pdf[["dst", "vec"]]),
+            schema=f"dst long, vec array<{elem}>",
+        )
     )
 
 
@@ -657,7 +642,6 @@ def pagerank_multi_fixedpoint(
     scale: int = 10**12,
     damping_num: int = 85,
     damping_den: int = 100,
-    impl: str = "csr",
 ) -> DataFrame:
     """Bit-portable integer twin of :func:`pagerank_multi`: k single-seed
     personalized fixed-point PageRank walks as ONE vector loop — per-vertex
@@ -672,9 +656,9 @@ def pagerank_multi_fixedpoint(
       with jump = ((den−num)·scale) div den
 
     Because integer sums commute and truncating division is deterministic,
-    ANY aggregation strategy produces the same bits — so running this with
-    ``impl="csr"`` hash-verifies the Arrow 2-D scatter-add kernel itself
-    against a DuckDB SQL twin (driver query ``graph_pagerank_multi_fixed``),
+    ANY aggregation strategy produces the same bits — so this run
+    hash-verifies the Arrow 2-D scatter-add kernel itself against a DuckDB
+    SQL twin (driver query ``graph_pagerank_multi_fixed``),
     closing the rows-only gap of the float vector kernel exactly the way
     ``graph_pagerank_fixed`` closed the scalar one.  Returns
     ``(page_id, ranks array<long>)``."""
@@ -704,7 +688,7 @@ def pagerank_multi_fixedpoint(
         for it in range(1, iters + 1):
             joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
             msgs = joined.select("dst", F.expr("transform(ranks, x -> x div od)").alias("vec"))
-            sums = _vector_sums(msgs, impl, parts, "long")
+            sums = _vector_sums(msgs, parts, "long")
             # seed term computed in exact Python ints per component
             seed_terms = [jump + (damping_num * dm[i]) // damping_den for i in range(k)]
             new_vec = F.array(
@@ -718,8 +702,8 @@ def pagerank_multi_fixedpoint(
                 ]
             )
             obs = Observation(f"prmf_{it}")
-            ranks = state.advance(
-                ranks.join(sums, ranks["page_id"] == sums["dst"], "left")
+            ranks = state.advance(  # vflag takes the sums: see pagerank_multi
+                vflag.join(sums, vflag["page_id"] == sums["dst"], "left")
                 .select("page_id", "is_dangling", "slot", new_vec.alias("ranks"))
                 .observe(obs, *_dangling_sums("ranks", k, zero))
             )

@@ -122,7 +122,7 @@ def curate_corpus(
         gated, id_col="doc_id", text_col="text", n=ngram, threshold=near_dup_threshold
     )
     # Completeness guard for rule (b): a text shorter than `ngram` CHARS has
-    # an empty char-shingle set (the exact rows _shingle_sets drops), so its
+    # an empty char-shingle set (the exact rows the shingle kernels drop), so its
     # J=1 duplicate pair never generates and the fusion alone would keep
     # both copies.  Exact dedup restricted to those rows only — the filter
     # matches nothing on natural corpora (bench minimum is 10 words), so

@@ -14,37 +14,11 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        exts = spark.conf.get("spark.sql.extensions", "") or ""
-    except Exception:
-        return False
-    return "IcebergSparkSessionExtensions" in exts
-
-
 def load_table(spark: SparkSession, base: str, name: str) -> DataFrame:
     """Read one table from a base dir (parquet) or catalog (Iceberg)."""
     if base.startswith("catalog:"):
         return spark.read.table(f"{base[len('catalog:'):]}.{name}")
     return spark.read.parquet(os.path.join(base, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, base: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, base, n) for n in names}
 
 
 def write_table(
