@@ -199,6 +199,8 @@ def test_bfs_distances_result_carries_its_checkpoints(edges_df, leaked):
 class _FailingSave:
     """A checkpoint manager whose every save raises."""
 
+    EVERY = 3  # the first save comes due at depth 3, with three levels kept
+
     def save(self, *args):
         raise RuntimeError("disk full")
 
@@ -210,7 +212,7 @@ def test_multi_source_bfs_releases_everything_on_abort(edges_df, leaked):
     with pytest.raises(QueryBudgetExceeded):
         multi_source_bfs(df, [0, 5], budget_s=0.0)
     with pytest.raises(RuntimeError, match="disk full"):
-        multi_source_bfs(df, [0, 5], checkpoint_mgr=_FailingSave(), checkpoint_interval=3)
+        multi_source_bfs(df, [0, 5], checkpoint_mgr=_FailingSave())
     assert not leaked()
 
 

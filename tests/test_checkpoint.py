@@ -3,8 +3,14 @@ checkpoint, and get the identical result (north-rule resumability)."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
+from wikipath_spark.operators.bfs import bfs_distances, multi_source_bfs
+from wikipath_spark.operators.components import connected_components
+from wikipath_spark.operators.kcore import coreness, k_core
+from wikipath_spark.operators.labelprop import label_propagation
 from wikipath_spark.operators.pagerank import pagerank
 from wikipath_spark.plans.checkpoint import CheckpointManager
 
@@ -17,7 +23,7 @@ class _StopAfter(Exception):
 
 def test_checkpoint_save_load_manifest(spark, edges_df, tmp_path):
     mgr = CheckpointManager(str(tmp_path), "run1")
-    res = pagerank(edges_df(EDGES), checkpoint_mgr=mgr, checkpoint_interval=5)
+    res = pagerank(edges_df(EDGES), checkpoint_mgr=mgr)
     latest = mgr.latest()
     assert latest is not None
     state, metric = mgr.load(spark, latest)
@@ -29,62 +35,120 @@ def test_checkpoint_save_load_manifest(spark, edges_df, tmp_path):
     assert metric == pytest.approx(res.delta) or metric >= res.delta
 
 
-def test_resume_identical_to_uninterrupted(spark, edges_df, tmp_path):
-    df = edges_df(EDGES)
-    full = pagerank(df, max_iter=40)
-    want = {r.page_id: r.rank for r in full.ranks.collect()}
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
 
-    # interrupted run: checkpoint every 3 supersteps, abort after superstep 6
-    mgr = CheckpointManager(str(tmp_path), "run2")
 
-    def bomb(it, ranks, delta):
-        if it >= 6:
+def _pagerank(df, stop=None, **durable):
+    """PageRank's (supersteps, ranks), or ``None`` when a hook killed it
+    after superstep ``stop``."""
+
+    def kill(it, ranks, delta):
+        if it == stop:
             raise _StopAfter()
 
-    with pytest.raises(_StopAfter):
-        pagerank(df, max_iter=40, checkpoint_mgr=mgr, checkpoint_interval=3, on_superstep=bomb)
-    assert mgr.latest() == 6
-
-    resumed = pagerank(df, max_iter=40, checkpoint_mgr=mgr, checkpoint_interval=3, resume=True)
-    got = {r.page_id: r.rank for r in resumed.ranks.collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-12)
+    try:
+        res = pagerank(df, on_superstep=kill if stop else None, **durable)
+    except _StopAfter:
+        return None
+    return res.iterations, _rows(res.ranks)
 
 
-def test_cc_and_lpa_checkpoint_resume(spark, edges_df, tmp_path):
-    from wikipath_spark.operators.components import connected_components
-    from wikipath_spark.operators.labelprop import label_propagation
+# a chain with a side branch and a back edge; a path peeling into a triangle;
+# three linked triangles, on which LPA reaches its fixpoint in 4 supersteps
+_CHAIN = [(i, i + 1) for i in range(8)] + [(3, 20), (20, 21), (21, 22), (5, 0)]
+_CORE = [(i, i + 1) for i in range(10)] + [(10, 11), (11, 12), (12, 10)]
+_TWO_PATHS = [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102)]
+_TRIANGLES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3), (6, 7), (7, 8), (8, 6), (5, 6)]
 
-    el = [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102)]
+# entry point -> (edge list, run(df, stop, **durable), stop step).  Every
+# entry point but PageRank stops at a smaller max_iter / max_depth.
+RESUMABLE = {
+    "pagerank": (EDGES, _pagerank, 30),
+    "connected_components": (
+        _TWO_PATHS,
+        lambda df, stop=None, **kw: _rows(connected_components(df, max_iter=stop or 50, **kw)),
+        2,
+    ),
+    "label_propagation": (
+        _TRIANGLES,
+        lambda df, stop=None, **kw: _rows(label_propagation(df, max_iter=stop or 10, **kw)),
+        2,
+    ),
+    "k_core": (
+        _CORE, lambda df, stop=None, **kw: _rows(k_core(df, 2, max_iter=stop or 100, **kw)), 2
+    ),
+    "coreness": (
+        _CORE, lambda df, stop=None, **kw: _rows(coreness(df, max_iter=stop or 100, **kw)), 2
+    ),
+    "multi_source_bfs": (
+        _CHAIN,
+        lambda df, stop=None, **kw: _rows(multi_source_bfs(df, [0, 5], max_depth=stop or 30, **kw)),
+        4,
+    ),
+    "bfs_distances": (
+        _CHAIN,
+        lambda df, stop=None, **kw: _rows(bfs_distances(df, 0, max_depth=stop or 30, **kw)),
+        3,
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(RESUMABLE))
+def test_resume_identical_to_uninterrupted(spark, edges_df, tmp_path, entry):
+    """Kill at step k, resume from the durable checkpoint: the output of the
+    uninterrupted run, bit for bit (PageRank: also its superstep count).  A
+    finished run's newest checkpoint is its last step, marked final, and a
+    resume from it returns it without running another step."""
+    el, run, stop = RESUMABLE[entry]
     df = edges_df(el)
+    finished = CheckpointManager(str(tmp_path), "finished")
+    want = run(df, checkpoint_mgr=finished)
+    last = finished.latest()
+    assert last is not None and finished.final(last)
+    assert run(df, checkpoint_mgr=finished, resume=True) == want
+    assert finished.latest() == last  # no step ran, so none was saved
 
-    full_cc = {r.page_id: r.component for r in connected_components(df).collect()}
-    mgr = CheckpointManager(str(tmp_path), "cc")
-    connected_components(df, checkpoint_mgr=mgr, checkpoint_interval=2)
-    assert mgr.latest() is not None
-    resumed = {
-        r.page_id: r.component
-        for r in connected_components(df, checkpoint_mgr=mgr, resume=True).collect()
-    }
-    assert resumed == full_cc
+    killed = CheckpointManager(str(tmp_path), "killed")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the stopped run has no fixpoint
+        run(df, stop, checkpoint_mgr=killed)
+    assert killed.latest() == stop
+    assert not killed.final(stop)
+    assert run(df, checkpoint_mgr=killed, resume=True) == want
 
-    full_lpa = {r.page_id: r.label for r in label_propagation(df, max_iter=6).collect()}
-    mgr2 = CheckpointManager(str(tmp_path), "lpa")
-    label_propagation(df, max_iter=6, checkpoint_mgr=mgr2, checkpoint_interval=2)
-    assert mgr2.latest() is not None
-    resumed2 = {
-        r.page_id: r.label
-        for r in label_propagation(
-            df, max_iter=6, checkpoint_mgr=mgr2, resume=True
-        ).collect()
-    }
-    assert resumed2 == full_lpa
+
+def test_pagerank_resume_under_tighter_tol(edges_df, tmp_path):
+    """A checkpoint saved at convergence is final only under the tol that
+    saved it: a resume with a tighter tol iterates on to the uninterrupted
+    run's supersteps and ranks."""
+    df = edges_df(EDGES)
+    want = _pagerank(df, tol=1e-9)
+    mgr = CheckpointManager(str(tmp_path), "tol")
+    loose = _pagerank(df, checkpoint_mgr=mgr)
+    assert loose[0] < want[0] and mgr.final(mgr.latest())
+    assert _pagerank(df, tol=1e-9, checkpoint_mgr=mgr, resume=True) == want
+
+
+@pytest.mark.parametrize("entry", ["connected_components", "label_propagation", "k_core", "coreness"])
+def test_no_fixpoint_warning_on_every_short_result(edges_df, tmp_path, entry):
+    """A run that exhausts max_iter warns, and so does a resume at that
+    bound from its checkpoint: it runs no step and returns the same state,
+    still short of its fixpoint."""
+    el, run, _stop = RESUMABLE[entry]
+    df = edges_df(el)
+    mgr = CheckpointManager(str(tmp_path), entry)
+    with pytest.warns(UserWarning, match="no fixpoint"):
+        run(df, 1, checkpoint_mgr=mgr)
+    assert mgr.latest() == 1
+    with pytest.warns(UserWarning, match="no fixpoint"):
+        run(df, 1, checkpoint_mgr=mgr, resume=True)
+    assert mgr.latest() == 1
 
 
 def test_corrupt_checkpoint_detected(spark, edges_df, tmp_path):
     mgr = CheckpointManager(str(tmp_path), "run3")
-    pagerank(edges_df(EDGES), checkpoint_mgr=mgr, checkpoint_interval=5)
+    pagerank(edges_df(EDGES), checkpoint_mgr=mgr)
     latest = mgr.latest()
     # truncate the recorded row count to simulate corruption
     import json, os

@@ -171,7 +171,7 @@ def test_lpa_durable_runs_stay_distributed(parquet, tmp_path, lane_calls):
 
     edges = parquet("edges", LANE_CASES["random"][0])
     mgr = CheckpointManager(str(tmp_path / "ckpt"), "run")
-    label_propagation(edges, max_iter=4, checkpoint_mgr=mgr, checkpoint_interval=2)
+    label_propagation(edges, max_iter=4, checkpoint_mgr=mgr)
     label_propagation(edges, max_iter=6, checkpoint_mgr=mgr, resume=True)
     label_propagation(edges, resume=True)
     assert lane_calls["lpa"] == 0

@@ -185,7 +185,7 @@ def test_pagerank_durable_runs_stay_distributed(parquet, tmp_path, driver_calls)
 
     edges = parquet("edges", _HUB)
     mgr = CheckpointManager(str(tmp_path / "ckpt"), "run")
-    pagerank(edges, checkpoint_mgr=mgr, checkpoint_interval=5)
+    pagerank(edges, checkpoint_mgr=mgr)
     pagerank(edges, checkpoint_mgr=mgr, resume=True)
     pagerank(edges, resume=True)
     assert driver_calls == []
@@ -305,7 +305,7 @@ def test_pagerank_setup_failure_does_not_leak(spark, edges_df, tmp_path):
     sc = spark.sparkContext
     df = edges_df([(i, (i * 3) % 20) for i in range(60)])
     mgr = CheckpointManager(str(tmp_path), "leak")
-    pagerank(df, checkpoint_mgr=mgr, checkpoint_interval=2, max_iter=4, tol=0.0)
+    pagerank(df, checkpoint_mgr=mgr, max_iter=4, tol=0.0)
     latest = mgr.latest()
     marker = os.path.join(str(tmp_path), "leak", f"superstep={latest}", "_COMMITTED")
     meta = json.load(open(marker))

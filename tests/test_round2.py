@@ -160,30 +160,6 @@ def test_pagerank_restores_confs_on_error(spark, edges_df):
         assert spark.conf.get(k) == v, k
 
 
-def test_bfs_distances_checkpoint_resume(spark, tmp_path, edges_df):
-    """BFS resumed from a mid-run durable checkpoint must finish with the
-    exact distances of an uninterrupted run."""
-    from wikipath_spark.operators.bfs import bfs_distances
-    from wikipath_spark.plans.checkpoint import CheckpointManager
-
-    # a 10-deep chain with side branches
-    el = [(i, i + 1) for i in range(10)] + [(i, 100 + i) for i in range(0, 10, 2)]
-    edges = edges_df(el)
-    full = {r.page_id: r.distance for r in bfs_distances(edges, 0).collect()}
-
-    mgr = CheckpointManager(str(tmp_path), "bfs1")
-    bfs_distances(edges, 0, checkpoint_mgr=mgr, checkpoint_interval=3)
-    assert mgr.latest() is not None and mgr.latest() >= 3
-
-    resumed = {
-        r.page_id: r.distance
-        for r in bfs_distances(
-            edges, 0, checkpoint_mgr=mgr, checkpoint_interval=3, resume=True
-        ).collect()
-    }
-    assert resumed == full
-
-
 # ----------------------------------------------- checkpoint content verify
 
 

@@ -127,69 +127,6 @@ def test_pinned_lru_evicts_and_unpersists(spark, catalog):
     assert not a.lookup.storageLevel.useMemory
 
 
-# --- checkpoint/resume for the round-3 iterative ops (VERDICT item 2) ------
-
-
-def test_multi_source_bfs_resume_identical(spark, edges_df, tmp_path):
-    """Kill-at-level-k equivalent: an interrupted run (max_depth=4) leaves a
-    committed checkpoint; the resumed run must equal the uninterrupted one."""
-    from wikipath_spark.operators.bfs import multi_source_bfs
-    from wikipath_spark.plans.checkpoint import CheckpointManager
-
-    el = [(i, i + 1) for i in range(12)] + [(3, 20), (20, 21), (21, 22), (5, 0)]
-    df = edges_df(el)
-    srcs = [0, 5]
-    want = sorted(map(tuple, multi_source_bfs(df, srcs).collect()))
-
-    mgr = CheckpointManager(str(tmp_path), "msbfs")
-    multi_source_bfs(df, srcs, max_depth=4, checkpoint_mgr=mgr, checkpoint_interval=2)
-    assert mgr.latest() == 4
-    resumed = multi_source_bfs(
-        df, srcs, checkpoint_mgr=mgr, checkpoint_interval=2, resume=True
-    )
-    assert sorted(map(tuple, resumed.collect())) == want
-
-
-def test_k_core_resume_identical(spark, edges_df, tmp_path):
-    from wikipath_spark.operators.kcore import k_core
-    from wikipath_spark.plans.checkpoint import CheckpointManager
-
-    # a path peels from both ends (one round per layer) into a triangle core
-    el = [(i, i + 1) for i in range(10)] + [(10, 11), (11, 12), (12, 10)]
-    df = edges_df(el)
-    want = sorted(map(tuple, k_core(df, k=2).collect()))
-    assert want  # the triangle survives
-
-    mgr = CheckpointManager(str(tmp_path), "kcore")
-    import warnings as w
-
-    with w.catch_warnings():
-        w.simplefilter("ignore")
-        k_core(df, k=2, max_iter=3, checkpoint_mgr=mgr, checkpoint_interval=2)
-    assert mgr.latest() == 2
-    resumed = k_core(df, k=2, checkpoint_mgr=mgr, checkpoint_interval=2, resume=True)
-    assert sorted(map(tuple, resumed.collect())) == want
-
-
-def test_coreness_resume_identical(spark, edges_df, tmp_path):
-    from wikipath_spark.operators.kcore import coreness
-    from wikipath_spark.plans.checkpoint import CheckpointManager
-
-    el = [(i, i + 1) for i in range(10)] + [(10, 11), (11, 12), (12, 10)]
-    df = edges_df(el)
-    want = sorted(map(tuple, coreness(df).collect()))
-
-    mgr = CheckpointManager(str(tmp_path), "coreness")
-    import warnings as w
-
-    with w.catch_warnings():
-        w.simplefilter("ignore")
-        coreness(df, max_iter=3, checkpoint_mgr=mgr, checkpoint_interval=2)
-    assert mgr.latest() == 2
-    resumed = coreness(df, checkpoint_mgr=mgr, checkpoint_interval=2, resume=True)
-    assert sorted(map(tuple, resumed.collect())) == want
-
-
 # --- wall-clock budgets on the batched/analytics loops (VERDICT item 4) ----
 
 

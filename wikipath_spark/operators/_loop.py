@@ -7,11 +7,11 @@ shuffle parallelism should track data volume rather than cores
 (:func:`loop_confs`).
 
 :class:`LoopState` is the one owner of the state frames of every Spark loop
-that replaces its state each superstep (PageRank and its fixed-point and
-vector twins, LPA, CC, k-core, coreness, distributed redirect compression):
-a checkpoint every superstep, release of superseded and abandoned frames,
-and the checkpoint ids carried on the result.  ``shortest_paths`` uses it
-only to hold the frames it reads and release them on every exit.
+(PageRank and its twins, LPA, CC, k-core, coreness, the multi-source BFS,
+distributed redirect compression): a checkpoint every superstep, release of
+superseded and abandoned frames, the checkpoint ids carried on the result,
+and for the resumable loops the durable resume and save rule.
+``shortest_paths`` uses it only to hold the frames it reads.
 
 :func:`driver_edge_arrays` is the one size gate of every driver-side
 small-graph lane (the graph build's driver lane gates on the same
@@ -170,11 +170,15 @@ def release_checkpoint(df) -> None:
 
 
 class LoopState:
-    """Context manager that owns one Spark loop's frames and their release.
+    """Context manager that owns one Spark loop's frames, their release and
+    its durable resume and saves.
 
-    The loop assigns its initial state to ``frame`` and hands each new state
-    to :meth:`advance`; :meth:`hold` registers the frames it reads but never
-    replaces.  The release policy lives only here:
+    A resumable loop takes its start from :meth:`restore`, sets ``frame``,
+    runs ``for step in state.steps(max_iter)``, hands each new state to
+    :meth:`advance` (or sets ``frame``) and ends each step with
+    :meth:`commit`.  :meth:`hold` registers the frames it reads but never
+    replaces, :meth:`keep` those the result reads besides ``frame`` (the BFS
+    levels).  The release policy lives only here:
 
     - :meth:`advance` checkpoints every step (:func:`checkpoint_tracked`; the
       eager lineage truncation measured 2x faster than letting the plan grow
@@ -182,16 +186,24 @@ class LoopState:
       self-contained, so the predecessor is released at once.
     - Held frames are released on every exit.
     - On an exception (budget timeout, hook failure, corrupt checkpoint) the
-      current state is released too — a long-lived serve session would
-      otherwise keep executor storage per failed call.  On success it stays
-      alive for the caller, and :meth:`result` carries its checkpoint ids on
-      the returned frame so a caller that is done with it can
-      :func:`release_checkpoint` it.
+      current state and the kept frames are released too — a long-lived
+      serve session would otherwise keep executor storage per failed call.
+      On success they stay alive for the caller, and :meth:`result` carries
+      their checkpoint ids on the returned frame so a caller that is done
+      with it can :func:`release_checkpoint` it.
     """
 
-    def __init__(self):
+    def __init__(self, checkpoint_mgr=None, resume: bool = False):
         self.frame = None
+        self.step = 0  # the last step run, or the resumed checkpoint's
+        self.metric = None  # the resumed checkpoint's convergence metric
+        self.done = False  # the loop reached its fixpoint
+        self._mgr = checkpoint_mgr
+        self._resume = resume
+        self._cols: list[str] | None = None
+        self._last = 0
         self._held: list = []
+        self._kept: list = []
 
     def __enter__(self) -> "LoopState":
         return self
@@ -199,7 +211,7 @@ class LoopState:
     def __exit__(self, exc_type, exc, tb) -> None:
         stale = list(self._held)
         if exc_type is not None:
-            stale.append(self.frame)
+            stale += [self.frame, *self._kept]
         for df in stale:
             if df is not None:
                 release_checkpoint(df)
@@ -207,6 +219,31 @@ class LoopState:
     def hold(self, df):
         self._held.append(df)
         return df
+
+    def keep(self, df):
+        self._kept.append(df)
+        return df
+
+    def restore(self, spark: SparkSession, cols: list[str]):
+        """The newest durable checkpoint projected to ``cols`` (the columns
+        every save writes) when a resume is requested and one exists, taking
+        its ``step``, ``metric`` and ``done``; else ``None``, and the loop
+        builds its initial state."""
+        self._cols = cols
+        step = self._mgr.latest() if self._mgr is not None and self._resume else None
+        if step is None:
+            return None
+        frame, self.metric = self._mgr.load(spark, step)
+        self.step, self.done = step, self._mgr.final(step)
+        return frame.select(*cols)
+
+    def steps(self, last: int):
+        """Step numbers after the resumed one up to ``last``; none when the
+        resumed checkpoint is final, and none after a ``done`` commit."""
+        self._last = last
+        while not self.done and self.step < last:
+            self.step += 1
+            yield self.step
 
     def advance(self, new):
         """Checkpoint ``new`` as the next state and release its predecessor;
@@ -216,25 +253,28 @@ class LoopState:
             release_checkpoint(prev)
         return self.frame
 
+    def commit(self, metric: float, done: bool = False) -> None:
+        """End the step, ``done`` at the fixpoint: save ``frame`` every
+        ``EVERY`` steps of the manager and at the last, final at a fixpoint."""
+        self.done = done
+        if self._mgr is not None and (
+            done or self.step == self._last or self.step % self._mgr.EVERY == 0
+        ):
+            self._mgr.save(self.step, self.frame.select(*self._cols), float(metric), done)
+
+    @property
+    def stalled(self) -> bool:
+        """The one no-fixpoint warning guard: a step (of this call or the
+        resumed run) produced the state and it is not a fixpoint."""
+        return self.step > 0 and not self.done
+
     def result(self, out):
-        """``out`` (read from the final state) carrying the final state's
-        checkpoint ids."""
-        out._wps_ckpt_rdd_ids = set(getattr(self.frame, "_wps_ckpt_rdd_ids", None) or ())
+        """``out`` (read from the final state) carrying the checkpoint ids of
+        the final state and the kept frames."""
+        out._wps_ckpt_rdd_ids = set().union(
+            *(getattr(df, "_wps_ckpt_rdd_ids", None) or () for df in [self.frame, *self._kept])
+        )
         return out
-
-
-def latest_checkpoint(mgr, resume: bool, spark: SparkSession, cols: list[str]):
-    """``(frame, step)`` of the newest durable checkpoint of ``mgr``,
-    projected to ``cols``, when ``resume`` is requested and one exists;
-    otherwise ``None``.  Call it before building the initial state, which a
-    resumed run does not need."""
-    if mgr is None or not resume:
-        return None
-    step = mgr.latest()
-    if step is None:
-        return None
-    frame, _metric = mgr.load(spark, step)
-    return frame.select(*cols), step
 
 
 def symmetric_edges(edges, src: str = "src", dst: str = "dst"):

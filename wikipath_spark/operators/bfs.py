@@ -42,8 +42,6 @@ from wikipath_spark.operators._loop import (
     checkpoint_tracked,
     driver_edge_arrays,
     factorize_endpoints,
-    latest_checkpoint,
-    release_checkpoint,
 )
 
 
@@ -346,7 +344,7 @@ def _bfs_driver_numpy(src_ids, dst_ids, sources, max_depth, check_budget):
     return out
 
 
-def _frontier_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _frontier_edges(state: LoopState, edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Edge projection for a frontier loop, materialized ONCE in the layout
     every level reuses: hash-partitioned AND sorted by the frontier-join key
     ``src``, captured with AQE momentarily off so the localCheckpoint records
@@ -358,7 +356,8 @@ def _frontier_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     coalescing handles that; only the capture needs the toggle.  Partition
     count = the session's shuffle parallelism (cluster-sized conf, not a
     local constant).  Cached inputs are returned as-is — the serve lane
-    passes pinned tables and must not pay a per-request repartition."""
+    passes pinned tables and must not pay a per-request repartition, nor
+    lose its pin — so only the checkpoint made here is held by ``state``."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if edges.storageLevel.useMemory or edges.storageLevel.useDisk:
         return e
@@ -367,7 +366,9 @@ def _frontier_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        return checkpoint_tracked(e.repartition(parts, "src").sortWithinPartitions("src"))
+        return state.hold(
+            checkpoint_tracked(e.repartition(parts, "src").sortWithinPartitions("src"))
+        )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
 
@@ -379,7 +380,6 @@ def bfs_distances(
     dst: str = "dst",
     max_depth: int = 30,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -389,8 +389,8 @@ def bfs_distances(
     budget and the checkpoint ids on the result as there;
     SQL-oracle-checkable via a recursive CTE."""
     visited = _multi_source_bfs(
-        edges, [source], src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-        resume, wall_budget(budget_s, "bfs_distances"),
+        edges, [source], src, dst, max_depth, checkpoint_mgr, resume,
+        wall_budget(budget_s, "bfs_distances"),
     )
     out = visited.select("page_id", "distance")
     out._wps_ckpt_rdd_ids = getattr(visited, "_wps_ckpt_rdd_ids", set())
@@ -404,7 +404,6 @@ def multi_source_bfs(
     dst: str = "dst",
     max_depth: int = 30,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -438,14 +437,13 @@ def multi_source_bfs(
     lane-equivalence-tested); unknown-size plans report MaxValue and stay
     distributed."""
     return _multi_source_bfs(
-        edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-        resume, wall_budget(budget_s, "multi_source_bfs"),
+        edges, sources, src, dst, max_depth, checkpoint_mgr, resume,
+        wall_budget(budget_s, "multi_source_bfs"),
     )
 
 
 def _multi_source_bfs(
-    edges, sources, src, dst, max_depth, checkpoint_mgr, checkpoint_interval,
-    resume, check_budget,
+    edges, sources, src, dst, max_depth, checkpoint_mgr, resume, check_budget,
 ) -> DataFrame:
     spark = edges.sparkSession
     sources = list(dict.fromkeys(int(s) for s in sources))
@@ -467,28 +465,25 @@ def _multi_source_bfs(
             ),
             "source long, page_id long, distance int",
         )
-    # materialize the edge projection once, pre-partitioned and sorted for
-    # the per-level frontier join (see _frontier_edges): an un-cached
-    # caller-derived lineage (scan + distinct + union) would otherwise
-    # re-run max_depth times, and an unpartitioned checkpoint would
-    # re-shuffle + re-sort the edge side every level
-    e = _frontier_edges(edges, src, dst)
-    # checkpointed frontiers `visited` reads: their ids ride on the result
-    # (release_checkpoint frees them), and an exception releases them here
-    levels: list[DataFrame] = []
-    try:
-        cols = ["source", "page_id", "distance"]
-        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, cols)
-        if resumed is None:
-            start_depth = 0
+    # checkpointed levels `visited` reads: LoopState keeps them (their ids
+    # ride on the result; release_checkpoint frees them) and releases them
+    # if the loop raises
+    with LoopState(checkpoint_mgr, resume) as state:
+        # materialize the edge projection once, pre-partitioned and sorted
+        # for the per-level frontier join (see _frontier_edges): an un-cached
+        # caller-derived lineage (scan + distinct + union) would otherwise
+        # re-run max_depth times, and an unpartitioned checkpoint would
+        # re-shuffle + re-sort the edge side every level
+        e = _frontier_edges(state, edges, src, dst)
+        loaded = state.restore(spark, ["source", "page_id", "distance"])
+        if loaded is None:
             visited = spark.createDataFrame(
                 [(s, s, 0) for s in sources], "source long, page_id long, distance int"
             )
         else:
-            start_depth = resumed[1]
-            visited = checkpoint_tracked(resumed[0])
-            levels.append(visited)
-        frontier = visited.filter(F.col("distance") == start_depth).select(
+            visited = state.keep(checkpoint_tracked(loaded))
+        state.frame = visited
+        frontier = visited.filter(F.col("distance") == state.step).select(
             "source", F.col("page_id").alias("id")
         )
         # AQE stays on: frontier size varies wildly level to level.
@@ -496,7 +491,7 @@ def _multi_source_bfs(
         # pass via df.observe.  `visited` stays a union chain of
         # already-checkpointed frontiers: ≤ max_depth RDD-backed branches, no
         # growing lineage.
-        for depth in range(start_depth + 1, max_depth + 1):
+        for depth in state.steps(max_depth):
             check_budget()
             obs = Observation(f"msbfs_{depth}")
             cand = (
@@ -513,27 +508,21 @@ def _multi_source_bfs(
                     "left_anti",
                 ).observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            levels.append(nxt)
             n_new = int(obs.get["n"] or 0)
-            if n_new == 0:
-                release_checkpoint(levels.pop())
-                break
-            visited = visited.union(
-                nxt.select("source", F.col("id").alias("page_id"), F.lit(depth).alias("distance"))
-            )
-            frontier = nxt
-            if checkpoint_mgr is not None and depth % checkpoint_interval == 0:
-                checkpoint_mgr.save(depth, visited, float(n_new))
-    except BaseException:
-        for df in levels:
-            release_checkpoint(df)
-        raise
-    finally:
-        # the levels are self-contained checkpoints: nothing reads e now
-        if getattr(e, "_wps_ckpt_rdd_ids", None):
-            release_checkpoint(e)
-    visited._wps_ckpt_rdd_ids = set().union(*(df._wps_ckpt_rdd_ids for df in levels))
-    return visited
+            if n_new:
+                state.keep(nxt)
+                state.frame = visited = visited.union(
+                    nxt.select(
+                        "source", F.col("id").alias("page_id"), F.lit(depth).alias("distance")
+                    )
+                )
+                frontier = nxt
+            else:
+                state.hold(nxt)  # the empty last level: nothing reads it
+            state.commit(n_new, done=n_new == 0)
+        # the levels are self-contained checkpoints: the held edge
+        # projection is released on exit
+        return state.result(visited)
 
 
 def enumerate_paths(paths: Paths, max_paths: int = 8) -> list[list[int]]:

@@ -29,7 +29,6 @@ from wikipath_spark.operators._loop import (
     LoopState,
     checkpoint_tracked,
     driver_graph,
-    latest_checkpoint,
     symmetric_edges,
 )
 
@@ -99,7 +98,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -137,21 +135,18 @@ def connected_components(
     # convergence check = (row count, order-insensitive hash sum) fingerprint
     # riding on the materializing pass — one action per round instead of the
     # two full sorts an exceptAll comparison costs
-    with LoopState() as state:
+    with LoopState(checkpoint_mgr, resume) as state:
         # symmetrize once (unless resuming); each round operates on the
         # shrinking parent-edge set
-        resumed = latest_checkpoint(checkpoint_mgr, resume, edges.sparkSession, ["u", "v"])
-        start_round = 0
-        if resumed is None:
-            state.frame = checkpoint_tracked(symmetric_edges(edges, src, dst))
-        else:
-            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+        loaded = state.restore(edges.sparkSession, ["u", "v"])
+        state.frame = checkpoint_tracked(
+            symmetric_edges(edges, src, dst) if loaded is None else loaded
+        )
         prev_sig: tuple[int, int] | None = None
-        converged = False
         # NB: unlike PageRank's fixed-shape superstep, CC's edge set SHRINKS each
         # round — AQE's runtime coalescing is a measured win here (17s vs 48s at
         # sf0.1 with it disabled), so the loop runs under normal session confs.
-        for i in range(start_round, max_iter):
+        for i in state.steps(max_iter):
             check_budget()
             ls = _large_star(state.frame)
             # large-star output is asymmetric (child→parent); symmetrize for the
@@ -173,24 +168,17 @@ def connected_components(
             )
             # the early rounds hold FULL symmetrized edge sets: the superseded
             # round's checkpoint is released as soon as this one exists
-            e = state.advance(new_e)
+            state.advance(new_e)
             # fingerprint equality is probabilistic (40-bit hash-sum + count);
             # collision odds are astronomically small and the cost of a stale
             # match is one extra idempotent round, not a wrong answer
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-            converged = sig == prev_sig
-            if checkpoint_mgr is not None and ((i + 1) % checkpoint_interval == 0 or converged):
-                checkpoint_mgr.save(i + 1, e, float(sig[0]))
-            if converged:
-                break
+            state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
-        if not converged and max_iter > start_round:
+        if state.stalled:
             # the alternating algorithm converges in O(log² n) rounds — exhausting
             # max_iter means the star forest is NOT a fixpoint and the extraction
-            # below may split true components; never return that silently.
-            # (guarded like label_propagation's: when the loop body never ran —
-            # resume at start_round >= max_iter, or max_iter=0 — there is no
-            # fixpoint *failure* to report)
+            # below may split true components; never return that silently
             warnings.warn(
                 f"connected_components: no fixpoint after {max_iter} rounds; "
                 "components may be over-split (raise max_iter)",

@@ -31,7 +31,6 @@ from pyspark.sql.window import Window
 from wikipath_spark.operators._loop import (
     LoopState,
     checkpoint_tracked,
-    latest_checkpoint,
     symmetric_edges,
 )
 
@@ -42,7 +41,6 @@ def coreness(
     dst: str = "dst",
     max_iter: int = 100,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -67,8 +65,8 @@ def coreness(
 
     Resumable (north rule): the per-vertex estimate frame IS the loop state
     (``sym`` is a pure function of the input edges), so a durable checkpoint
-    every ``checkpoint_interval`` rounds restarts mid-decomposition; the
-    fingerprint is recomputed from the loaded state in one aggregate.
+    of ``checkpoint_mgr`` restarts mid-decomposition; the fingerprint is
+    recomputed from the loaded state in one aggregate.
     ``budget_s`` bounds wall-clock seconds between rounds
     (:class:`~wikipath_spark.operators.bfs.QueryBudgetExceeded`).
     """
@@ -81,25 +79,21 @@ def coreness(
         F.sum(F.pmod(F.xxhash64("page_id", "est"), F.lit(1 << 40))).alias("h"),
     )
 
-    with LoopState() as state:
+    with LoopState(checkpoint_mgr, resume) as state:
         sym = state.hold(checkpoint_tracked(symmetric_edges(edges, src, dst)))
-        resumed = latest_checkpoint(
-            checkpoint_mgr, resume, edges.sparkSession, ["page_id", "est"]
-        )
+        loaded = state.restore(edges.sparkSession, ["page_id", "est"])
         prev_sig: tuple[int, int] | None = None
-        start_round = 0
-        if resumed is None:
+        if loaded is None:
             state.frame = checkpoint_tracked(
                 sym.groupBy("u")
                 .agg(F.count("*").cast("long").alias("est"))
                 .select(F.col("u").alias("page_id"), "est")
             )
         else:
-            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+            state.frame = checkpoint_tracked(loaded)
             sig_row = state.frame.agg(*fingerprint).collect()[0]
             prev_sig = (int(sig_row["n"]), int(sig_row["h"] or 0))
-        converged = False
-        for i in range(start_round, max_iter):
+        for i in state.steps(max_iter):
             check_budget()
             est = state.frame
             nbr = sym.join(est, sym["v"] == est["page_id"]).select("u", "est")
@@ -111,15 +105,11 @@ def coreness(
                 .select(F.col("u").alias("page_id"), "est")
                 .observe(obs, *fingerprint)
             )
-            est = state.advance(new_est)
+            state.advance(new_est)
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-            converged = sig == prev_sig
-            if converged:
-                break
+            state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
-            if checkpoint_mgr is not None and (i + 1) % checkpoint_interval == 0:
-                checkpoint_mgr.save(i + 1, est, float(sig[0]))
-        if not converged and max_iter > 0:
+        if state.stalled:
             warnings.warn(
                 f"coreness: no fixpoint after {max_iter} rounds; estimates are an "
                 "upper bound on the true coreness (raise max_iter)",
@@ -137,7 +127,6 @@ def k_core(
     dst: str = "dst",
     max_iter: int = 100,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 5,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -147,41 +136,34 @@ def k_core(
     self-loop-free graph (degree = number of distinct neighbors).
 
     Resumable (north rule): the surviving symmetric edge set IS the loop
-    state (peeling only ever shrinks it), checkpointed with the edge count as
-    the convergence metric; ``budget_s`` bounds wall-clock seconds between
-    peel rounds.
+    state (peeling only ever shrinks it), checkpointed durably by
+    ``checkpoint_mgr`` with the edge count as the convergence metric;
+    ``budget_s`` bounds wall-clock seconds between peel rounds.
     """
     from wikipath_spark.operators.bfs import wall_budget
 
     check_budget = wall_budget(budget_s, "k_core")
-    with LoopState() as state:
-        resumed = latest_checkpoint(checkpoint_mgr, resume, edges.sparkSession, ["u", "v"])
-        start_round = 0
-        if resumed is None:
-            state.frame = checkpoint_tracked(symmetric_edges(edges, src, dst))
-        else:
-            state.frame, start_round = checkpoint_tracked(resumed[0]), resumed[1]
+    with LoopState(checkpoint_mgr, resume) as state:
+        loaded = state.restore(edges.sparkSession, ["u", "v"])
+        state.frame = checkpoint_tracked(
+            symmetric_edges(edges, src, dst) if loaded is None else loaded
+        )
         prev_n = state.frame.count()
-        converged = prev_n == 0
-        for i in range(start_round, max_iter):
-            if converged:
-                break
+        for i in state.steps(max_iter):
             check_budget()
             e = state.frame
             deg = e.groupBy("u").agg(F.count("*").alias("d"))
             keep = deg.filter(F.col("d") >= k).select("u")
             obs = Observation(f"kcore_{i}")
-            e = state.advance(
+            state.advance(
                 e.join(keep, "u", "left_semi")
                 .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
                 .observe(obs, F.count(F.lit(1)).alias("n"))
             )
             n2 = int(obs.get["n"] or 0)
-            converged = n2 == prev_n or n2 == 0
+            state.commit(n2, done=n2 == prev_n or n2 == 0)
             prev_n = n2
-            if checkpoint_mgr is not None and not converged and (i + 1) % checkpoint_interval == 0:
-                checkpoint_mgr.save(i + 1, e, float(n2))
-        if not converged and max_iter > 0:
+        if state.stalled:
             # peeling strictly shrinks until the fixpoint, so this means
             # max_iter rounds were not enough — the returned set OVER-approximates
             # the true k-core; never silent (same contract as components/LPA)

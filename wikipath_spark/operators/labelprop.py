@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from wikipath_spark.operators._loop import (
     LoopState,
     driver_graph,
-    latest_checkpoint,
     symmetric_edges,
 )
 
@@ -99,7 +98,6 @@ def label_propagation(
     dst: str = "dst",
     max_iter: int = 10,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 3,
     resume: bool = False,
     budget_s: float | None = None,
 ) -> DataFrame:
@@ -131,21 +129,16 @@ def label_propagation(
     # hash-sum fingerprint is probabilistic but astronomically safe, and a
     # stale fixpoint only costs one extra (idempotent) round.  Checkpoints
     # and release of the label frames: LoopState.
-    with LoopState() as state:
+    with LoopState(checkpoint_mgr, resume) as state:
         sym = state.hold(symmetric_edges(edges, src, dst).persist())
-        resumed = latest_checkpoint(
-            checkpoint_mgr, resume, edges.sparkSession, ["page_id", "label"]
-        )
-        start_it = 0
-        if resumed is None:
-            state.frame = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
+        loaded = state.restore(edges.sparkSession, ["page_id", "label"])
+        if loaded is None:
+            loaded = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
                 "label", F.col("page_id")
-            ).persist()
-        else:
-            state.frame, start_it = resumed[0].persist(), resumed[1]
+            )
+        state.frame = loaded.persist()
         prev_sig: tuple[int, int] | None = None
-        converged = False
-        for it in range(start_it + 1, max_iter + 1):
+        for it in state.steps(max_iter):
             check_budget()
             labels = state.frame
             msgs = sym.join(labels, sym["v"] == labels["page_id"]).select(
@@ -163,15 +156,11 @@ def label_propagation(
                     F.sum(F.pmod(F.xxhash64("page_id", "label"), F.lit(1 << 40))).alias("h"),
                 )
             )
-            labels = state.advance(picked)
+            state.advance(picked)
             sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
-            converged = sig == prev_sig
-            if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged):
-                checkpoint_mgr.save(it, labels, float(sig[0]))
-            if converged:
-                break
+            state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
-        if not converged and max_iter > start_it:
+        if state.stalled:
             _warn_no_fixpoint(max_iter)
         return state.result(state.frame)
 

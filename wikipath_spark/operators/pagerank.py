@@ -52,7 +52,6 @@ from wikipath_spark.operators._loop import (
     driver_edge_arrays,
     endpoint_vertices,
     factorize_endpoints,
-    latest_checkpoint,
     loop_confs,
 )
 from wikipath_spark.operators.skew import pick_salt, salted_sum
@@ -78,7 +77,6 @@ def pagerank(
     salt_partials: int | None = None,
     on_superstep=None,
     checkpoint_mgr=None,
-    checkpoint_interval: int = 10,
     resume: bool = False,
     budget_s: float | None = None,
     driver_threshold_bytes: int = DRIVER_THRESHOLD_BYTES,
@@ -88,6 +86,9 @@ def pagerank(
     ``vertices``: optional (page_id) frame of distinct ids; defaults to ids
     present in edges.  ``on_superstep(i, ranks_df, delta)`` is the
     checkpoint hook.  Returned ranks sum to 1 and include dangling vertices.
+    ``checkpoint_mgr`` saves ``(page_id, rank)`` durably on its cadence and
+    at the last superstep; ``resume`` continues from its newest checkpoint,
+    and one whose delta is already below ``tol`` is returned as it is.
 
     Driver lane (the connected_components / bfs_distances gate and default):
     with no ``checkpoint_mgr`` and no ``resume``, an edge table whose
@@ -127,7 +128,7 @@ def pagerank(
     # gave 1.2x), shuffle parallelism sized to data; restored on any exit.
     # LoopState releases what the loop holds on ANY exit, also a setup
     # failure (a corrupt checkpoint raising from load).
-    with loop_confs(spark, rows=n_edges) as parts, LoopState() as state:
+    with loop_confs(spark, rows=n_edges) as parts, LoopState(checkpoint_mgr, resume) as state:
         if salt_partials is None:
             # auto (the default): salt so no hub's in-neighborhood exceeds
             # one task's budget (SURVEY.md §4.2 — from the degree
@@ -144,18 +145,20 @@ def pagerank(
             # derive from `vertices`, NOT vflag — the held vflag checkpoint
             # is released on this return
             return PageRankResult(vertices.withColumn("rank", F.lit(0.0)), 0, 0.0, True)
-        resumed = latest_checkpoint(checkpoint_mgr, resume, spark, ["page_id", "rank"])
-        if resumed is None:
-            start_it = 0
+        loaded = state.restore(spark, ["page_id", "rank"])
+        if loaded is None:
             state.frame = vflag.select(
                 "page_id", F.lit(1.0 / n).alias("rank"), "is_dangling"
             ).persist()
             dangling_mass = int(metrics["nd"] or 0) * (1.0 / n)
+            delta = float("inf")
         else:
-            loaded, start_it = resumed
-            state.frame = (
-                loaded.join(vflag, "page_id").select("page_id", "rank", "is_dangling").persist()
+            state.frame = checkpoint_tracked(
+                loaded.join(vflag, "page_id").select("page_id", "rank", "is_dangling")
             )
+            delta = state.metric
+            # converged under this call's tol, not under the saving run's
+            state.done = delta < tol
             # resumed: recompute the dangling mass of the restored state (1 job)
             dangling_mass = (
                 state.frame.join(vflag.filter("is_dangling"), "page_id", "left_semi")
@@ -164,9 +167,7 @@ def pagerank(
                 or 0.0
             )
         base = (1.0 - damping) / n
-        delta = float("inf")
-        it = start_it
-        for it in range(start_it + 1, max_iter + 1):
+        for it in state.steps(max_iter):
             check_budget()
             ranks = state.frame
             joined = edges_od.join(ranks, edges_od["src"] == ranks["page_id"])
@@ -211,15 +212,11 @@ def pagerank(
             )
             metrics = obs.get
             delta, dangling_mass = metrics["d"], metrics["dm"] or 0.0
-            converged_now = delta < tol
-            if checkpoint_mgr is not None and (it % checkpoint_interval == 0 or converged_now):
-                checkpoint_mgr.save(it, ranks.select("page_id", "rank"), float(delta))
+            state.commit(delta, done=delta < tol)
             if on_superstep is not None:
                 on_superstep(it, ranks, delta)
-            if converged_now:
-                break
         out = state.result(state.frame.select("page_id", "rank"))
-        return PageRankResult(out, it, float(delta), delta < tol)
+        return PageRankResult(out, state.step, float(delta), delta < tol)
 
 
 def _driver_graph(src, dst, vertex_ids):

@@ -17,6 +17,9 @@ The manifest is computed from the *written* state in one scan grouped by
 resume can verify integrity regardless of how parquet re-partitions rows.
 A checkpoint is only valid if ``_COMMITTED`` exists (written last); resume
 picks the highest committed superstep and re-verifies row counts.
+``CheckpointManager.EVERY`` is the one save cadence of every resumable loop
+(the last step always saves, marked ``final`` at a fixpoint);
+``operators._loop.LoopState`` decides when to save and where to resume.
 """
 
 from __future__ import annotations
@@ -29,6 +32,9 @@ from pyspark.sql import functions as F
 
 
 class CheckpointManager:
+    # steps between saves (the last step always saves); unmeasured
+    EVERY = 5
+
     def __init__(self, root: str, run_id: str):
         self.root = root
         self.run_id = run_id
@@ -36,8 +42,9 @@ class CheckpointManager:
     def _dir(self, superstep: int) -> str:
         return os.path.join(self.root, self.run_id, f"superstep={superstep}")
 
-    def save(self, superstep: int, state: DataFrame, metric: float) -> dict:
-        """Write state + manifest; returns the manifest summary.
+    def save(self, superstep: int, state: DataFrame, metric: float, final: bool = False) -> dict:
+        """Write state + manifest; returns the manifest summary.  ``final``
+        marks the loop's fixpoint (:meth:`final`).
 
         Exactly TWO jobs: the state write, and ONE verified re-read pass that
         both produces the per-partition manifest and (via ``df.observe``
@@ -68,7 +75,7 @@ class CheckpointManager:
         manifest.write.mode("overwrite").parquet(os.path.join(d, "manifest"))
         total = int(obs.get["n"] or 0)
         with open(os.path.join(d, "_COMMITTED"), "w") as f:
-            json.dump({"superstep": superstep, "rows": total, "metric": metric}, f)
+            json.dump(dict(superstep=superstep, rows=total, metric=metric, final=final), f)
         return {"superstep": superstep, "rows": total, "metric": metric}
 
     def latest(self) -> int | None:
@@ -82,6 +89,11 @@ class CheckpointManager:
             ):
                 steps.append(int(name.split("=")[1]))
         return max(steps) if steps else None
+
+    def final(self, superstep: int) -> bool:
+        """Whether the loop reached its fixpoint at this committed step."""
+        with open(os.path.join(self._dir(superstep), "_COMMITTED")) as f:
+            return bool(json.load(f).get("final", False))
 
     def load(self, spark: SparkSession, superstep: int, verify: bool = True) -> tuple[DataFrame, float]:
         """Read a committed checkpoint; verify row count against the marker
