@@ -59,3 +59,23 @@ def test_catalog_save_list_get_vacuum(spark, built, tmp_path):
     assert removed == ["wp-repo00-aaaa01"]
     assert (tmp_path / "unrelated-dir").is_dir()
     assert cat.latest_commit("repo00") == "aaaa02"
+
+
+def test_catalog_get_runs_no_job_and_reads_back_the_rows(spark, built, tmp_path):
+    """``get`` reads with the known table schemas, so it runs no Spark job
+    (no parquet schema inference), and a saved dataset reads back with the
+    same schema and rows."""
+    cat = DatasetCatalog(spark, str(tmp_path))
+    cat.save("repo00", "aaaa01", built)
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog_get", "probe")
+    try:
+        got = cat.get("repo00", "aaaa01")
+    finally:
+        sc.setJobGroup("catalog_get_done", "done")
+    assert sc.statusTracker().getJobIdsForGroup("catalog_get") == []
+    for name in ("pages", "redirects", "edges"):
+        want_df, got_df = getattr(built, name), getattr(got, name)
+        assert got_df.columns == want_df.columns
+        assert [f.dataType for f in got_df.schema] == [f.dataType for f in want_df.schema]
+        assert sorted(map(tuple, got_df.collect())) == sorted(map(tuple, want_df.collect()))

@@ -146,6 +146,27 @@ def test_no_fixpoint_warning_on_every_short_result(edges_df, tmp_path, entry):
     assert mgr.latest() == 1
 
 
+@pytest.mark.parametrize("entry", ["connected_components", "label_propagation"])
+def test_resume_before_fixpoint_finishes_at_the_uninterrupted_step(edges_df, tmp_path, entry):
+    """A resume from the step before the fixpoint compares its first round
+    with the loaded state, so it sees the fixpoint at the uninterrupted
+    run's step: it warns nothing, and that step's checkpoint is final."""
+    el, run, _stop = RESUMABLE[entry]
+    df = edges_df(el)
+    finished = CheckpointManager(str(tmp_path), "finished")
+    want = run(df, checkpoint_mgr=finished)
+    fixpoint = finished.latest()
+    assert fixpoint > 1 and finished.final(fixpoint)
+    mgr = CheckpointManager(str(tmp_path), "before")
+    with pytest.warns(UserWarning, match="no fixpoint"):
+        run(df, fixpoint - 1, checkpoint_mgr=mgr)
+    assert mgr.latest() == fixpoint - 1 and not mgr.final(fixpoint - 1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert run(df, fixpoint, checkpoint_mgr=mgr, resume=True) == want
+    assert mgr.latest() == fixpoint and mgr.final(fixpoint)
+
+
 def test_corrupt_checkpoint_detected(spark, edges_df, tmp_path):
     mgr = CheckpointManager(str(tmp_path), "run3")
     pagerank(edges_df(EDGES), checkpoint_mgr=mgr)

@@ -106,9 +106,10 @@ def test_large_dataset_falls_back_to_pinned_frame_probe(spark, catalog):
 def test_pinned_lru_evicts_and_unpersists(spark, catalog):
     """ADVICE: _pinned must not grow without bound — the oldest dataset is
     evicted AND its frames unpersisted when the cap is hit (the reference
-    keeps only the live datasets open, serve.rs:68-100)."""
+    keeps only the live datasets open, serve.rs:68-100).  Frame pins: a
+    small pin persists nothing."""
     cat, commit = catalog
-    svc = LinkGraphService(cat, max_pinned=2)
+    svc = LinkGraphService(cat, max_pinned=2, driver_index_max_rows=0)
     a = svc._open("repoA", commit)
     b = svc._open("repoB", commit)
     # touching A makes B the LRU entry

@@ -191,9 +191,10 @@ def test_lru_never_exceeds_cap_during_open(spark, catalog5):
     """At the moment the incoming dataset starts persisting, at most
     max_pinned-1 pins may hold storage (eviction precedes pinning, so the
     cap is never transiently exceeded) — probed by spying on the first
-    persist() call of each open."""
+    persist() call of each open.  Frame pins: a small pin persists
+    nothing."""
     cat, commit = catalog5
-    svc = LinkGraphService(cat, max_pinned=2)
+    svc = LinkGraphService(cat, max_pinned=2, driver_index_max_rows=0)
     observed: list[int] = []
     orig_get = cat.get
 
@@ -458,9 +459,10 @@ def test_inflight_request_survives_retirement(spark, catalog5):
     """A hot-reload/eviction while a request is in flight must RETIRE the
     pin without unpersisting frames the request still reads; the frames
     release when the last holder exits (the reference's atomic swap keeps
-    the old DB alive for open handles)."""
+    the old DB alive for open handles).  A frame pin: a small pin persists
+    nothing."""
     cat, commit = catalog5
-    svc = LinkGraphService(cat)
+    svc = LinkGraphService(cat, driver_index_max_rows=0)
     with svc._checkout("repoA", commit) as ds:
         assert ds.refs == 1
         svc.refresh()  # concurrent swap: retires every pin

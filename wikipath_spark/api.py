@@ -17,11 +17,15 @@ title→id resolution is the same (repo, path) lookup the build uses (J1).
 Serve-shape parity with the reference's long-lived process:
 
 - the reference opens each LMDB once and serves point lookups from it
-  (serve.rs:68-100); here the first request for a dataset pins its tables —
-  a persisted ``(page_id, path, fkey)`` lookup frame (title→id becomes an
-  in-memory columnar probe, never a parquet rescan) and persisted
-  edges/redirects (BFS supersteps reuse the cache instead of
-  re-materializing the edge table per request),
+  (serve.rs:68-100); here the first request for a dataset pins it.  A
+  dataset within the driver caps is read by three Arrow collects (pages,
+  redirects, edges) into driver dicts — title→id, id→title, redirects and
+  both adjacencies — and persists nothing: every request then runs with
+  zero Spark jobs.  A larger dataset pins persisted frames instead — a
+  ``(page_id, path, fkey)`` lookup frame (title→id becomes an in-memory
+  columnar probe, never a parquet rescan) and edges/redirects (BFS
+  supersteps reuse the cache instead of re-materializing the edge table
+  per request),
 - the reference's debounced DB-file watcher atomically swaps datasets
   (serve.rs:155-192); the analogue here is :meth:`refresh` — unpersist and
   drop every pinned dataset so the next request re-opens from storage,
@@ -39,9 +43,13 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wikipath_spark.functions.text import _ACCENTS, _PLAIN, fold_accents
+from wikipath_spark.operators._loop import factorize_endpoints
 from wikipath_spark.operators.bfs import (
     enumerate_paths,
     shortest_paths,
@@ -77,12 +85,68 @@ def _fold_key(s: str) -> str:
     return s.translate(_FOLD).lower()
 
 
+def _collect_at_most(df: DataFrame, cap: int) -> pa.Table | None:
+    """``df`` as one Arrow table, or ``None`` when it has more than ``cap``
+    rows: the ``limit(cap + 1)`` collect is its own row-count probe."""
+    tbl = df.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
+
+
+def _adjacency(src: np.ndarray, dst: np.ndarray) -> tuple[dict, dict]:
+    """``(adj_out, adj_in)``: vertex -> [neighbors…] in edge order, each
+    grouped by one stable argsort.  Both hold one shared Python int per
+    vertex (an object array over :func:`factorize_endpoints`'s ids), not
+    one per edge endpoint."""
+    ids, si, di = factorize_endpoints(src, dst)
+    py = ids.astype(object)
+
+    def grouped(keys: np.ndarray, values: np.ndarray) -> dict:
+        if not len(keys):
+            return {}
+        order = np.argsort(keys, kind="stable")
+        keys = keys[order]
+        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        ends = np.r_[starts[1:], len(keys)].tolist()
+        vals = py[values[order]].tolist()
+        return {k: vals[a:b] for k, a, b in zip(py[keys[starts]].tolist(), starts.tolist(), ends)}
+
+    return grouped(si, di), grouped(di, si)
+
+
+def _driver_index(pages: pa.Table, redirects: pa.Table, edges: pa.Table | None) -> dict:
+    """A pin's driver index from its collected ``(page_id, path)``,
+    redirect ``(src, dst)`` and edge ``(src, dst)`` tables: ``by_fkey``
+    (folded path -> [(page_id, path)…]), ``by_id``, ``redirect_map`` and,
+    given ``edges``, ``adj_out``/``adj_in``.  Keys are folded here with
+    :func:`_fold_key`, the twin of the Spark fkey."""
+    ids = pages.column("page_id").to_numpy().tolist()
+    paths = pages.column("path").to_pylist()
+    by_fkey: dict = {}
+    for pid, path in zip(ids, paths):
+        key = _fold_key(path)  # a path that folds to itself keys by the same string object
+        by_fkey.setdefault(path if key == path else key, []).append((pid, path))
+    index = {
+        "by_fkey": by_fkey,
+        "by_id": dict(zip(ids, paths)),
+        "redirect_map": dict(zip(
+            redirects.column("src").to_numpy().tolist(),
+            redirects.column("dst").to_numpy().tolist(),
+        )),
+    }
+    if edges is not None:
+        index["adj_out"], index["adj_in"] = _adjacency(
+            edges.column("src").to_numpy(), edges.column("dst").to_numpy()
+        )
+    return index
+
+
 @dataclass
 class _PinnedDataset:
-    """One opened dataset: persisted frames a long-lived service reuses."""
+    """One opened dataset: the driver index and persisted frames a
+    long-lived service reuses."""
 
-    tables: object          # GraphTables with persisted edges/redirects
-    lookup: object          # persisted (page_id, path, fkey) frame
+    tables: object          # GraphTables; edges/redirects persisted on a frame pin
+    lookup: object          # (page_id, path, fkey) frame, persisted on a frame pin
     by_fkey: dict | None    # driver-side point index (small datasets):
     by_id: dict | None      # fkey -> [(page_id, path)…] / page_id -> path
     redirect_map: dict | None  # src page_id -> dst page_id (small datasets):
@@ -94,6 +158,8 @@ class _PinnedDataset:
     # shortest-paths request runs driver-side with zero Spark jobs
     # (operators/bfs.shortest_paths_driver) — full serving parity with the
     # reference answering every query from its memory-mapped DB
+    frames: tuple = ()      # the persisted frames this pin releases (none
+    # when the driver index answers every request)
     snapshot: tuple = ()    # on-disk fingerprint at open time (hot reload)
     checked_at: float = 0.0  # monotonic time of the last snapshot comparison
     refs: int = 0           # in-flight requests reading this pin (guarded by
@@ -109,9 +175,8 @@ class _PinnedDataset:
             self._release()
 
     def _release(self) -> None:
-        self.lookup.unpersist()
-        self.tables.edges.unpersist()
-        self.tables.redirects.unpersist()
+        for frame in self.frames:
+            frame.unpersist()
 
     # immediate-release spelling kept for direct callers/tests
     def unpin(self) -> None:
@@ -129,15 +194,18 @@ class LinkGraphService:
     # datasets with ≤ this many pages get a driver-side dict index — the
     # analogue of the reference's LMDB B-tree point read (database.rs:199-205):
     # title→id and id→title become O(1) hash probes, ZERO Spark jobs/request.
-    # Sizing: ~150-250 B per entry across the two dicts, so the default caps
-    # driver heap at ~100 MB per pinned dataset (× max_pinned); larger
-    # datasets fall back to the fkey-sorted cached-frame probe on executors
+    # Sizing: ~330 B per page across the title and redirect dicts, path
+    # strings included (tracemalloc, the 6k-page serve_hot pin), so the
+    # default caps driver heap at ~165 MB per pinned dataset (× max_pinned);
+    # larger datasets fall back to the fkey-sorted cached-frame probe on
+    # executors
     driver_index_max_rows: int = 500_000
     # datasets whose edge count also fits this cap additionally pin the
     # adjacency (out- and in-neighbor dicts), upgrading shortest_paths from
     # distributed BFS to the driver-side twin — zero Spark jobs end-to-end.
-    # Sizing: ~100-150 B/edge across the two dicts ⇒ ~150-300 MB at the
-    # default cap; big graphs keep the distributed BFS over cached frames
+    # Sizing: ~60 B/edge across the two dicts (tracemalloc, the 33k-edge
+    # serve_hot pin) ⇒ ~60 MB at the default cap; big graphs keep the
+    # distributed BFS over cached frames
     driver_adjacency_max_edges: int = 1_000_000
     # hot-reload check debounce: the reference's file watcher is debounced
     # (serve.rs:155-192); re-walking the dataset dir on EVERY request would
@@ -277,11 +345,11 @@ class LinkGraphService:
         return cm()
 
     def _build_pin(self, tables, snapshot: tuple) -> _PinnedDataset:
-        """Persist + index one dataset (the expensive part of an open; runs
-        outside the service lock)."""
-        tables.edges = tables.edges.persist()
-        n_edges = tables.edges.count()  # pin eagerly: supersteps reuse the cache
-        tables.redirects = tables.redirects.persist()
+        """Index one dataset (the expensive part of an open; runs outside
+        the service lock).  Within both caps: Arrow collects into the
+        driver index and no persisted frame.  Over the page cap: persisted
+        lookup, edges and redirects.  Over the edge cap only: the driver
+        title index and persisted edges."""
         lookup = tables.pages.select(
             "page_id",
             "path",
@@ -290,34 +358,36 @@ class LinkGraphService:
         # sort by the probe key before caching: InMemoryTableScan keeps
         # per-batch min/max stats, so a large dataset's fkey filter prunes
         # to a handful of cached batches instead of scanning every one
-        lookup = lookup.sortWithinPartitions("fkey").persist()
-        n_pages = lookup.count()
-        by_fkey = by_id = redirect_map = adj_out = adj_in = None
-        if n_pages <= self.driver_index_max_rows:
-            # small dataset: one collect at open time buys LMDB-style O(1)
-            # point reads for the life of the pin (no Spark job per request)
-            by_fkey, by_id = {}, {}
-            for r in lookup.collect():
-                by_fkey.setdefault(r.fkey, []).append((r.page_id, r.path))
-                by_id[r.page_id] = r.path
-            # fold the compressed redirect map in too: redirect sources are
-            # pages, so |redirects| ≤ n_pages and the collect is bounded by
-            # the same cap.  Query-entry resolution (G7) then runs zero Spark
-            # jobs per request instead of a filter/collect job per endpoint.
-            redirect_map = {
-                r.src: r.dst for r in tables.redirects.select("src", "dst").collect()
-            }
-            # adjacency joins the pin when the edge set also fits: the BFS
-            # itself then never leaves the driver (search.rs serving parity)
-            if n_edges <= self.driver_adjacency_max_edges:
-                adj_out, adj_in = {}, {}
-                for r in tables.edges.select("src", "dst").collect():
-                    adj_out.setdefault(r.src, []).append(r.dst)
-                    adj_in.setdefault(r.dst, []).append(r.src)
+        lookup = lookup.sortWithinPartitions("fkey")
+        pages = _collect_at_most(tables.pages.select("page_id", "path"), self.driver_index_max_rows)
+        if pages is None:
+            tables.edges = tables.edges.persist()
+            tables.edges.count()  # pin eagerly: supersteps reuse the cache
+            tables.redirects = tables.redirects.persist()
+            lookup = lookup.persist()
+            lookup.count()
+            return _PinnedDataset(
+                tables=tables, lookup=lookup, by_fkey=None, by_id=None, redirect_map=None,
+                frames=(lookup, tables.edges, tables.redirects),
+                snapshot=snapshot, checked_at=time.monotonic(),
+            )
+        # small dataset: the collects at open time buy LMDB-style O(1) point
+        # reads for the life of the pin (no Spark job per request).  Redirect
+        # sources are pages, so the redirect collect fits the same cap, and
+        # query-entry resolution (G7) is a dict read too.  The adjacency
+        # joins when the edge set also fits: the BFS itself then never
+        # leaves the driver (search.rs serving parity); otherwise the
+        # distributed BFS runs over the persisted edges
+        redirects = tables.redirects.select("src", "dst").toArrow()
+        edges = _collect_at_most(tables.edges.select("src", "dst"), self.driver_adjacency_max_edges)
+        frames = ()
+        if edges is None:
+            tables.edges = tables.edges.persist()
+            tables.edges.count()
+            frames = (tables.edges,)
         return _PinnedDataset(
-            tables=tables, lookup=lookup, by_fkey=by_fkey, by_id=by_id,
-            redirect_map=redirect_map, adj_out=adj_out, adj_in=adj_in,
-            snapshot=snapshot, checked_at=time.monotonic(),
+            tables=tables, lookup=lookup, **_driver_index(pages, redirects, edges),
+            frames=frames, snapshot=snapshot, checked_at=time.monotonic(),
         )
 
     def _page_id(self, ds: _PinnedDataset, path: str) -> int | None:

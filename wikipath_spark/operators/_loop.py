@@ -277,6 +277,23 @@ class LoopState:
         return out
 
 
+def fingerprint(*cols: str) -> tuple:
+    """A loop state's convergence fingerprint over ``cols``: the row count
+    and an order-insensitive 40-bit hash sum, as aggregates for
+    ``df.observe`` on the materializing pass or one ``agg`` of a resumed
+    state.  Equality is probabilistic; a stale match costs one extra
+    idempotent round, not a wrong answer."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64(*cols), F.lit(1 << 40))).alias("h"),
+    )
+
+
+def signature(values) -> tuple[int, int]:
+    """The ``(n, h)`` of an observed or aggregated :func:`fingerprint`."""
+    return int(values["n"] or 0), int(values["h"] or 0)
+
+
 def symmetric_edges(edges, src: str = "src", dst: str = "dst"):
     """Undirected view of a directed edge table: distinct ``(u, v)`` pairs in
     both orientations, self-loops dropped."""

@@ -29,6 +29,8 @@ from wikipath_spark.operators._loop import (
     LoopState,
     checkpoint_tracked,
     driver_graph,
+    fingerprint,
+    signature,
     symmetric_edges,
 )
 
@@ -135,6 +137,7 @@ def connected_components(
     # convergence check = (row count, order-insensitive hash sum) fingerprint
     # riding on the materializing pass — one action per round instead of the
     # two full sorts an exceptAll comparison costs
+    fp = fingerprint("u", "v")
     with LoopState(checkpoint_mgr, resume) as state:
         # symmetrize once (unless resuming); each round operates on the
         # shrinking parent-edge set
@@ -142,7 +145,8 @@ def connected_components(
         state.frame = checkpoint_tracked(
             symmetric_edges(edges, src, dst) if loaded is None else loaded
         )
-        prev_sig: tuple[int, int] | None = None
+        # a resumed run compares its first round with the loaded state
+        prev_sig = None if loaded is None else signature(state.frame.agg(*fp).first())
         # NB: unlike PageRank's fixed-shape superstep, CC's edge set SHRINKS each
         # round — AQE's runtime coalescing is a measured win here (17s vs 48s at
         # sf0.1 with it disabled), so the loop runs under normal session confs.
@@ -158,21 +162,13 @@ def connected_components(
             sym = ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v")))
             ss = _small_star(sym)
             obs = Observation(f"cc_{i}")
-            new_e = (
-                ss.union(ss.select(F.col("v").alias("u"), F.col("u").alias("v")))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
-                )
-            )
+            new_e = ss.union(
+                ss.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            ).observe(obs, *fp)
             # the early rounds hold FULL symmetrized edge sets: the superseded
             # round's checkpoint is released as soon as this one exists
             state.advance(new_e)
-            # fingerprint equality is probabilistic (40-bit hash-sum + count);
-            # collision odds are astronomically small and the cost of a stale
-            # match is one extra idempotent round, not a wrong answer
-            sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+            sig = signature(obs.get)
             state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
         if state.stalled:

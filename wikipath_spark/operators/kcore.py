@@ -31,6 +31,8 @@ from pyspark.sql.window import Window
 from wikipath_spark.operators._loop import (
     LoopState,
     checkpoint_tracked,
+    fingerprint,
+    signature,
     symmetric_edges,
 )
 
@@ -74,10 +76,7 @@ def coreness(
 
     check_budget = wall_budget(budget_s, "coreness")
     w = Window.partitionBy("u").orderBy(F.desc("est"))
-    fingerprint = (
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.pmod(F.xxhash64("page_id", "est"), F.lit(1 << 40))).alias("h"),
-    )
+    fp = fingerprint("page_id", "est")
 
     with LoopState(checkpoint_mgr, resume) as state:
         sym = state.hold(checkpoint_tracked(symmetric_edges(edges, src, dst)))
@@ -91,8 +90,7 @@ def coreness(
             )
         else:
             state.frame = checkpoint_tracked(loaded)
-            sig_row = state.frame.agg(*fingerprint).collect()[0]
-            prev_sig = (int(sig_row["n"]), int(sig_row["h"] or 0))
+            prev_sig = signature(state.frame.agg(*fp).first())
         for i in state.steps(max_iter):
             check_budget()
             est = state.frame
@@ -103,10 +101,10 @@ def coreness(
                 .groupBy("u")
                 .agg(F.max(F.least(F.col("_rn").cast("long"), F.col("est"))).alias("est"))
                 .select(F.col("u").alias("page_id"), "est")
-                .observe(obs, *fingerprint)
+                .observe(obs, *fp)
             )
             state.advance(new_est)
-            sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+            sig = signature(obs.get)
             state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
         if state.stalled:

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from wikipath_spark.operators._loop import (
     LoopState,
     driver_graph,
+    fingerprint,
+    signature,
     symmetric_edges,
 )
 
@@ -122,22 +124,24 @@ def label_propagation(
     # AQE left on: like CC (and unlike PageRank's fixed-shape superstep),
     # message volume varies round to round as labels converge
     #
-    # Convergence check = (row count, order-insensitive hash sum) fingerprint
-    # riding on the materializing pass via df.observe — one action per round
-    # (the same trick as connected_components; replaces an old-vs-new join +
-    # count that cost an extra job per superstep).  Equality of a 40-bit
-    # hash-sum fingerprint is probabilistic but astronomically safe, and a
-    # stale fixpoint only costs one extra (idempotent) round.  Checkpoints
-    # and release of the label frames: LoopState.
+    # Convergence check = the (row count, order-insensitive hash sum)
+    # fingerprint riding on the materializing pass via df.observe — one
+    # action per round (the same trick as connected_components; replaces an
+    # old-vs-new join + count that cost an extra job per superstep).
+    # Checkpoints and release of the label frames: LoopState.
+    fp = fingerprint("page_id", "label")
     with LoopState(checkpoint_mgr, resume) as state:
         sym = state.hold(symmetric_edges(edges, src, dst).persist())
         loaded = state.restore(edges.sparkSession, ["page_id", "label"])
         if loaded is None:
-            loaded = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
+            state.frame = sym.select(F.col("u").alias("page_id")).distinct().withColumn(
                 "label", F.col("page_id")
-            )
-        state.frame = loaded.persist()
-        prev_sig: tuple[int, int] | None = None
+            ).persist()
+            prev_sig = None
+        else:
+            # a resumed run compares its first round with the loaded labels
+            state.frame = loaded.persist()
+            prev_sig = signature(state.frame.agg(*fp).first())
         for it in state.steps(max_iter):
             check_budget()
             labels = state.frame
@@ -150,14 +154,10 @@ def label_propagation(
                 counted.groupBy("id")
                 .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("b"))
                 .select(F.col("id").alias("page_id"), (-F.col("b.nl")).alias("label"))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.pmod(F.xxhash64("page_id", "label"), F.lit(1 << 40))).alias("h"),
-                )
+                .observe(obs, *fp)
             )
             state.advance(picked)
-            sig = (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+            sig = signature(obs.get)
             state.commit(sig[0], done=sig == prev_sig)
             prev_sig = sig
         if state.stalled:

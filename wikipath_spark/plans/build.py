@@ -41,6 +41,7 @@ id and every output table the same rows.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 import numpy as np
 import pyarrow as pa
@@ -64,6 +65,14 @@ class GraphTables:
     redirects: DataFrame  # (src, dst) — compressed
     edges: DataFrame      # (src, dst) — resolved, self-free, distinct
     stats: dict = field(default_factory=dict)
+    # the saved tables' schemas (both build lanes write these), so a reader
+    # can skip the parquet schema-inference job
+    SCHEMAS: ClassVar[dict[str, str]] = {
+        "pages": "repo string, path string, lang string, commit string, "
+        "content_sha256 string, is_alias boolean, page_id bigint",
+        "redirects": "src bigint, dst bigint",
+        "edges": "src bigint, dst bigint",
+    }
 
 
 _SHARDS = 16  # dense-id hash shards per partition before any escalation
@@ -366,8 +375,10 @@ def _driver_build(
     )
     return GraphTables(
         pages=pages,
-        redirects=_local_frame(spark, {"src": red[:, 0], "dst": red[:, 1]}, "src long, dst long"),
-        edges=_local_frame(spark, {"src": src, "dst": dst}, "src long, dst long"),
+        redirects=_local_frame(
+            spark, {"src": red[:, 0], "dst": red[:, 1]}, GraphTables.SCHEMAS["redirects"]
+        ),
+        edges=_local_frame(spark, {"src": src, "dst": dst}, GraphTables.SCHEMAS["edges"]),
         stats=stats if with_stats else {},
     )
 

@@ -74,15 +74,15 @@ class DatasetCatalog:
         return df.orderBy("repo", "commit")
 
     def get(self, repo: str, commit: str) -> GraphTables:
-        """Exact-key dataset lookup (J9, serve.rs:85-87)."""
+        """Exact-key dataset lookup (J9, serve.rs:85-87).  Reads with the
+        known :attr:`GraphTables.SCHEMAS`, so it runs no Spark job."""
         base = os.path.join(self.root, dataset_name(repo, commit))
         if not os.path.isdir(base):
             raise KeyError(f"no dataset {dataset_name(repo, commit)} under {self.root}")
-        return GraphTables(
-            pages=load_table(self.spark, base, "pages"),
-            redirects=load_table(self.spark, base, "redirects"),
-            edges=load_table(self.spark, base, "edges"),
-        )
+        return GraphTables(**{
+            name: load_table(self.spark, base, name, schema)
+            for name, schema in GraphTables.SCHEMAS.items()
+        })
 
     def latest_commit(self, repo: str) -> str | None:
         commits = [

@@ -14,11 +14,15 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-def load_table(spark: SparkSession, base: str, name: str) -> DataFrame:
-    """Read one table from a base dir (parquet) or catalog (Iceberg)."""
+def load_table(
+    spark: SparkSession, base: str, name: str, schema: str | None = None
+) -> DataFrame:
+    """Read one table from a base dir (parquet) or catalog (Iceberg).  A
+    known parquet ``schema`` (DDL) replaces the schema-inference job."""
     if base.startswith("catalog:"):
         return spark.read.table(f"{base[len('catalog:'):]}.{name}")
-    return spark.read.parquet(os.path.join(base, f"{name}.parquet"))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(base, f"{name}.parquet"))
 
 
 def write_table(
